@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan-evidence tool (r6): dump `explain("formatted")` for every declared
   * query (or a comma-separated subset) into a directory in ONE warm JVM —
@@ -8,6 +9,8 @@ import org.apache.spark.sql.SparkSession
   * optimization rounds commit as evidence.
   *
   *   sbt -batch "runMain graft.PlanDump <outDir> <suffix> [queries] [sfDir]"
+  *
+  * Exits 1, naming the failed queries, when any plan dump threw.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,7 +29,7 @@ object PlanDump {
     new java.io.File(outDir).mkdirs()
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    names.foreach { name =>
+    val failed = names.filterNot { name =>
       try {
         val df = SparkEntry.queries(name)(spark, dir)
         val plan = df.queryExecution.explainString(
@@ -34,11 +37,20 @@ object PlanDump {
         val p = java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt")
         java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
         println(s"[plandump] $name -> $p (${plan.length} chars)")
+        true
       } catch {
-        case e: Throwable => println(s"[plandump] $name FAILED: $e")
+        case NonFatal(e) =>
+          println(s"[plandump] $name FAILED: $e")
+          false
       }
     }
     SparkEntry.clearCaches()
     spark.stop()
+    // a partial evidence set must not pass for a complete one
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] ${failed.size} of ${names.size} " +
+        s"plan dumps FAILED: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

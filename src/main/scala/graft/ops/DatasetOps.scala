@@ -115,16 +115,6 @@ object DatasetOps {
       countDistinct(lower(col("text"))).as("n_surfaces"),
       avg(length(col("text"))).as("avg_len"))
 
-  /** Majority-class undersampling — `SVMLightTreeKernels`'s
-    * use_random_undersampling (`learning/svmlight.py:38-76`): the
-    * reference flips a seedless random() per majority row; we use
-    * stratified sampleBy with a fixed seed (SURVEY §4: determinism
-    * fixed). `fractions`: target keep-rate per value of `labelCol`.
-    */
-  def undersample(df: DataFrame, labelCol: String,
-                  fractions: Map[Int, Double], seed: Long = 2727L): DataFrame =
-    df.stat.sampleBy(labelCol, fractions, seed)
-
   /** `stratified_split` (`data.py:604-648`): seeded per-stratum
     * percentage split so each stratum contributes proportionally.
     */

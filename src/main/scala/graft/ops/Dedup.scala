@@ -146,16 +146,28 @@ object Dedup {
     Hashes.shingles(text.split("\\s+").toIndexedSeq, shingleN).toArray
 
   /** One band's bucket key from a minhash signature: the band index
-    * salted and mix64-folded with that band's `rows` signature slots —
-    * THE band fold, shared by the batch band rows and
-    * `StreamingKg.minhashCandidatesStream` (their candidate-set equality
-    * holds by construction, and is also tested).
+    * salted and mix64-folded with that band's `rows` signature slots.
+    * Only [[docBuckets]] calls it.
     */
-  private[graft] def bandBucket(sig: Array[Long], band: Int, rows: Int): Long = {
+  private def bandBucket(sig: Array[Long], band: Int, rows: Int): Long = {
     var h = Hashes.mix64(band.toLong + 0x9e3779b97f4a7c15L)
     var k = 0
     while (k < rows) { h = Hashes.mix64(h ^ sig(band * rows + k)); k += 1 }
     h
+  }
+
+  /** The `bands` bucket keys of one document's hashed shingle set:
+    * `Hashes.minhash` signature, then [[bandBucket]] per band — THE
+    * per-doc fold shared by [[minhashLsh]], [[bandedBuckets]] and
+    * `StreamingKg.minhashCandidatesStream`, so their candidate sets are
+    * equal by construction (and tested). `numPerm % bands == 0` is the
+    * callers' precondition.
+    */
+  private[graft] def docBuckets(shingles: Array[Long], numPerm: Int,
+                                bands: Int): Array[Long] = {
+    val rows = numPerm / bands
+    val sig = Hashes.minhash(shingles, numPerm)
+    Array.tabulate(bands)(b => bandBucket(sig, b, rows))
   }
 
   /** (doc_id, bucket) band rows — and NOTHING else. The bucket packs the
@@ -172,11 +184,9 @@ object Dedup {
     val spark = shingled.sparkSession
     import spark.implicits._
     require(numPerm % bands == 0)
-    val rows = numPerm / bands
     shingled.select(col("doc_id"), col("shingles")).as[(Long, Array[Long])]
       .flatMap { case (id, sh) =>
-        val sig = Hashes.minhash(sh, numPerm)
-        (0 until bands).iterator.map(b => (id, bandBucket(sig, b, rows)))
+        docBuckets(sh, numPerm, bands).iterator.map(b => (id, b))
       }.toDF("doc_id", "bucket")
   }
 
@@ -200,8 +210,8 @@ object Dedup {
     import spark.implicits._
     require(numPerm % bands == 0)
     // r6: the minhash signature buckets are computed IN the persisted
-    // pass (same docShingles → Hashes.minhash → bandBucket fold the
-    // streaming side shares — only the caching point moved). Before,
+    // pass (same docShingles → docBuckets fold the streaming side
+    // shares — only the caching point moved). Before,
     // `banded` re-derived minhash from the cache on BOTH bucket-join
     // sides (the rename defeats ReusedExchange), and the four consumer
     // map stages (2 band sides + 2 verification sides) launch
@@ -210,12 +220,10 @@ object Dedup {
     // single-task stages all labelled the shingled scan. One row-count
     // action populates the cache BEFORE any consumer launches —
     // shingles + signatures are now computed exactly once per run.
-    val rows = numPerm / bands
     val shingled = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val sh = docShingles(text, shingleN)
-        val sig = Hashes.minhash(sh, numPerm)
-        (id, sh, Array.tabulate(bands)(b => bandBucket(sig, b, rows)))
+        (id, sh, docBuckets(sh, numPerm, bands))
       }
       .toDF("doc_id", "shingles", "buckets")
       .persist()

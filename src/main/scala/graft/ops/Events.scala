@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Event-stream analytics over the (event_id, ts, user_id, event_type,
   * value, props) events table — the batch counterparts of the
   * streaming extraction's session semantics
-  * (graft.streaming.StreamingKg.triplesStatefulEventTime evicts on
-  * exactly the same event-time gap rule).
+  * (graft.streaming.StreamingKg.sessionizeStream evicts on exactly the
+  * same event-time gap rule).
   */
 object Events {
 

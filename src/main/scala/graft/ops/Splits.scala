@@ -1,8 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Cross-validation fold assignment and percentage splits —
   * `Dataset.cv_kfold_splits` / `percentage_split`
   * (`structures/data.py:453-648`).
@@ -10,12 +7,10 @@ import org.apache.spark.sql.functions._
   * The reference sorts document keys, shuffles them with a seeded RNG
   * (seed 2727, `data.py:494-498`) and slices contiguous folds. We keep
   * the same shape — sorted keys + deterministic seeded Fisher-Yates +
-  * contiguous slices — broadcast as a key→fold map (conversation keys
-  * are ~1e9 at full scale, the map stays driver-feasible per-sample;
-  * at larger cardinalities swap in hash-based assignment). Exact parity
-  * with CPython's Mersenne shuffle is out of scope (documented in
-  * SURVEY §7 hard-parts): we test fold sizes, disjointness and
-  * determinism instead.
+  * contiguous slices — as a key→fold map. Exact parity with CPython's
+  * Mersenne shuffle is out of scope (documented in SURVEY §7
+  * hard-parts): we test fold sizes, disjointness and determinism
+  * instead.
   */
 object Splits {
 
@@ -41,33 +36,6 @@ object Splits {
     shuffled.zipWithIndex.map { case (key, i) =>
       key -> math.min(i * k / math.max(n, 1), k - 1)
     }.toMap
-  }
-
-  /** Attach fold ids to a DataFrame by conversation key.
-    *
-    * Two assignment paths behind one API:
-    *  - up to `maxDriverKeys` distinct keys: the reference-shaped sorted
-    *    + seeded-shuffle + contiguous-slice assignment (exact fold SIZES,
-    *    like `data.py:453-491`), broadcast as a key→fold map;
-    *  - above it: fully distributed hash assignment
-    *    `pmod(xxhash64(key, seed), k)` — no driver collect, fold sizes
-    *    concentrate around n/k by the law of large numbers (at 1e9 keys
-    *    the relative deviation is ~1e-4). Deterministic either way.
-    */
-  def withFold(df: DataFrame, keyCol: String, k: Int, seed: Long = 2727L,
-               maxDriverKeys: Long = 1000000L): DataFrame = {
-    val spark = df.sparkSession
-    val distinctKeys = df.select(keyCol).distinct()
-    if (distinctKeys.count() <= maxDriverKeys) {
-      val keys = distinctKeys.collect().map(_.getString(0)).toSeq
-      val folds = kfold(keys, k, seed)
-      val bc = spark.sparkContext.broadcast(folds)
-      val foldUdf = udf((key: String) => bc.value.getOrElse(key, -1))
-      df.withColumn("fold", foldUdf(col(keyCol)))
-    } else {
-      df.withColumn("fold",
-        pmod(xxhash64(col(keyCol), lit(seed)), lit(k)).cast("int"))
-    }
   }
 
   /** Seeded percentage split (`data.py:578-601`): first

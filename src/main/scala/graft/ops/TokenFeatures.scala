@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.model._
 import graft.nlp.{Porter, TextOps}
 
@@ -18,21 +17,6 @@ object TokenFeatures {
   /** `SimpleFeatureGenerator` (`features/simple.py:6-19`). */
   def simple(sent: IndexedSeq[Tok]): IndexedSeq[FeatMap] =
     sent.map(t => Map("word[0]" -> t.word))
-
-  /** `SentenceMarkerFeatureGenerator` (`simple.py:22-43`). */
-  def sentenceMarkers(sent: IndexedSeq[Tok]): IndexedSeq[FeatMap] =
-    sent.indices.map { i =>
-      var m = Map.empty[String, String]
-      if (i == 0) m += ("BOS[0]" -> "1")
-      if (i == sent.length - 1) m += ("EOS[0]" -> "1")
-      m
-    }
-
-  /** `NonAsciiFeatureGenerator` (`simple.py:46-58`). */
-  def nonAscii(sent: IndexedSeq[Tok]): IndexedSeq[FeatMap] =
-    sent.map { t =>
-      if (t.word.exists(_ > 127)) Map("non_ascii[0]" -> "1") else Map.empty
-    }
 
   /** `PorterStemFeatureGenerator` (`features/stemming.py:109-128`). */
   def porterStem(sent: IndexedSeq[Tok]): IndexedSeq[FeatMap] =
@@ -93,87 +77,6 @@ object TokenFeatures {
     }
   }
 
-  /** `WordEmbeddingsFeatureGenerator` (`features/embeddings.py:8-31`):
-    * per-dim float features from a broadcast map; digits folded to 0 and
-    * lowercased key exactly like the reference.
-    */
-  def wordEmbeddings(sent: IndexedSeq[Tok],
-                     vectors: Map[String, Array[Float]],
-                     weight: Double = 1.0): IndexedSeq[FeatMap] =
-    sent.map { t =>
-      val key = t.word.toLowerCase.replaceAll("[0-9]", "0")
-      vectors.get(key) match {
-        case Some(v) =>
-          v.iterator.zipWithIndex.map { case (x, d) =>
-            s"embedding_$d[0]" -> (weight * x).toString
-          }.toMap
-        case None => Map.empty[String, String]
-      }
-    }
-
-  /** `DiscreteWordEmbeddingsFeatureGenerator` (`embeddings.py:34-61`):
-    * per-dimension histogram-binned embedding values as string features;
-    * bin edges precomputed per dimension (n bins over [min, max]).
-    */
-  def discreteWordEmbeddings(sent: IndexedSeq[Tok],
-                             vectors: Map[String, Array[Float]],
-                             binEdges: Array[Array[Float]]): IndexedSeq[FeatMap] =
-    sent.map { t =>
-      val key = t.word.toLowerCase.replaceAll("[0-9]", "0")
-      vectors.get(key) match {
-        case Some(v) =>
-          v.iterator.zipWithIndex.map { case (x, d) =>
-            val edges = binEdges(d)
-            var bin = 0
-            while (bin < edges.length && x > edges(bin)) bin += 1
-            s"embedding_$d[0]" -> bin.toString
-          }.toMap
-        case None => Map.empty[String, String]
-      }
-    }
-
-  /** `BinarizedWordEmbeddingsFeatureGenerator` (`embeddings.py:64-93`):
-    * +/−/0 per dimension vs the per-dimension positive/negative means.
-    */
-  def binarizedWordEmbeddings(sent: IndexedSeq[Tok],
-                              vectors: Map[String, Array[Float]],
-                              posMean: Array[Float], negMean: Array[Float]): IndexedSeq[FeatMap] =
-    sent.map { t =>
-      val key = t.word.toLowerCase.replaceAll("[0-9]", "0")
-      vectors.get(key) match {
-        case Some(v) =>
-          v.iterator.zipWithIndex.map { case (x, d) =>
-            val s = if (x > posMean(d)) "+" else if (x < negMean(d)) "-" else "0"
-            s"embedding_$d[0]" -> s
-          }.toMap
-        case None => Map.empty[String, String]
-      }
-    }
-
-  /** `ExternalPredictedLabelsFeatureGenerator` (`simple.py:61-93`):
-    * positional join of an external per-token score table on
-    * (conv_id, turn_idx, sent_idx, tid) — weight × probability feature.
-    */
-  def externalLabels(tokens: org.apache.spark.sql.DataFrame,
-                     scores: org.apache.spark.sql.DataFrame,
-                     weight: Double): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    tokens.join(scores, Seq("conv_id", "turn_idx", "sent_idx", "tid"), "left")
-      .withColumn("ext_feature",
-        when(col("ext_label").isNotNull,
-          concat(lit("ext="), col("ext_label"))).cast("string"))
-      .withColumn("ext_value", coalesce(col("ext_prob") * weight, lit(0.0)))
-  }
-
-  /** `BrownClusteringFeatureGenerator` (`embeddings.py:96-114`). */
-  def brownClusters(sent: IndexedSeq[Tok], clusters: Map[String, String]): IndexedSeq[FeatMap] =
-    sent.map { t =>
-      clusters.get(t.word.toLowerCase) match {
-        case Some(c) => Map("brown[0]" -> c)
-        case None => Map.empty[String, String]
-      }
-    }
-
   private def merge(a: IndexedSeq[FeatMap], b: IndexedSeq[FeatMap]): IndexedSeq[FeatMap] =
     a.zip(b).map { case (x, y) => x ++ y }
 
@@ -185,20 +88,5 @@ object TokenFeatures {
     val base = merge(simple(sent), porterStem(sent))
     window(base, template = (-3 to 3).filter(_ != 0),
       includeList = Some(Set("stem[0]")))
-  }
-
-  /** Distributed application over tokenized sentences → one row per
-    * token with its feature map (MAP<STRING,STRING> column).
-    */
-  def applyDefault(ts: Dataset[TokenizedSentence]): DataFrame = {
-    val spark = ts.sparkSession
-    import spark.implicits._
-    ts.flatMap { s =>
-      val toks = s.tokens.toIndexedSeq
-      val feats = defaultPipeline(toks)
-      toks.zip(feats).map { case (t, f) =>
-        (s.conv_id, s.turn_idx, s.sent_idx, t.tid, t.word, f)
-      }
-    }.toDF("conv_id", "turn_idx", "sent_idx", "tid", "word", "features")
   }
 }

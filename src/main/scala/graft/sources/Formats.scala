@@ -16,15 +16,6 @@ object Formats {
   // Readers
   // ---------------------------------------------------------------------
 
-  /** `StringReader` (`readers.py:120-144`): one string → 1 doc / 1 part.
-    * Test-fixture constructor.
-    */
-  def fromStrings(spark: SparkSession, texts: Seq[String]): DataFrame = {
-    import spark.implicits._
-    texts.zipWithIndex.map { case (t, i) => (i.toLong, "p1", t) }
-      .toDF("doc_id", "part_id", "text")
-  }
-
   /** `TextFilesReader` (`readers.py:147-189`): text files → one doc per
     * file, blank-line-separated paragraphs → parts. `wholetext` scan +
     * split + posexplode; doc id = file basename like the reference
@@ -39,17 +30,6 @@ object Formats {
       .select(col("doc_id"),
         concat(lit("p"), (col("pos") + 1).cast("string")).as("part_id"),
         col("col").as("text"))
-  }
-
-  /** `SETHReader`-style TSV (`readers.py:257-283`):
-    * `pmid \t title \t abstract` → two parts per doc.
-    */
-  def fromTsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("sep", "\t").csv(path)
-      .toDF("doc_id", "title", "abstract")
-    raw.select(col("doc_id"), lit("title").as("part_id"), col("title").as("text"))
-      .unionByName(raw.select(col("doc_id"), lit("abstract").as("part_id"),
-        col("abstract").as("text")))
   }
 
   /** PubTator reader (`TmVarReader`, `readers.py:440-509`): line blocks
@@ -327,16 +307,5 @@ object Formats {
           col("doc_id"), lit("|t|"), col("text"), lit("\n"),
           when(col("ann_lines").isNotNull, concat_ws("\n", col("ann_lines")))
             .otherwise(lit(""))).as("value"))
-  }
-
-  /** `TagTogFormat`-style JSON sink (`writers.py:227-439`): mentions with
-    * confidence ≥ threshold, one JSON document per doc_id.
-    */
-  def toAnnJson(mentions: DataFrame, threshold: Double): DataFrame = {
-    mentions.filter(col("confidence") >= threshold)
-      .groupBy(col("conv_id"))
-      .agg(collect_list(struct(col("class_id"), col("begin"), col("end"),
-        col("text"), col("confidence"))).as("entities"))
-      .select(col("conv_id"), to_json(struct(col("conv_id"), col("entities"))).as("json"))
   }
 }

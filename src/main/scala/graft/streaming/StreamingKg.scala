@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.{TripleRow, Turn}
@@ -59,53 +59,43 @@ object StreamingKg {
     *  - each batch re-runs the pure per-conversation extraction over the
     *    accumulated turns and emits ONLY new keys (append-mode-safe,
     *    exactly-once per key under the streaming checkpoint),
-    *  - idle conversations are evicted by processing-time timeout, so
-    *    state is bounded by ACTIVE conversations × bounded turns (back the
-    *    state store with RocksDB at scale — a TESTED mode: one conf
-    *    line, `spark.sql.streaming.stateStore.providerClass =
+    *  - idle conversations are evicted under `timeout` ([[evicting]]):
+    *    by default after `idleMs` of processing time, so state is
+    *    bounded by ACTIVE conversations × bounded turns; under
+    *    `EventTimeTimeout` once the watermark on `ts` passes the
+    *    conversation's last turn plus `idleMs`. Back the state store
+    *    with RocksDB at scale — a TESTED mode: one conf line,
+    *    `spark.sql.streaming.stateStore.providerClass =
     *    ...state.RocksDBStateStoreProvider`, ships with Spark; output
-    *    parity + provider-in-effect pinned in StreamingKgSpec).
+    *    parity + provider-in-effect pinned in StreamingKgSpec.
     */
   def triplesStateful(turns: Dataset[Turn], cfg: KgPipeline.Config,
                       gaz: Map[String, String],
                       scorer: Option[RelationScoring.LinearModel] = None,
-                      maxIdle: String = "30 minutes",
                       timeout: GroupStateTimeout =
-                        GroupStateTimeout.ProcessingTimeTimeout()): Dataset[TripleRow] = {
-    // EventTimeTimeout requires state.setTimeoutTimestamp + a watermark —
-    // semantics this idle-duration API does not model. Reject it up front
-    // instead of letting setTimeoutDuration throw mid-stream.
-    require(timeout != GroupStateTimeout.EventTimeTimeout(),
-      "triplesStateful models idle-duration eviction: use " +
-        "ProcessingTimeTimeout (default) or NoTimeout; for watermark-based " +
-        "eviction use triplesStatefulEventTime")
+                        GroupStateTimeout.ProcessingTimeTimeout(),
+                      idleMs: Long = DefaultIdleMs,
+                      watermarkDelay: String = "10 minutes"): Dataset[TripleRow] = {
     val spark = turns.sparkSession
     import spark.implicits._
     val bcGaz = spark.sparkContext.broadcast(gaz)
     val bcLin = spark.sparkContext.broadcast(scorer)
-    val useTimeout = timeout != GroupStateTimeout.NoTimeout()
-    turns.groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append(), timeout) {
-        (convId: String, newTurns: Iterator[Turn], state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val fresh = mergeAndExtract(convId, newTurns, state, cfg,
-              bcGaz.value, bcLin.value)
-            if (useTimeout) state.setTimeoutDuration(maxIdle)
-            fresh
-          }
-      }
+    evicting(watermarked(turns, "ts", timeout, watermarkDelay)
+      .groupByKey(_.conv_id), timeout, idleMs)(
+      // the stored turns themselves carry the horizon
+      (s: ConvState) => s.turns.iterator.map(_.ts.getTime).foldLeft(0L)(math.max),
+      (_: Turn) => 0L, (s: ConvState, _: Long) => s) {
+      (convId, newTurns, state) =>
+        mergeAndExtract(convId, newTurns, state, cfg, bcGaz.value, bcLin.value)
+    }
   }
 
-  /** Shared per-group body of the stateful extractors: merge the arriving
-    * turns into the accumulated state (first write per turn_idx wins),
-    * re-run the pure per-conversation extraction, emit only
-    * not-yet-emitted keys, and update the state. Timeout bookkeeping is
-    * the caller's (the two timeout disciplines differ).
+  /** Per-group body of [[triplesStateful]]: merge the arriving turns
+    * into the accumulated state (first write per turn_idx wins), re-run
+    * the pure per-conversation extraction, emit only not-yet-emitted
+    * keys, and update the state.
     */
-  private def mergeAndExtract(convId: String, newTurns: Iterator[Turn],
+  private def mergeAndExtract(convId: String, newTurns: Seq[Turn],
                               state: GroupState[ConvState],
                               cfg: KgPipeline.Config,
                               gaz: Map[String, String],
@@ -114,8 +104,7 @@ object StreamingKg {
     val prev = state.getOption.getOrElse(ConvState(Nil, Set.empty))
     val seen = prev.turns.map(_.turn_idx).toSet
     val merged = prev.turns ++
-      newTurns.filterNot(t => seen(t.turn_idx)).toSeq
-        .distinctBy(_.turn_idx)
+      newTurns.filterNot(t => seen(t.turn_idx)).distinctBy(_.turn_idx)
     val tagger: IndexedSeq[graft.model.Tok] => Seq[(String, Int, Int)] =
       toks => toks.flatMap(t =>
         gaz.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
@@ -126,71 +115,97 @@ object StreamingKg {
     fresh.iterator
   }
 
-  /** Event-time variant of [[triplesStateful]]: conversations are evicted
-    * when the WATERMARK passes their last turn's event time plus
-    * `idleGap` — the late-data discipline `setTimeoutDuration` cannot
-    * express (processing-time eviction races real late arrivals; an
-    * event-time timeout fires only once the watermark PROVES no turn
-    * older than the gap can still arrive). Requires an event-time
-    * watermark on `ts`, which this operator installs itself
-    * (`watermarkDelay` = how much event-time lateness the stream
-    * tolerates).
-    *
-    * The timeout timestamp is re-armed on every batch to
-    * max(last event time + idleGap, watermark + 1ms) — the +1 floor
-    * keeps the call legal when a conversation's events are already far
-    * behind the watermark (Spark requires a strictly-future timeout).
+  /** Default `idleMs` of every operator: 30 minutes. */
+  private final val DefaultIdleMs = 30L * 60 * 1000
+
+  /** `rows` with an event-time watermark on `tsCol` — installed ONLY
+    * under `EventTimeTimeout`, the one policy that reads it. The other
+    * policies get their input plan untouched.
     */
-  def triplesStatefulEventTime(turns: Dataset[Turn], cfg: KgPipeline.Config,
-                               gaz: Map[String, String],
-                               scorer: Option[RelationScoring.LinearModel] = None,
-                               watermarkDelay: String = "10 minutes",
-                               idleGapMs: Long = 30L * 60 * 1000): Dataset[TripleRow] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val bcGaz = spark.sparkContext.broadcast(gaz)
-    val bcLin = spark.sparkContext.broadcast(scorer)
-    turns.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (convId: String, newTurns: Iterator[Turn], state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val fresh = mergeAndExtract(convId, newTurns, state, cfg,
-              bcGaz.value, bcLin.value)
-            val lastEventMs = state.get.turns.iterator
-              .map(_.ts.getTime).foldLeft(0L)(math.max)
+  private def watermarked[T](rows: Dataset[T], tsCol: String,
+                             timeout: GroupStateTimeout,
+                             watermarkDelay: String): Dataset[T] =
+    if (timeout == GroupStateTimeout.EventTimeTimeout())
+      rows.withWatermark(tsCol, watermarkDelay)
+    else rows
+
+  /** The ONE eviction discipline of every stateful operator here; each
+    * operator supplies only its per-group `body` (which updates the
+    * state). `timeout` selects the policy:
+    *
+    *  - `NoTimeout`: state is kept forever (bounded by the key space);
+    *  - `ProcessingTimeTimeout`: a group idle for `idleMs` of wall clock
+    *    is evicted;
+    *  - `EventTimeTimeout`: a group is evicted once the WATERMARK passes
+    *    its max event time plus `idleMs`, i.e. only when the stream
+    *    PROVES nothing within the horizon can still arrive — the
+    *    discipline for REPLAYED or historical input, where wall-clock
+    *    idleness says nothing about event-time adjacency and
+    *    processing-time eviction races real late arrivals. The input
+    *    must carry a watermark ([[watermarked]]).
+    *
+    * A timed-out group is removed and emits nothing; a key re-appearing
+    * after eviction starts from empty state. Under event time the
+    * horizon is the max event time EVER seen by the group — this batch's
+    * arrivals (`eventMs`) and the state before and after `body`
+    * (`lastMs`), written back through `stamp` — so a late-but-valid
+    * arrival can never shrink it. The timeout is re-armed on every batch
+    * to max(horizon + idleMs, watermark + 1 ms): the +1 floor keeps the
+    * call legal when a group's events are already far behind the
+    * watermark (Spark requires a strictly-future timeout).
+    */
+  private def evicting[K, V, S: Encoder, R: Encoder](
+      groups: KeyValueGroupedDataset[K, V], timeout: GroupStateTimeout,
+      idleMs: Long)(
+      lastMs: S => Long, eventMs: V => Long, stamp: (S, Long) => S)(
+      body: (K, Seq[V], GroupState[S]) => Iterator[R]): Dataset[R] = {
+    val eventTime = timeout == GroupStateTimeout.EventTimeTimeout()
+    val idle = timeout == GroupStateTimeout.ProcessingTimeTimeout()
+    groups.flatMapGroupsWithState(OutputMode.Append(), timeout) {
+      (key: K, rows: Iterator[V], state: GroupState[S]) =>
+        if (state.hasTimedOut) {
+          state.remove()
+          Iterator.empty
+        } else {
+          val seq = rows.toSeq
+          val seenMs =
+            if (!eventTime) 0L
+            else math.max(seq.iterator.map(eventMs).foldLeft(0L)(math.max),
+              state.getOption.fold(0L)(lastMs))
+          val out = body(key, seq, state)
+          if (idle) state.setTimeoutDuration(idleMs)
+          else if (eventTime) state.getOption.foreach { s =>
+            val last = math.max(seenMs, lastMs(s))
+            state.update(stamp(s, last))
             state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            fresh
+              math.max(last + idleMs, state.getCurrentWatermarkMs() + 1))
           }
-      }
+          out
+        }
+    }
   }
 
   /** State for [[exactDedupStream]]: the representative (first-seen
-    * minimal) doc_id and its text for each content hash.
+    * minimal) doc_id and its text for each content hash, plus the
+    * bucket's max event time (event-time eviction only).
     */
   final case class DedupState(repId: Long, text: String,
                               lastEventMs: Long = 0L)
 
   /** Streaming EXACT dedup at ingest — the incremental counterpart of
-    * `Dedup.exact` for a landing-zone document stream: documents are
-    * keyed by a 64-bit content hash (fnv1a64 — the engine-owned hash,
-    * callable per-key in groupByKey; the batch operator uses Catalyst's
-    * xxhash64 column — both are only BUCKETING, exactness comes from the
-    * text comparison, so the choice is invisible in the output),
-    * per-hash state holds the representative (id + text for collision
-    * verification), and every arriving document is emitted exactly once
-    * as (doc_id, rep_id, is_dup) — is_dup = an earlier-arriving document
-    * had identical text. A 64-bit hash collision with DIFFERENT text
-    * falls back to "not a duplicate": never a false merge; the rare
-    * colliding text stays its own representative on every occurrence
-    * (conservative direction — a missed dedup, ~2⁻⁶⁴ per pair, not a
-    * lost document).
+    * `Dedup.exact` for a landing-zone (doc_id, text, ts) stream:
+    * documents are keyed by a 64-bit content hash (fnv1a64 — the
+    * engine-owned hash, callable per-key in groupByKey; the batch
+    * operator uses Catalyst's xxhash64 column — both are only BUCKETING,
+    * exactness comes from the text comparison, so the choice is
+    * invisible in the output), per-hash state holds the representative
+    * (id + text for collision verification), and every arriving document
+    * is emitted exactly once as (doc_id, rep_id, is_dup) — is_dup = an
+    * earlier-arriving document had identical text. A 64-bit hash
+    * collision with DIFFERENT text falls back to "not a duplicate":
+    * never a false merge; the rare colliding text stays its own
+    * representative on every occurrence (conservative direction — a
+    * missed dedup, ~2⁻⁶⁴ per pair, not a lost document).
     *
     * Representative semantics differ from batch BY NECESSITY: batch
     * assigns rep = min doc_id over the whole group; a stream cannot
@@ -199,43 +214,34 @@ object StreamingKg {
     * ascending id order; across batches, arrival order wins). The parity
     * test feeds ascending ids, where the two coincide.
     *
-    * State is bounded by distinct content hashes. `maxIdle` (r4) bounds
-    * it further in TIME: a hash bucket idle longer than the duration is
-    * evicted (processing-time timeout, the same discipline as
-    * [[triplesStateful]]), so state tracks the RECENTLY-SEEN corpus —
-    * at scale back the store with RocksDB (tested mode — see
-    * [[triplesStateful]]) and set maxIdle to the dedup horizon. Eviction semantics: a text re-ingested AFTER its bucket
-    * was evicted starts a fresh group (it becomes its own representative
-    * again — pinned in StreamingKgSpec); None keeps the original
-    * append-only NoTimeout behavior.
+    * State is bounded by distinct content hashes. `timeout` bounds it
+    * further in TIME ([[evicting]]): `ProcessingTimeTimeout` evicts a
+    * hash bucket idle longer than `idleMs` (state tracks the
+    * RECENTLY-SEEN corpus), `EventTimeTimeout` evicts once the watermark
+    * on `ts` passes the bucket's last document plus `idleMs` (the dedup
+    * horizon in event time, for replayed corpora); `ts` is read only
+    * then. A text re-ingested AFTER its bucket was evicted starts a
+    * fresh group (it becomes its own representative again — pinned in
+    * StreamingKgSpec); `NoTimeout` (default) is append-only. At scale
+    * back the store with RocksDB (tested mode — see [[triplesStateful]]).
     */
-  def exactDedupStream(docs: Dataset[(Long, String)],
-                       maxIdle: Option[String] = None): Dataset[(Long, Long, Boolean)] = {
+  def exactDedupStream(docs: Dataset[(Long, String, java.sql.Timestamp)],
+                       timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout(),
+                       idleMs: Long = DefaultIdleMs,
+                       watermarkDelay: String = "10 minutes")
+  : Dataset[(Long, Long, Boolean)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (maxIdle.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs.groupByKey { case (_, text) =>
+    evicting(watermarked(docs, docs.columns(2), timeout, watermarkDelay)
       // engine-owned stable hash (graft invariant: never JVM hashCode)
-      graft.nlp.Hashes.fnv1a64(text)
-    }.flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-      (_: Long, rows: Iterator[(Long, String)], state: GroupState[DedupState]) =>
-        if (state.hasTimedOut) {
-          state.remove()
-          Iterator.empty
-        } else {
-          val out = exactDedupGroup(rows.toSeq, state)
-          maxIdle.foreach(state.setTimeoutDuration)
-          out
-        }
+      .groupByKey(r => graft.nlp.Hashes.fnv1a64(r._2)), timeout, idleMs)(
+      (s: DedupState) => s.lastEventMs, _._3.getTime,
+      (s: DedupState, ms: Long) => s.copy(lastEventMs = ms)) {
+      (_, rows, state) => exactDedupGroup(rows.map(r => (r._1, r._2)), state)
     }
   }
 
-  /** Shared per-group body of [[exactDedupStream]] and its event-time
-    * variant — dedup semantics only; timeout bookkeeping is the caller's
-    * (the two disciplines differ).
-    */
+  /** Per-group body of [[exactDedupStream]] — dedup semantics only. */
   private def exactDedupGroup(rowSeq: Seq[(Long, String)],
                               state: GroupState[DedupState])
   : Iterator[(Long, Long, Boolean)] = {
@@ -258,57 +264,8 @@ object StreamingKg {
     out.result().iterator
   }
 
-  /** Event-time variant of [[exactDedupStream]] for REPLAYED or
-    * historical corpora: the dedup horizon is measured in EVENT time —
-    * a hash bucket is evicted once the WATERMARK passes its last
-    * document's event time plus `idleGapMs`, i.e. only when the stream
-    * PROVES no document within the horizon can still arrive. A
-    * processing-time `maxIdle` would race real late arrivals on replay
-    * (wall-clock idle says nothing about event-time adjacency when a
-    * year of history replays in minutes) — same reasoning as
-    * [[triplesStatefulEventTime]], whose timeout re-arming discipline
-    * (max(last event + gap, watermark + 1 ms)) this shares. Eviction
-    * semantics match the PT variant: a text re-ingested after its
-    * bucket's eviction starts a fresh group (pinned in StreamingKgSpec).
-    */
-  def exactDedupStreamEventTime(docs: Dataset[(Long, String, java.sql.Timestamp)],
-                                watermarkDelay: String = "10 minutes",
-                                idleGapMs: Long = 30L * 60 * 1000)
-  : Dataset[(Long, Long, Boolean)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.toDF("doc_id", "text", "ts")
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, String, java.sql.Timestamp)]
-      .groupByKey { case (_, text, _) => graft.nlp.Hashes.fnv1a64(text) }
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, String, java.sql.Timestamp)],
-         state: GroupState[DedupState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val seq = rows.toSeq
-            // horizon = max event time EVER seen by this bucket (state-
-            // carried) — re-arming from the current batch alone would let
-            // a late-but-valid arrival SHRINK the horizon and evict early
-            val lastEventMs = math.max(
-              seq.iterator.map(_._3.getTime).foldLeft(0L)(math.max),
-              state.getOption.map(_.lastEventMs).getOrElse(0L))
-            val out = exactDedupGroup(seq.map(r => (r._1, r._2)), state)
-            state.getOption.foreach(s =>
-              state.update(s.copy(lastEventMs = lastEventMs)))
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
-  }
-
   /** State for [[simhashPairsStream]]: every (doc_id, simhash) seen so
-    * far in one 16-bit block bucket.
+    * far in one 16-bit block bucket, plus the bucket's max event time.
     */
   final case class BlockState(entries: List[(Long, Long)],
                               lastEventMs: Long = 0L)
@@ -328,18 +285,19 @@ object StreamingKg {
     * the batch operator is tested). Assumes unique doc_ids (the batch
     * operator's contract).
     *
-    * State grows with corpus size per bucket; two r4 bounds:
-    * `maxIdle` evicts buckets idle past the duration (processing-time
-    * timeout — the dedup horizon at scale; re-ingested docs after
-    * eviction re-emit their pairs), and `maxBucket` caps the entries a
-    * hot bucket STORES: arrivals beyond the cap still compare against
-    * the stored entries but are not added, so a boilerplate bucket emits
-    * O(cap) pairs per arrival instead of O(bucket) — with the cap the
-    * result is an explicit candidate SUBSET on hot buckets, the same
-    * recall trade Dedup.ngramJaccard makes with its document-frequency
-    * filter (bounded-emission behavior pinned in StreamingKgSpec). At
-    * scale back the store with RocksDB (tested mode — see
-    * [[triplesStateful]]).
+    * State grows with corpus size per bucket; two bounds: `timeout`
+    * evicts idle buckets exactly like [[exactDedupStream]] (re-ingested
+    * docs after eviction re-emit their pairs; under event time the
+    * watermark goes AFTER the fan-out — a typed flatMap between it and
+    * the grouping would strip the event-time tag), and `maxBucket` caps
+    * the entries a hot bucket STORES: arrivals beyond the cap still
+    * compare against the stored entries but are not added, so a
+    * boilerplate bucket emits O(cap) pairs per arrival instead of
+    * O(bucket) — with the cap the result is an explicit candidate SUBSET
+    * on hot buckets, the same recall trade Dedup.ngramJaccard makes with
+    * its document-frequency filter (bounded-emission behavior pinned in
+    * StreamingKgSpec). At scale back the store with RocksDB (tested
+    * mode — see [[triplesStateful]]).
     *
     * NOTE `maxHamming` > 3: the 4×16-bit block fanout GUARANTEES a
     * shared block only for hamming ≤ 3 (pigeonhole over 4 blocks);
@@ -347,37 +305,33 @@ object StreamingKg {
     * — identical to the batch operator's blocking, so batch/stream
     * parity still holds at any setting.
     */
-  def simhashPairsStream(docs: Dataset[(Long, String)],
+  def simhashPairsStream(docs: Dataset[(Long, String, java.sql.Timestamp)],
                          maxHamming: Int = 3,
-                         maxIdle: Option[String] = None,
+                         timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout(),
+                         idleMs: Long = DefaultIdleMs,
+                         watermarkDelay: String = "10 minutes",
                          maxBucket: Int = Int.MaxValue): Dataset[(Long, Long, Int)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (maxIdle.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs.flatMap { case (id, text) =>
+    // (block bucket, doc_id, simhash, ts)
+    val blocks = docs.flatMap { case (id, text, ts) =>
       val feats = text.split("\\s+").iterator.filter(_.nonEmpty)
         .map(w => (graft.nlp.Hashes.fnv1a64(w), 1))
       val h = graft.nlp.Hashes.simhash(feats)
-      (0 until 4).map(b => (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h))
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (_: Long, rows: Iterator[(Long, Long, Long)], state: GroupState[BlockState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = simhashGroup(rows.toSeq.map(r => (r._2, r._3)), state,
-              maxHamming, maxBucket)
-            maxIdle.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+      (0 until 4).map(b =>
+        (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h, ts))
+    }
+    evicting(watermarked(blocks, "_4", timeout, watermarkDelay)
+      .groupByKey(_._1), timeout, idleMs)(
+      (s: BlockState) => s.lastEventMs, _._4.getTime,
+      (s: BlockState, ms: Long) => s.copy(lastEventMs = ms)) {
+      (_, rows, state) =>
+        simhashGroup(rows.map(r => (r._2, r._3)), state, maxHamming, maxBucket)
+    }
   }
 
-  /** Shared per-group body of [[simhashPairsStream]] and its event-time
-    * variant: `rowSeq` = (doc_id, simhash) arrivals for one block bucket.
+  /** Per-group body of [[simhashPairsStream]]: `rowSeq` = (doc_id,
+    * simhash) arrivals for one block bucket.
     */
   private def simhashGroup(rowSeq: Seq[(Long, Long)],
                            state: GroupState[BlockState],
@@ -401,126 +355,62 @@ object StreamingKg {
     out.result().iterator
   }
 
-  /** Event-time variant of [[simhashPairsStream]] — the dedup horizon in
-    * EVENT time for replayed corpora (see [[exactDedupStreamEventTime]]
-    * for the discipline rationale). Input rows carry the document's
-    * event timestamp; block buckets are evicted when the watermark
-    * passes their last arrival's event time plus `idleGapMs`.
-    */
-  def simhashPairsStreamEventTime(docs: Dataset[(Long, String, java.sql.Timestamp)],
-                                  maxHamming: Int = 3,
-                                  watermarkDelay: String = "10 minutes",
-                                  idleGapMs: Long = 30L * 60 * 1000,
-                                  maxBucket: Int = Int.MaxValue)
-  : Dataset[(Long, Long, Int)] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.flatMap { case (id, text, ts) =>
-        val feats = text.split("\\s+").iterator.filter(_.nonEmpty)
-          .map(w => (graft.nlp.Hashes.fnv1a64(w), 1))
-        val h = graft.nlp.Hashes.simhash(feats)
-        (0 until 4).map(b =>
-          (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h, ts))
-      }
-      // watermark AFTER the fan-out: the event-time tag must sit on an
-      // attribute that reaches flatMapGroupsWithState's child (a typed
-      // flatMap between them would strip it)
-      .toDF("bucket", "doc_id", "simhash", "ts")
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, java.sql.Timestamp)],
-         state: GroupState[BlockState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val seq = rows.toSeq
-            // state-carried max event time — see exactDedupStreamEventTime
-            val lastEventMs = math.max(
-              seq.iterator.map(_._4.getTime).foldLeft(0L)(math.max),
-              state.getOption.map(_.lastEventMs).getOrElse(0L))
-            val out = simhashGroup(seq.map(r => (r._2, r._3)), state,
-              maxHamming, maxBucket)
-            state.getOption.foreach(s =>
-              state.update(s.copy(lastEventMs = lastEventMs)))
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
-  }
-
   /** State for [[minhashCandidatesStream]]: doc ids seen in one band
     * bucket — ids ONLY, the same payload-free contract as the batch
-    * operator's band rows.
+    * operator's band rows — plus the bucket's max event time.
     */
   final case class BucketState(ids: List[Long], lastEventMs: Long = 0L)
 
   /** Streaming MinHash-LSH near-dup CANDIDATES at ingest — the
     * incremental form of the batch `Dedup.bandedBuckets` candidate
     * generation: each arriving document fans out to its `bands` bucket
-    * keys (identical shingle/signature/bucket arithmetic to the batch
-    * operator, so the candidate sets are EQUAL — tested), per-bucket
-    * state keeps doc ids only, and an arrival emits (a, b) for every
-    * id already in the bucket. Like the batch operator, candidates are
-    * a superset of the true near-dups: exact-Jaccard verification joins
-    * the id pairs back to a persisted (doc_id, shingles) table — in a
-    * stream that's the downstream foreachBatch join, keeping shingle
-    * payloads out of both the shuffle AND the state store. A pair
-    * sharing several bands emits once per shared band, all in the batch
-    * where the later doc arrives — per-batch dropDuplicates in the sink
-    * restores set semantics.
+    * keys (`Dedup.docShingles` + `Dedup.docBuckets`, the batch
+    * operator's own per-doc fold, so the candidate sets are EQUAL by
+    * construction — and tested), per-bucket state keeps doc ids only,
+    * and an arrival emits (a, b) for every id already in the bucket.
+    * Like the batch operator, candidates are a superset of the true
+    * near-dups: exact-Jaccard verification joins the id pairs back to a
+    * persisted (doc_id, shingles) table — in a stream that's the
+    * downstream foreachBatch join ([[minhashDedupStream]]), keeping
+    * shingle payloads out of both the shuffle AND the state store. A
+    * pair sharing several bands emits once per shared band, all in the
+    * batch where the later doc arrives — per-batch dropDuplicates in the
+    * sink restores set semantics.
     *
-    * Same operational caveats as [[simhashPairsStream]]: assumes unique
-    * doc_ids (a re-ingested id would re-emit its pairs in a LATER batch,
-    * beyond per-batch dedup). The r4 bounds mirror simhash: `maxIdle`
-    * evicts idle buckets by processing-time timeout, `maxBucket` caps
-    * stored ids per bucket so a hot boilerplate bucket emits O(cap)
+    * Same operational caveats and bounds as [[simhashPairsStream]]:
+    * assumes unique doc_ids (a re-ingested id would re-emit its pairs in
+    * a LATER batch, beyond per-batch dedup); `timeout`/`idleMs` evict
+    * idle buckets (event-time watermark after the fan-out), `maxBucket`
+    * caps stored ids per bucket so a hot boilerplate bucket emits O(cap)
     * candidates per arrival instead of O(bucket) — an explicit candidate
     * subset on hot buckets; exact-Jaccard verification downstream keeps
-    * precision regardless. At scale back the store with RocksDB (tested
-    * mode — see [[triplesStateful]]).
+    * precision regardless.
     */
-  def minhashCandidatesStream(docs: Dataset[(Long, String)],
+  def minhashCandidatesStream(docs: Dataset[(Long, String, java.sql.Timestamp)],
                               shingleN: Int = 3, numPerm: Int = 64,
                               bands: Int = 16,
-                              maxIdle: Option[String] = None,
+                              timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout(),
+                              idleMs: Long = DefaultIdleMs,
+                              watermarkDelay: String = "10 minutes",
                               maxBucket: Int = Int.MaxValue): Dataset[(Long, Long)] = {
     require(numPerm % bands == 0)
-    val rows = numPerm / bands
     val spark = docs.sparkSession
     import spark.implicits._
-    val timeoutConf =
-      if (maxIdle.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    // shingle/signature/bucket arithmetic = Dedup.docShingles +
-    // Hashes.minhash + Dedup.bandBucket — the SAME functions the batch
-    // band rows use, so candidate-set equality holds by construction
-    docs.flatMap { case (id, text) =>
-      val sig = graft.nlp.Hashes.minhash(
-        graft.ops.Dedup.docShingles(text, shingleN), numPerm)
-      (0 until bands).iterator.map(b =>
-        (graft.ops.Dedup.bandBucket(sig, b, rows), id))
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf) {
-        (_: Long, rowsIt: Iterator[(Long, Long)], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = minhashGroup(rowsIt.toSeq.map(_._2), state, maxBucket)
-            maxIdle.foreach(state.setTimeoutDuration)
-            out
-          }
-      }
+    // (band bucket, doc_id, ts)
+    val banded = docs.flatMap { case (id, text, ts) =>
+      graft.ops.Dedup.docBuckets(graft.ops.Dedup.docShingles(text, shingleN),
+        numPerm, bands).iterator.map(b => (b, id, ts))
+    }
+    evicting(watermarked(banded, "_3", timeout, watermarkDelay)
+      .groupByKey(_._1), timeout, idleMs)(
+      (s: BucketState) => s.lastEventMs, _._3.getTime,
+      (s: BucketState, ms: Long) => s.copy(lastEventMs = ms)) {
+      (_, rows, state) => minhashGroup(rows.map(_._2), state, maxBucket)
+    }
   }
 
-  /** Shared per-group body of [[minhashCandidatesStream]] and its
-    * event-time variant: `idSeq` = doc ids arriving in one band bucket.
+  /** Per-group body of [[minhashCandidatesStream]]: `idSeq` = doc ids
+    * arriving in one band bucket.
     */
   private def minhashGroup(idSeq: Seq[Long], state: GroupState[BucketState],
                            maxBucket: Int): Iterator[(Long, Long)] = {
@@ -535,57 +425,6 @@ object StreamingKg {
     }
     state.update(BucketState(ids))
     out.result().iterator
-  }
-
-  /** Event-time variant of [[minhashCandidatesStream]] — the dedup
-    * horizon in EVENT time for replayed corpora (see
-    * [[exactDedupStreamEventTime]]): band buckets are evicted when the
-    * watermark passes their last arrival's event time plus `idleGapMs`.
-    */
-  def minhashCandidatesStreamEventTime(docs: Dataset[(Long, String, java.sql.Timestamp)],
-                                       shingleN: Int = 3, numPerm: Int = 64,
-                                       bands: Int = 16,
-                                       watermarkDelay: String = "10 minutes",
-                                       idleGapMs: Long = 30L * 60 * 1000,
-                                       maxBucket: Int = Int.MaxValue)
-  : Dataset[(Long, Long)] = {
-    require(numPerm % bands == 0)
-    val rows = numPerm / bands
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.flatMap { case (id, text, ts) =>
-        val sig = graft.nlp.Hashes.minhash(
-          graft.ops.Dedup.docShingles(text, shingleN), numPerm)
-        (0 until bands).iterator.map(b =>
-          (graft.ops.Dedup.bandBucket(sig, b, rows), id, ts))
-      }
-      // watermark AFTER the fan-out (see simhashPairsStreamEventTime)
-      .toDF("bucket", "doc_id", "ts")
-      .withWatermark("ts", watermarkDelay)
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rowsIt: Iterator[(Long, Long, java.sql.Timestamp)],
-         state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val seq = rowsIt.toSeq
-            // state-carried max event time — see exactDedupStreamEventTime
-            val lastEventMs = math.max(
-              seq.iterator.map(_._3.getTime).foldLeft(0L)(math.max),
-              state.getOption.map(_.lastEventMs).getOrElse(0L))
-            val out = minhashGroup(seq.map(_._2), state, maxBucket)
-            state.getOption.foreach(s =>
-              state.update(s.copy(lastEventMs = lastEventMs)))
-            state.setTimeoutTimestamp(
-              math.max(lastEventMs + idleGapMs,
-                state.getCurrentWatermarkMs() + 1))
-            out
-          }
-      }
   }
 
   /** END-TO-END streaming MinHash dedup — the packaged form of the
@@ -608,9 +447,9 @@ object StreamingKg {
     *     in `outputDir/batch_id=<id>` (idempotent like the stores).
     *
     * Identical shingle/signature/bucket arithmetic to the batch operator
-    * (Dedup.docShingles + Hashes.minhash + Dedup.bandBucket), so the
-    * accumulated output over any prefix of batches EQUALS batch
-    * `minhashLsh` over the accumulated corpus (parity tested). Assumes
+    * (Dedup.docShingles + Dedup.docBuckets), so the accumulated output
+    * over any prefix of batches EQUALS batch `minhashLsh` over the
+    * accumulated corpus (parity tested). Assumes
     * unique doc_ids across the stream (the batch operator's contract).
     * Output rows are SET-semantic: a batch replayed after later batches
     * already ran re-joins against the grown store and may duplicate
@@ -758,8 +597,7 @@ object StreamingKg {
   /** State for [[sessionizeStream]]: the user's current session (start
     * micros — the session's stable identity) and the max event time
     * ever seen (the gap horizon, state-carried so a late-but-valid
-    * arrival cannot shrink it — the [[exactDedupStreamEventTime]]
-    * discipline).
+    * arrival cannot shrink it — the [[evicting]] discipline).
     */
   final case class SessState(lastUs: Long, startUs: Long)
 
@@ -800,41 +638,30 @@ object StreamingKg {
     val gapUs = gapMinutes.toLong * 60L * 1000000L
     def us(t: java.sql.Timestamp): Long =
       t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-    events.toDF("event_id", "ts", "user_id")
+    val timed = events.toDF("event_id", "ts", "user_id")
       .filter(col("ts").isNotNull)
       .withWatermark("ts", watermarkDelay)
       .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._3)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[(Long, java.sql.Timestamp, Long)],
-         state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toVector.sortBy(r => (us(r._2), r._1))
-            var st = state.getOption.orNull
-            val out = sorted.map { case (eid, t, _) =>
-              val u = us(t)
-              val isStart = (st eq null) || u - st.lastUs > gapUs
-              st = if (isStart) SessState(u, u)
-              else SessState(math.max(st.lastUs, u), st.startUs)
-              (eid, userId, st.startUs, isStart)
-            }
-            if (st ne null) {
-              state.update(st)
-              // ceiling division (r6, ADVICE r5): flooring micros->millis
-              // could evict up to 999µs before last_event_time + gap, so a
-              // boundary event (still in-session under the strict-> rule)
-              // could meet evicted state and wrongly open a new session
-              state.setTimeoutTimestamp(
-                math.max((st.lastUs + 999L) / 1000L + gapMinutes.toLong * 60000L,
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
+    // ceiling division (r6, ADVICE r5): flooring micros->millis could
+    // evict up to 999µs before last_event_time + gap, so a boundary event
+    // (still in-session under the strict-> rule) could meet evicted state
+    // and wrongly open a new session
+    evicting(timed.groupByKey(_._3), GroupStateTimeout.EventTimeTimeout(),
+      gapMinutes.toLong * 60000L)(
+      (s: SessState) => (s.lastUs + 999L) / 1000L,
+      (_: (Long, java.sql.Timestamp, Long)) => 0L, (s: SessState, _: Long) => s) {
+      (userId, rows, state) =>
+        var st = state.getOption.orNull
+        val out = rows.sortBy(r => (us(r._2), r._1)).map { case (eid, t, _) =>
+          val u = us(t)
+          val isStart = (st eq null) || u - st.lastUs > gapUs
+          st = if (isStart) SessState(u, u)
+          else SessState(math.max(st.lastUs, u), st.startUs)
+          (eid, userId, st.startUs, isStart)
+        }
+        if (st ne null) state.update(st)
+        out.iterator
+    }
   }
 
   /** Event-time turn-rate monitor: 1-minute windows, 2-minute watermark

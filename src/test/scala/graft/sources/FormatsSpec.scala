@@ -25,8 +25,10 @@ class FormatsSpec extends SparkSpec {
 
   test("reference stub.pubtator parses: title+abstract docs, offset-valid anns") {
     import spark.implicits._
+    // hand-made stub in the reference demo stub's shape (committed under
+    // src/test/resources so the suite needs nothing outside the repo)
     val (docs, anns) = Formats.fromPubTator(spark,
-      "/root/reference/resources/corpora/demo/stub.pubtator")
+      getClass.getResource("/corpora/demo/stub.pubtator").getPath)
     val d = docs.as[(String, String)].collect().toMap
     assert(d.contains("darkunit123"))
     assert(d("darkunit123").startsWith("I like trains"))

@@ -4,6 +4,9 @@ import graft.SparkSpec
 import graft.model.Turn
 import graft.ops.{KgPipeline, Transcripts}
 import java.nio.file.Files
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.streaming.GroupStateTimeout
 
 class StreamingKgSpec extends SparkSpec {
 
@@ -12,6 +15,15 @@ class StreamingKgSpec extends SparkSpec {
     "job_etl" -> "e_svc", "agent_planner" -> "e_svc",
     "db_users" -> "e_res", "db_orders" -> "e_res", "idx_docs" -> "e_res",
     "topic_events" -> "e_res", "cache_main" -> "e_res")
+
+  /** (doc_id, text) input for the dedup streams with no event time: `ts`
+    * is read only under EventTimeTimeout, so a null never reaches it.
+    */
+  private def untimed(docs: Dataset[(Long, String)])
+  : Dataset[(Long, String, java.sql.Timestamp)] = {
+    import spark.implicits._
+    docs.map { case (id, text) => (id, text, null: java.sql.Timestamp) }
+  }
 
   test("streaming triples == batch triples on the same input") {
     import spark.implicits._
@@ -85,7 +97,7 @@ class StreamingKgSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.exactDedupStream(source.toDS())
+    val q = StreamingKg.exactDedupStream(untimed(source.toDS()))
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("stream_dedup")
       .outputMode("append").start()
@@ -119,19 +131,6 @@ class StreamingKgSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("triplesStateful rejects EventTimeTimeout up front") {
-    import spark.implicits._
-    val cfg = KgPipeline.Config("r", "op", "obj", window = 1, tokenizer = "generic")
-    // an event-time timeout needs setTimeoutTimestamp + watermark
-    // semantics this API does not model — fail at call time, not
-    // mid-stream inside the state function
-    val e = intercept[IllegalArgumentException] {
-      StreamingKg.triplesStateful(Seq.empty[Turn].toDS(), cfg, Map.empty,
-        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout())
-    }
-    assert(e.getMessage.contains("ProcessingTimeTimeout"))
-  }
-
   test("event-time stateful: watermark-based eviction drops state, late re-arrival re-extracts") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -140,8 +139,9 @@ class StreamingKgSpec extends SparkSpec {
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn]
     // 1-minute lateness tolerance, 1-minute idle gap: a conversation is
     // evicted once the watermark proves nothing within its gap can arrive
-    val out = StreamingKg.triplesStatefulEventTime(source.toDS(), cfg, g,
-      watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val out = StreamingKg.triplesStateful(source.toDS(), cfg, g,
+      timeout = GroupStateTimeout.EventTimeTimeout(), idleMs = 60000L,
+      watermarkDelay = "1 minute")
     val q = out.writeStream.format("memory").queryName("et_triples")
       .outputMode("append").start()
     val base = 1735689600000L
@@ -175,6 +175,63 @@ class StreamingKgSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("triplesStateful default processing-time eviction: idle state drops, re-arrival re-extracts") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cfg = KgPipeline.Config("r", "op", "obj", window = 1, tokenizer = "generic")
+    val g = Map("merge" -> "op", "table" -> "obj")
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn]
+    // the DEFAULT timeout (ProcessingTimeTimeout) with a 1 ms idle: any
+    // later batch finds the conversation expired. processAllAvailable()
+    // never returns under a processing-time timeout — poll the sink.
+    val out = StreamingKg.triplesStateful(source.toDS(), cfg, g, idleMs = 1L)
+    val q = out.writeStream.format("memory").queryName("pt_triples")
+      .outputMode("append").start()
+    def awaitRows(n: Long): Unit = {
+      val deadline = System.currentTimeMillis() + 60000
+      while (spark.table("pt_triples").count() < n &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(spark.table("pt_triples").count() >= n, s"timed out waiting for $n rows")
+    }
+    def turn(c: String, i: Int, text: String) =
+      Turn(c, i, "user", text, None, new java.sql.Timestamp(1735689600000L + i))
+    try {
+      source.addData(turn("cA", 0, "please merge it"), turn("cA", 1, "into the table"))
+      awaitRows(1)
+      Thread.sleep(200) // idle past the timeout; eviction fires on a later batch
+      // the same turns again: evicted state forgot the emitted key, so the
+      // same canonical key is extracted once more
+      source.addData(turn("cA", 0, "please merge it"), turn("cA", 1, "into the table"))
+      awaitRows(2)
+      val rows = spark.table("pt_triples")
+        .select("conv_id", "key").as[(String, String)].collect()
+      assert(rows.count(_._1 == "cA") == 2, "state must have been evicted")
+      assert(rows.map(_._2).distinct.length == 1)
+    } finally q.stop()
+  }
+
+  test("only EventTimeTimeout installs a watermark, for every operator") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cfg = KgPipeline.Config("r", "op", "obj", window = 1, tokenizer = "generic")
+    val turns = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn].toDS()
+    val docs = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, java.sql.Timestamp)].toDS()
+    def operators(timeout: GroupStateTimeout): Seq[(String, Dataset[_])] = Seq(
+      "triplesStateful" -> StreamingKg.triplesStateful(turns, cfg, gaz, timeout = timeout),
+      "exactDedupStream" -> StreamingKg.exactDedupStream(docs, timeout = timeout),
+      "simhashPairsStream" -> StreamingKg.simhashPairsStream(docs, timeout = timeout),
+      "minhashCandidatesStream" ->
+        StreamingKg.minhashCandidatesStream(docs, timeout = timeout))
+    def watermarks(ds: Dataset[_]): Int =
+      ds.queryExecution.analyzed.collect { case w: EventTimeWatermark => w }.size
+    for (timeout <- Seq(GroupStateTimeout.NoTimeout(),
+      GroupStateTimeout.ProcessingTimeTimeout()); (name, ds) <- operators(timeout))
+      assert(watermarks(ds) == 0, s"$name under $timeout has a watermark")
+    for ((name, ds) <- operators(GroupStateTimeout.EventTimeTimeout()))
+      assert(watermarks(ds) == 1, s"$name under EventTimeTimeout: ${watermarks(ds)}")
+  }
+
   test("streaming simhash pairs == batch simhashPairs on the accumulated corpus") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -185,7 +242,7 @@ class StreamingKgSpec extends SparkSpec {
     val d4 = (0 until 40).map(i => s"other$i").mkString(" ") // unrelated
     val corpus = Seq((1L, d1), (2L, d4), (3L, d2), (4L, d3))
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.simhashPairsStream(source.toDS(), maxHamming = 16)
+    val q = StreamingKg.simhashPairsStream(untimed(source.toDS()), maxHamming = 16)
       .toDF("a", "b", "hamming")
       .writeStream.format("memory").queryName("stream_simhash")
       .outputMode("append").start()
@@ -230,7 +287,7 @@ class StreamingKgSpec extends SparkSpec {
     assert(batchCands.contains((1L, 4L)) && batchCands.contains((1L, 2L)))
     // streamed across two batches
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.minhashCandidatesStream(source.toDS())
+    val q = StreamingKg.minhashCandidatesStream(untimed(source.toDS()))
       .toDF("a", "b")
       .writeStream.format("memory").queryName("stream_minhash")
       .outputMode("append").start()
@@ -254,7 +311,8 @@ class StreamingKgSpec extends SparkSpec {
     // processing-time timeout registered, the engine ALWAYS schedules
     // another timeout-check batch, so processAllAvailable() never sees a
     // quiescent stream and would block forever — poll the sink instead.
-    val q = StreamingKg.exactDedupStream(source.toDS(), maxIdle = Some("1 millisecond"))
+    val q = StreamingKg.exactDedupStream(untimed(source.toDS()),
+        timeout = GroupStateTimeout.ProcessingTimeTimeout(), idleMs = 1L)
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("evict_dedup")
       .outputMode("append").start()
@@ -293,7 +351,7 @@ class StreamingKgSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      val q = StreamingKg.exactDedupStream(source.toDS())
+      val q = StreamingKg.exactDedupStream(untimed(source.toDS()))
         .toDF("doc_id", "rep_id", "is_dup")
         .writeStream.format("memory").queryName("rocks_dedup")
         .outputMode("append").start()
@@ -330,7 +388,7 @@ class StreamingKgSpec extends SparkSpec {
     val text = (0 until 30).map(i => s"boiler$i").mkString(" ")
     val docs = (1L to 40L).map(id => (id, text))
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.minhashCandidatesStream(source.toDS(), maxBucket = 4)
+    val q = StreamingKg.minhashCandidatesStream(untimed(source.toDS()), maxBucket = 4)
       .toDF("a", "b")
       .writeStream.format("memory").queryName("capped_minhash")
       .outputMode("append").start()
@@ -351,7 +409,8 @@ class StreamingKgSpec extends SparkSpec {
     val text = (0 until 30).map(i => s"tok$i").mkString(" ")
     val docs = (1L to 30L).map(id => (id, text))
     val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = StreamingKg.simhashPairsStream(source.toDS(), maxHamming = 3, maxBucket = 5)
+    val q = StreamingKg.simhashPairsStream(untimed(source.toDS()), maxHamming = 3,
+        maxBucket = 5)
       .toDF("a", "b", "hamming")
       .writeStream.format("memory").queryName("capped_simhash")
       .outputMode("append").start()
@@ -423,7 +482,7 @@ class StreamingKgSpec extends SparkSpec {
 
   test("event-time exact dedup: watermark evicts the bucket, re-ingest restarts the group") {
     // the replay-correct horizon discipline: a bucket is evicted only
-    // when the WATERMARK proves no doc within idleGap (event time) can
+    // when the WATERMARK proves no doc within idleMs (event time) can
     // still arrive — wall-clock idleness is meaningless when history
     // replays fast. Pre-eviction rows must match the PT/batch semantics.
     import spark.implicits._
@@ -432,8 +491,9 @@ class StreamingKgSpec extends SparkSpec {
     def ts(ms: Long) = new java.sql.Timestamp(ms)
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.exactDedupStreamEventTime(source.toDS(),
-        watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val q = StreamingKg.exactDedupStream(source.toDS(),
+        timeout = GroupStateTimeout.EventTimeTimeout(), idleMs = 60000L,
+        watermarkDelay = "1 minute")
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("et_dedup")
       .outputMode("append").start()
@@ -469,8 +529,9 @@ class StreamingKgSpec extends SparkSpec {
     def ts(sec: Long) = new java.sql.Timestamp(base + sec * 1000)
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.exactDedupStreamEventTime(source.toDS(),
-        watermarkDelay = "10 minutes", idleGapMs = 60000L)
+    val q = StreamingKg.exactDedupStream(source.toDS(),
+        timeout = GroupStateTimeout.EventTimeTimeout(), idleMs = 60000L,
+        watermarkDelay = "10 minutes")
       .toDF("doc_id", "rep_id", "is_dup")
       .writeStream.format("memory").queryName("et_horizon")
       .outputMode("append").start()
@@ -492,6 +553,42 @@ class StreamingKgSpec extends SparkSpec {
       assert(rows.contains((2L, 1L, true)))
       assert(rows.contains((3L, 1L, true)),
         s"late arrival shrank the horizon — bucket was evicted: $rows")
+    } finally q.stop()
+  }
+
+  test("event-time simhash horizon: a late-but-valid arrival must not shrink it") {
+    // the same horizon rule for a state whose per-group body rebuilds the
+    // state from scratch: the carried max must survive the rebuild
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val base = 1735689600000L
+    def ts(sec: Long) = new java.sql.Timestamp(base + sec * 1000)
+    val text = (0 until 40).map(i => s"t$i").mkString(" ")
+    val source = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String, java.sql.Timestamp)]
+    val q = StreamingKg.simhashPairsStream(source.toDS(),
+        timeout = GroupStateTimeout.EventTimeTimeout(), idleMs = 60000L,
+        watermarkDelay = "10 minutes")
+      .toDF("a", "b", "hamming")
+      .writeStream.format("memory").queryName("et_simhash_horizon")
+      .outputMode("append").start()
+    try {
+      source.addData((1L, text, ts(600)))            // anchor at t=600s
+      q.processAllAvailable()
+      source.addData((2L, text, ts(60)))             // LATE valid arrival
+      q.processAllAvailable()
+      // noise pushes the watermark past (late + gap) but NOT past
+      // (anchor + gap): a shrunk horizon would evict here
+      source.addData((50L, "noise a", ts(720)))
+      q.processAllAvailable()
+      source.addData((51L, "noise b", ts(780)))
+      q.processAllAvailable()
+      source.addData((3L, text, ts(640)))
+      q.processAllAvailable()
+      val pairs = spark.table("et_simhash_horizon").select("a", "b").distinct()
+        .as[(Long, Long)].collect().toSet
+      assert(pairs == Set((1L, 2L), (1L, 3L), (2L, 3L)),
+        s"late arrival shrank the horizon — buckets were evicted: $pairs")
     } finally q.stop()
   }
 
@@ -518,8 +615,9 @@ class StreamingKgSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.minhashCandidatesStreamEventTime(source.toDS(),
-        watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val q = StreamingKg.minhashCandidatesStream(source.toDS(),
+        timeout = GroupStateTimeout.EventTimeTimeout(), idleMs = 60000L,
+        watermarkDelay = "1 minute")
       .toDF("a", "b")
       .writeStream.format("memory").queryName("et_minhash")
       .outputMode("append").start()
@@ -555,8 +653,9 @@ class StreamingKgSpec extends SparkSpec {
     val text = (0 until 40).map(i => s"t$i").mkString(" ")
     val source = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingKg.simhashPairsStreamEventTime(source.toDS(),
-        watermarkDelay = "1 minute", idleGapMs = 60000L)
+    val q = StreamingKg.simhashPairsStream(source.toDS(),
+        timeout = GroupStateTimeout.EventTimeTimeout(), idleMs = 60000L,
+        watermarkDelay = "1 minute")
       .toDF("a", "b", "hamming")
       .writeStream.format("memory").queryName("et_simhash")
       .outputMode("append").start()
