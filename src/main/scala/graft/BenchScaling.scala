@@ -1,18 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-efficiency evidence for the north_rule criterion
   * (throughput scaling ≥ 0.8 from N to 4N executors), using the sandbox
-  * proxy prescribed by the driver: the SAME job at local[8] vs local[32]
-  * on identical input.
+  * proxy: the SAME job at local[cores/4] vs local[cores] (all of this
+  * machine's cores) on identical input.
   *
   * Input: seeded synthetic transcripts (no external data), large enough
   * that fixed plan/JVM overhead is amortized. The job is the fused
   * one-shuffle extraction pipeline (KgPipeline.triples, stub scoring) —
   * the same operator the turns/sec headline measures.
   *
-  * Usage: `runMain graft.BenchScaling [nConvs] [turnsPerConv]`
+  * Usage: `runMain graft.BenchScaling [nConvs] [turnsPerConv] [cpuList] [reps]`
   * Prints one JSON line; paste/record into BENCH.md.
   */
 object BenchScaling {
@@ -23,9 +21,12 @@ object BenchScaling {
     "db_users" -> "e_res", "db_orders" -> "e_res", "idx_docs" -> "e_res",
     "topic_events" -> "e_res", "cache_main" -> "e_res")
 
+  /** This machine's cores, read before any pin narrows the JVM's mask. */
+  private val cores = Runtime.getRuntime.availableProcessors
+
   /** Pin ALL threads of this JVM to the first `cpus` cores — makes
     * local[N] behave like an N-core machine (GC and memory pressure
-    * included) instead of an N-task-slot slice of a 32-core box, while
+    * included) instead of an N-task-slot slice of the whole box, while
     * keeping one warm JIT across measurements.
     */
   private def pin(cpus: Int): Unit = {
@@ -37,15 +38,9 @@ object BenchScaling {
 
   def run(cpus: Int, nConvs: Int, turns: Int): (Long, Double) = {
     pin(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-scaling-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus * 2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get(cpus)
+    // KgPipeline.triples sizes its one shuffle from this value
+    spark.conf.set("spark.sql.shuffle.partitions", cpus * 2)
     // input materialized to parquet once (see main): the measured job is
     // scan → pipeline, like production — generation cost excluded
     import spark.implicits._
@@ -66,9 +61,7 @@ object BenchScaling {
     val t = math.min(once(), once())
     val total = nConvs.toLong * turns
     spark.stop()
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    pin(32)
+    pin(cores)
     (total, total / t)
   }
 
@@ -76,10 +69,7 @@ object BenchScaling {
     s"${System.getProperty("java.io.tmpdir")}/graft_scaling_${nConvs}_$turns"
 
   private def materializeInput(nConvs: Int, turns: Int): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get(cores)
     val path = inputPath(nConvs, turns)
     val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -88,8 +78,6 @@ object BenchScaling {
         .repartition(64).write.mode("overwrite").parquet(path)
     }
     spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
   }
 
   def main(args: Array[String]): Unit = {
@@ -99,9 +87,10 @@ object BenchScaling {
     materializeInput(math.max(nConvs / 10, 1000), turns) // warmup input
     // interleaved repetitions inside ONE warm JVM: JIT state is shared,
     // order bias cancels, best-per-level is the achievable throughput
-    val cpuList = if (args.length > 2) args(2).split(",").map(_.toInt).toSeq else Seq(8, 32)
+    val cpuList = if (args.length > 2) args(2).split(",").map(_.toInt).toSeq
+      else Seq(math.max(1, cores / 4), cores)
     val reps = if (args.length > 3) args(3).toInt else 3
-    run(32, math.max(nConvs / 10, 1000), turns) // global JIT/codegen warmup, unmeasured
+    run(cores, math.max(nConvs / 10, 1000), turns) // global JIT/codegen warmup, unmeasured
     var n = 0L
     val best = scala.collection.mutable.Map.empty[Int, Double]
     (1 to reps).foreach { _ =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.model.Tok
 import graft.nlp.TextOps
 import graft.ops._
@@ -86,12 +85,7 @@ object FreezeModels {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "src/test/resources/models"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
     val crf = Crf.train(crfGold(0 until 40), epochs = 5)
     ModelIO.saveCrf(spark, crf, s"$out/frozen_crf")
     val linear = RelationScoring.train(linearTrain(0 until 60, relationCfg), epochs = 8)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entry for the checkpointed KG materialization:
   * `graft.Materialize <sfDir> <outputRoot> [--with-eval]
   * [--with-curation]` — runs (or resumes) the transcripts → mentions →
@@ -19,15 +17,7 @@ object Materialize {
     val Array(sfDir, root) = args.take(2)
     val withEval = args.contains("--with-eval")
     val withCuration = args.contains("--with-curation")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get()
     val reports = ops.Stages.materializeAll(spark, sfDir, root) ++
       (if (withEval)
          ops.Stages.materializeMentionEval(spark, sfDir, root) ++
