@@ -14,6 +14,8 @@ package graft
   */
 object Materialize {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2 && !args.take(2).exists(_.startsWith("--")),
+      "usage: graft.Materialize <sfDir> <outputRoot> [--with-eval] [--with-curation]")
     val Array(sfDir, root) = args.take(2)
     val withEval = args.contains("--with-eval")
     val withCuration = args.contains("--with-curation")

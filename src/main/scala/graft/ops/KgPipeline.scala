@@ -239,17 +239,26 @@ object KgPipeline {
     * positives — the reference's pred_target is binary, so either choice
     * is a valid confidence surrogate; downstream consumers should treat
     * score as "a positive margin", not "the best margin".
+    *
+    * `decided` are keys a caller has already emitted (the stateful
+    * stream's emitted keys): they join the short-circuit, so their pairs
+    * are never scored and they never appear in the output. The rows of
+    * every other key are exactly those of a call without `decided` — same
+    * pair order, same conversation-level counts, same first positive.
+    * The batch path passes none: the empty set answers without hashing,
+    * so a pair still costs one hash lookup.
     */
   def processConversation(
       convId: String,
       turns: Seq[Turn],
       cfg: Config,
       tagger: IndexedSeq[Tok] => Seq[(String, Int, Int)],
-      scorer: Option[RelationScoring.LinearModel]): Vector[TripleRow] = {
+      scorer: Option[RelationScoring.LinearModel],
+      decided: Set[String] = Set.empty): Vector[TripleRow] = {
 
     val out = scala.collection.mutable.HashMap.empty[String, TripleRow]
     foreachCandidate(convId, turns, cfg, tagger, withFeatures = false, scorer,
-      skipKey = out.contains) { c =>
+      skipKey = key => decided(key) || out.contains(key)) { c =>
       if (c.score > 0) {
         out.update(c.key, TripleRow(convId, c.turn1, cfg.relType,
           s"${c.m1.class_id}|${c.m1.text.toLowerCase}",

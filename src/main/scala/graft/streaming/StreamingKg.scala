@@ -56,9 +56,12 @@ object StreamingKg {
     *
     *  - state = accumulated turns (deduped on turn_idx, first write
     *    wins) + already-emitted triple keys,
-    *  - each batch re-runs the pure per-conversation extraction over the
-    *    accumulated turns and emits ONLY new keys (append-mode-safe,
-    *    exactly-once per key under the streaming checkpoint),
+    *  - each batch runs the pure per-conversation extraction over the
+    *    accumulated turns but scores only pairs of keys that are still
+    *    open: the emitted keys feed the positive-key short-circuit, so
+    *    only new keys come out (append-mode-safe, exactly-once per key
+    *    under the streaming checkpoint) and a batch that re-delivers
+    *    stored turns runs no extraction at all,
     *  - idle conversations are evicted under `timeout` ([[evicting]]):
     *    by default after `idleMs` of processing time, so state is
     *    bounded by ACTIVE conversations × bounded turns; under
@@ -91,9 +94,12 @@ object StreamingKg {
   }
 
   /** Per-group body of [[triplesStateful]]: merge the arriving turns
-    * into the accumulated state (first write per turn_idx wins), re-run
-    * the pure per-conversation extraction, emit only not-yet-emitted
-    * keys, and update the state.
+    * into the accumulated state (first write per turn_idx wins), run the
+    * pure per-conversation extraction with the already-emitted keys fed
+    * into its positive-key short-circuit (their pairs are never scored,
+    * so every row it returns is new), and update the state. A batch that
+    * only re-delivers stored turns cannot yield a new key: it returns
+    * nothing and leaves the state as it is.
     */
   private def mergeAndExtract(convId: String, newTurns: Seq[Turn],
                               state: GroupState[ConvState],
@@ -103,16 +109,18 @@ object StreamingKg {
   : Iterator[TripleRow] = {
     val prev = state.getOption.getOrElse(ConvState(Nil, Set.empty))
     val seen = prev.turns.map(_.turn_idx).toSet
-    val merged = prev.turns ++
-      newTurns.filterNot(t => seen(t.turn_idx)).distinctBy(_.turn_idx)
-    val tagger: IndexedSeq[graft.model.Tok] => Seq[(String, Int, Int)] =
-      toks => toks.flatMap(t =>
-        gaz.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
-    val all = KgPipeline.processConversation(convId, merged, cfg,
-      tagger, scorer)
-    val fresh = all.filterNot(t => prev.emittedKeys(t.key))
-    state.update(ConvState(merged, prev.emittedKeys ++ fresh.map(_.key)))
-    fresh.iterator
+    val arrived = newTurns.filterNot(t => seen(t.turn_idx)).distinctBy(_.turn_idx)
+    if (arrived.isEmpty) Iterator.empty
+    else {
+      val merged = prev.turns ++ arrived
+      val tagger: IndexedSeq[graft.model.Tok] => Seq[(String, Int, Int)] =
+        toks => toks.flatMap(t =>
+          gaz.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
+      val fresh = KgPipeline.processConversation(convId, merged, cfg,
+        tagger, scorer, decided = prev.emittedKeys)
+      state.update(ConvState(merged, prev.emittedKeys ++ fresh.map(_.key)))
+      fresh.iterator
+    }
   }
 
   /** Default `idleMs` of every operator: 30 minutes. */

@@ -121,6 +121,31 @@ class KgPipelineSpec extends SparkSpec {
     assert(r >= 0.9, s"recall=$r (tp=$tp fp=$fp fn=$fn)")
   }
 
+  test("processConversation with decided keys == full output minus their rows") {
+    val model = ModelIO.loadLinear(spark, "src/test/resources/models/frozen_linear")
+    val cfg = graft.FreezeModels.relationCfg
+    val tagger = graft.FreezeModels.dictTagger
+    val rng = new scala.util.Random(7)
+    var negatives = 0
+    (0 until 40).foreach { c =>
+      val id = f"conv_$c%06d"
+      val turns = (0 until 5).map(t => Transcripts.syntheticTurn(c, t, 42L))
+      negatives += KgPipeline.candidateEdges(id, turns, cfg, tagger,
+        withFeatures = false, scorer = Some(model)).count(_.score <= 0)
+      val full = KgPipeline.processConversation(id, turns, cfg, tagger, Some(model))
+      val keys = full.map(_.key).distinct
+      (0 until 4).foreach { _ =>
+        val decided = keys.filter(_ => rng.nextBoolean()).toSet
+        assert(KgPipeline.processConversation(id, turns, cfg, tagger, Some(model), decided) ==
+          full.filterNot(r => decided(r.key)), s"$id decided=$decided")
+      }
+      assert(KgPipeline.processConversation(id, turns, cfg, tagger, Some(model),
+        keys.toSet).isEmpty)
+    }
+    // the model rejects some pairs, so open keys can need several pairs
+    assert(negatives > 0)
+  }
+
   test("fused pipeline pins its shuffle parallelism (AQE-coalesce regression guard)") {
     // the conv_id shuffle is byte-light but the downstream stage is
     // CPU-heavy: size-based AQE coalescing must NOT be able to fold it

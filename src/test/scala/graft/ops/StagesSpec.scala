@@ -169,4 +169,12 @@ class StagesSpec extends SparkSpec {
     assert(!skipped("splits") && !skipped("curation"))
     assert(rows(spark.read.parquet(s"$root/splits")) == durableSplits)
   }
+
+  test("graft.Materialize without <sfDir> <outputRoot> fails with its usage line") {
+    for (args <- Seq(Array.empty[String], Array("sf"), Array("--with-eval", "sf", "out"))) {
+      val e = intercept[IllegalArgumentException](graft.Materialize.main(args))
+      assert(e.getMessage.contains("usage: graft.Materialize <sfDir> <outputRoot>"),
+        e.getMessage)
+    }
+  }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.model.Turn
-import graft.ops.{KgPipeline, Transcripts}
+import graft.model.{TripleRow, Turn}
+import graft.ops.{KgPipeline, RelationScoring, Transcripts}
 import java.nio.file.Files
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
@@ -91,6 +91,78 @@ class StreamingKgSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table("stateful_triples").count() == 2)
     } finally q.stop()
+  }
+
+  test("stateful rows == per-batch fold of processConversation minus earlier keys") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val cfg = KgPipeline.Config("r_uses", "e_svc", "e_res", window = 1, tokenizer = "generic")
+    // score = count of the subject's mentions in the conversation - 2.5:
+    // a key stays open until its subject has been mentioned three times,
+    // so its pairs score negative in early batches and positive later
+    val w = new Array[Double](RelationScoring.Dims)
+    w(RelationScoring.h("f_entity1_count")) = 1.0
+    val model = RelationScoring.LinearModel(w, b = -2.5)
+    def turn(c: String, i: Int, text: String) =
+      Turn(c, i, "user", text, None, new java.sql.Timestamp(1735689600000L + i))
+    val batches: Seq[Seq[Turn]] = Seq(
+      // turn 2 arrives before turns 0 and 1
+      Seq(turn("cA", 2, "svc_auth calls db_orders")),
+      Seq(turn("cA", 0, "svc_auth reads db_users"),
+        turn("cA", 1, "then svc_auth and job_etl wait"),
+        turn("cB", 0, "job_etl updates cache_main")),
+      // a re-delivered turn with other text: the first write wins
+      Seq(turn("cA", 1, "svc_auth svc_auth queries idx_docs"),
+        turn("cB", 1, "job_etl joins topic_events")),
+      Seq(turn("cA", 3, "job_etl reads db_users and job_etl calls idx_docs"),
+        turn("cB", 2, "job_etl writes cache_main")),
+      Seq(turn("cB", 2, "job_etl writes cache_main")))
+
+    // the fold: per batch, processConversation over each touched
+    // conversation's accumulated turns, minus the keys emitted earlier
+    val tagger: IndexedSeq[graft.model.Tok] => Seq[(String, Int, Int)] =
+      toks => toks.flatMap(t => gaz.get(t.word.toLowerCase).map(c => (c, t.begin, t.end)))
+    val acc = scala.collection.mutable.Map.empty[String, Vector[Turn]]
+    val emitted = scala.collection.mutable.Map.empty[String, Set[String]]
+    val opened = scala.collection.mutable.Set.empty[(String, String)]
+    var reopened = Set.empty[(String, String)]
+    val expected = batches.flatMap { b =>
+      b.groupBy(_.conv_id).toSeq.sortBy(_._1).flatMap { case (c, ts) =>
+        val prev = acc.getOrElse(c, Vector.empty)
+        val merged = prev ++ ts.filterNot(t => prev.exists(_.turn_idx == t.turn_idx))
+          .distinctBy(_.turn_idx)
+        acc(c) = merged
+        val done = emitted.getOrElse(c, Set.empty)
+        val fresh = KgPipeline.processConversation(c, merged, cfg, tagger, Some(model))
+          .filterNot(r => done(r.key))
+        emitted(c) = done ++ fresh.map(_.key)
+        reopened ++= fresh.map(r => (c, r.key)).filter(opened)
+        opened ++= KgPipeline.processConversation(c, merged, cfg, tagger, None)
+          .map(r => (c, r.key))
+        fresh
+      }
+    }
+    // the input exercises the case: some key was a candidate that scored
+    // negative in an earlier batch and is emitted later
+    assert(reopened.nonEmpty)
+
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Turn]
+    val q = StreamingKg.triplesStateful(source.toDS(), cfg, gaz, Some(model),
+        timeout = GroupStateTimeout.NoTimeout())
+      .writeStream.format("memory").queryName("stateful_fold")
+      .outputMode("append").start()
+    try {
+      batches.foreach { b => source.addData(b: _*); q.processAllAvailable() }
+      val got = spark.table("stateful_fold").as[TripleRow].collect().toSeq
+      def order(rows: Seq[TripleRow]) = rows.sortBy(r => (r.conv_id, r.key, r.turn_idx))
+      assert(order(got) == order(expected))
+    } finally q.stop()
+  }
+
+  test("ConvState's schema is unchanged: existing checkpoints still restore") {
+    assert(org.apache.spark.sql.Encoders.product[StreamingKg.ConvState].schema.simpleString ==
+      "struct<turns:array<struct<conv_id:string,turn_idx:int,role:string,text:string," +
+        "tool:string,ts:timestamp>>,emittedKeys:array<string>>")
   }
 
   test("streaming exact dedup: cross-batch rep assignment, exactly-once per doc") {
