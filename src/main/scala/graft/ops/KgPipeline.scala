@@ -245,8 +245,8 @@ object KgPipeline {
     * are never scored and they never appear in the output. The rows of
     * every other key are exactly those of a call without `decided` — same
     * pair order, same conversation-level counts, same first positive.
-    * The batch path passes none: the empty set answers without hashing,
-    * so a pair still costs one hash lookup.
+    * The batch path passes none and keeps the plain `out.contains`
+    * check: one hash lookup per pair.
     */
   def processConversation(
       convId: String,
@@ -257,8 +257,10 @@ object KgPipeline {
       decided: Set[String] = Set.empty): Vector[TripleRow] = {
 
     val out = scala.collection.mutable.HashMap.empty[String, TripleRow]
+    val skipKey: String => Boolean =
+      if (decided.isEmpty) out.contains else key => decided(key) || out.contains(key)
     foreachCandidate(convId, turns, cfg, tagger, withFeatures = false, scorer,
-      skipKey = key => decided(key) || out.contains(key)) { c =>
+      skipKey) { c =>
       if (c.score > 0) {
         out.update(c.key, TripleRow(convId, c.turn1, cfg.relType,
           s"${c.m1.class_id}|${c.m1.text.toLowerCase}",

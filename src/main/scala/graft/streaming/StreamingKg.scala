@@ -60,8 +60,7 @@ object StreamingKg {
     *    accumulated turns but scores only pairs of keys that are still
     *    open: the emitted keys feed the positive-key short-circuit, so
     *    only new keys come out (append-mode-safe, exactly-once per key
-    *    under the streaming checkpoint) and a batch that re-delivers
-    *    stored turns runs no extraction at all,
+    *    under the streaming checkpoint),
     *  - idle conversations are evicted under `timeout` ([[evicting]]):
     *    by default after `idleMs` of processing time, so state is
     *    bounded by ACTIVE conversations × bounded turns; under
@@ -97,9 +96,7 @@ object StreamingKg {
     * into the accumulated state (first write per turn_idx wins), run the
     * pure per-conversation extraction with the already-emitted keys fed
     * into its positive-key short-circuit (their pairs are never scored,
-    * so every row it returns is new), and update the state. A batch that
-    * only re-delivers stored turns cannot yield a new key: it returns
-    * nothing and leaves the state as it is.
+    * so every row it returns is new), and update the state.
     */
   private def mergeAndExtract(convId: String, newTurns: Seq[Turn],
                               state: GroupState[ConvState],
@@ -109,18 +106,15 @@ object StreamingKg {
   : Iterator[TripleRow] = {
     val prev = state.getOption.getOrElse(ConvState(Nil, Set.empty))
     val seen = prev.turns.map(_.turn_idx).toSet
-    val arrived = newTurns.filterNot(t => seen(t.turn_idx)).distinctBy(_.turn_idx)
-    if (arrived.isEmpty) Iterator.empty
-    else {
-      val merged = prev.turns ++ arrived
-      val tagger: IndexedSeq[graft.model.Tok] => Seq[(String, Int, Int)] =
-        toks => toks.flatMap(t =>
-          gaz.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
-      val fresh = KgPipeline.processConversation(convId, merged, cfg,
-        tagger, scorer, decided = prev.emittedKeys)
-      state.update(ConvState(merged, prev.emittedKeys ++ fresh.map(_.key)))
-      fresh.iterator
-    }
+    val merged = prev.turns ++
+      newTurns.filterNot(t => seen(t.turn_idx)).distinctBy(_.turn_idx)
+    val tagger: IndexedSeq[graft.model.Tok] => Seq[(String, Int, Int)] =
+      toks => toks.flatMap(t =>
+        gaz.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
+    val fresh = KgPipeline.processConversation(convId, merged, cfg,
+      tagger, scorer, decided = prev.emittedKeys)
+    state.update(ConvState(merged, prev.emittedKeys ++ fresh.map(_.key)))
+    fresh.iterator
   }
 
   /** Default `idleMs` of every operator: 30 minutes. */

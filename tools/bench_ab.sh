@@ -1,7 +1,7 @@
 #!/bin/bash
 # A/B benchmark of this working tree against a base revision:
 #
-#   tools/bench_ab.sh <base-rev> <workload> [rounds=5] [seed=1]
+#   tools/bench_ab.sh <base-rev> <workload> [rounds=10] [seed=1]
 #
 # Checks <base-rev> out as a git worktree under ${TMPDIR:-/tmp}, then runs
 # `python3 perfbench/run.py --workload W --seed S --seconds 20` once on
@@ -14,10 +14,10 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 if [ $# -lt 2 ]; then
-  echo "usage: tools/bench_ab.sh <base-rev> <workload> [rounds=5] [seed=1]" >&2
+  echo "usage: tools/bench_ab.sh <base-rev> <workload> [rounds=10] [seed=1]" >&2
   exit 2
 fi
-BASE=$1 WORKLOAD=$2 ROUNDS=${3:-5} SEED=${4:-1}
+BASE=$1 WORKLOAD=$2 ROUNDS=${3:-10} SEED=${4:-1}
 HEAD_DIR=$(pwd)
 WORK=$(mktemp -d "${TMPDIR:-/tmp}/bench_ab.XXXXXX")
 cleanup() {
