@@ -203,6 +203,56 @@ class KgPipelineSpec extends SparkSpec {
     }
   }
 
+  /** SHA-256 prefix over (key, turn_idx, score bits) of every scored
+    * candidate, in emission order.
+    */
+  private def scoreDigest(rows: Seq[KgPipeline.Candidate]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    rows.foreach { c =>
+      md.update(s"${c.key}\t${c.turn1}\t${java.lang.Double.doubleToLongBits(c.score)}\n"
+        .getBytes("UTF-8"))
+    }
+    md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("score bits are pinned: docs and chat shapes under a seeded random model") {
+    val rng = new scala.util.Random(29)
+    val w = Array.fill(RelationScoring.Dims)(rng.nextDouble() - 0.5)
+    val model = RelationScoring.LinearModel(w, b = -0.25)
+    // docs shape (the kg_scored config): long single sentences over the
+    // documents vocabulary, about a quarter of the words gazetteer terms
+    val vocab = Vector("spark", "window", "merge", "table", "column", "vector", "stream",
+      "value", "data", "small", "join", "filter", "big", "group", "hash", "customer",
+      "sort", "order", "slow", "line", "part", "fast", "row", "the", "agg", "key",
+      "query", "a", "scan", "batch")
+    val docsCfg = KgPipeline.Config("r_op_obj", GazetteerTagger.OpClass,
+      GazetteerTagger.ObjClass, window = 0, tokenizer = "tmvar")
+    val gazTagger: IndexedSeq[Tok] => Seq[(String, Int, Int)] = toks =>
+      toks.flatMap(t => GazetteerTagger.gazetteer.get(t.word.toLowerCase)
+        .map(cls => (cls, t.begin, t.end)))
+    val textRng = new scala.util.Random(5)
+    val docs = (0 until 12).flatMap { c =>
+      val turns = (0 until 3).map { t =>
+        val text = Seq.fill(10 + textRng.nextInt(90))(vocab(textRng.nextInt(vocab.length)))
+          .mkString(" ")
+        Turn(f"conv_$c%06d", t, "user", text, None, new java.sql.Timestamp(0L))
+      }
+      KgPipeline.candidateEdges(f"conv_$c%06d", turns, docsCfg, gazTagger,
+        withFeatures = false, scorer = Some(model))
+    }
+    // chat shape with window = 1: cross-context pairs over combined parses
+    val chatCfg = KgPipeline.Config(RelType, SubjClass, ObjClass, window = 1,
+      tokenizer = "generic")
+    val chat = (0 until 30).flatMap { c =>
+      val turns = (0 until 5).map(t => Transcripts.syntheticTurn(c, t, 42L))
+      KgPipeline.candidateEdges(f"conv_$c%06d", turns, chatCfg, dictTagger,
+        withFeatures = false, scorer = Some(model))
+    }
+    assert(chat.exists(!_.sameSentence))
+    assert((docs.length, scoreDigest(docs)) == ((2013, "bc736b75150d3e2e")))
+    assert((chat.length, scoreDigest(chat)) == ((270, "5dc5388612f43beb")))
+  }
+
   test("tmvar fast path == cascade on mixed content") {
     val samples = Seq("plain lowercase words only", "Mixed Case c.2708_2711delTTAG",
       "digits 123abc", "naive caf text", "a, b; c!", "")

@@ -163,6 +163,14 @@ class RelationFeaturesSpec extends SparkSpec {
     assert(ls2.count(_ == "neg") == 2)
   }
 
+  test("feature-name hash indices are pinned (the committed weights' index space)") {
+    val pinned = Seq("same_sent" -> 65826, "f_bow=table" -> 124163,
+      "pd_full_1g=[S nsubj-B" -> 106956, "pd_dir_2g=nsubj-B~dobj-F" -> 113771,
+      "e1_chain_dep_dist_3_-fw_nsubj" -> 44660, "h1_3g=mer" -> 126408,
+      "ne_count_e_op_3" -> 63348, "café中" -> 204675)
+    pinned.foreach { case (name, idx) => assert(RelationScoring.h(name) == idx, name) }
+  }
+
   test("distributed salted doc counts == fused group-local counts") {
     import spark.implicits._
     // mentions as the fused pipeline would tag them
