@@ -70,6 +70,69 @@ object RelationScoring {
     ((hh % Dims) + Dims).toInt % Dims
   }
 
+  /** [[h]] as a left fold: `h(a ++ b) == index(fold(fold(FnvOffset, a), b))`,
+    * so a name's index can be computed part by part, continuing from the
+    * precomputed state of its constant prefix.
+    */
+  private[graft] final val FnvOffset = 0xcbf29ce484222325L
+  private[graft] def fold(state: Long, s: String, from: Int, until: Int): Long = {
+    var hh = state
+    var i = from
+    while (i < until) {
+      hh = (hh ^ (s.charAt(i) & 0xffL)) * 0x100000001b3L
+      i += 1
+    }
+    hh
+  }
+  private[graft] def fold(state: Long, s: String): Long = fold(state, s, 0, s.length)
+  private[graft] def fold(state: Long, c: Char): Long = (state ^ (c & 0xffL)) * 0x100000001b3L
+  private[graft] def index(state: Long): Int = ((state % Dims) + Dims).toInt % Dims
+
+  /** A constant name or name prefix with its FNV-1a state precomputed. */
+  private[graft] final class Prefix(val text: String) {
+    val state: Long = fold(FnvOffset, text)
+  }
+
+  /** Receives [[enumerate]]'s features part by part: `start` opens a name
+    * at a constant prefix, `part`/`char` extend it, `emit` closes it with
+    * its value. The two sinks see the same parts, so the Map path's names
+    * hash to exactly the indices the scoring path folds.
+    */
+  private abstract class NameSink {
+    def start(p: Prefix): Unit
+    def part(s: String): Unit
+    def part(s: String, from: Int, until: Int): Unit
+    def char(c: Char): Unit
+    def emit(v: Double): Unit
+  }
+
+  /** Builds each name and sums values per name (training, tests). */
+  private final class MapSink extends NameSink {
+    private val nb = new java.lang.StringBuilder(96)
+    val out = scala.collection.mutable.HashMap.empty[String, Double]
+    def start(p: Prefix): Unit = { nb.setLength(0); nb.append(p.text) }
+    def part(s: String): Unit = nb.append(s)
+    def part(s: String, from: Int, until: Int): Unit = nb.append(s, from, until)
+    def char(c: Char): Unit = nb.append(c)
+    def emit(v: Double): Unit = {
+      val f = nb.toString
+      out.update(f, out.getOrElse(f, 0.0) + v)
+    }
+  }
+
+  /** Folds each name's FNV state and adds w(index) * v to the score in
+    * enumeration order; no name is ever assembled.
+    */
+  private final class ScoreSink(w: Array[Double], b: Double) extends NameSink {
+    private var st = 0L
+    var score: Double = b
+    def start(p: Prefix): Unit = st = p.state
+    def part(s: String): Unit = st = fold(st, s)
+    def part(s: String, from: Int, until: Int): Unit = st = fold(st, s, from, until)
+    def char(c: Char): Unit = st = fold(st, c)
+    def emit(v: Double): Unit = score += w(index(st)) * v
+  }
+
   /** Per-edge context beyond the sentence: mentions of the edge's
     * sentence(s) (combined-token coordinates) and the document-level
     * counts of `relations/new/sentence.py:140-171`:
@@ -106,28 +169,25 @@ object RelationScoring {
   def features(prep: SentencePrep, m1: Mention, m2: Mention,
       sameSentence: Boolean, sentDist: Int,
       ctx: EdgeCtx): Map[String, Double] = {
-    val out = scala.collection.mutable.HashMap.empty[String, Double]
-    enumerate(prep, m1, m2, sameSentence, sentDist, ctx) { (cs, v) =>
-      val f = cs.toString
-      out.update(f, out.getOrElse(f, 0.0) + v)
-    }
-    out.toMap
+    val sink = new MapSink
+    enumerate(prep, m1, m2, sameSentence, sentDist, ctx, sink)
+    sink.out.toMap
   }
 
   /** Zero-materialization scoring: identical feature enumeration, each
-    * (name, value) folded straight into w·x — no map, no vector, no
-    * sort. This is the inference hot path (GC-bound at 32 threads
-    * otherwise).
+    * feature folded straight into w·x — no map, no vector, no sort, and
+    * no name: its index is the FNV-1a fold continued from the constant
+    * prefix's precomputed state over the remaining parts. This is the
+    * inference hot path; the score equals `model.score(hashFeats(
+    * features(...)))` up to summation order.
     */
   def scoreEdge(model: LinearModel, prep: SentencePrep,
       m1: Mention, m2: Mention,
       sameSentence: Boolean, sentDist: Int,
       ctx: EdgeCtx = EdgeCtx.empty): Double = {
-    var s = model.b
-    enumerate(prep, m1, m2, sameSentence, sentDist, ctx) { (f, v) =>
-      s += model.w(h(f)) * v
-    }
-    s
+    val sink = new ScoreSink(model.w, model.b)
+    enumerate(prep, m1, m2, sameSentence, sentDist, ctx, sink)
+    sink.score
   }
 
   /** Per-sentence memoized tables shared across all candidate pairs of
@@ -176,18 +236,51 @@ object RelationScoring {
       else DepGraph.depLabels(toks, heads)
     // labeled-dependency form (`data.py:1106-1118`): odd # of `neg` deps
     lazy val negated: Boolean = DepGraph.isNegatedLabeled(depLabels)
+    private val stemLowerCache = new Array[String](toks.length)
+    def stemLower(i: Int): String = {
+      if (stemLowerCache(i) == null) stemLowerCache(i) = Porter.stem(lower(i))
+      stemLowerCache(i)
+    }
     lazy val mainVerbStems: List[String] = {
       val rootIdx = depth.indices.find(depth(_) == 0).getOrElse(0)
-      DepGraph.mainVerbs(toks, adj, rootIdx)
-        .map(v => Porter.stem(toks(v).word.toLowerCase)).toList
+      DepGraph.mainVerbs(toks, adj, rootIdx).map(stemLower).toList
     }
-    private val headCache = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
+    // stems of masked entity tokens: a class id or a masked word
+    private val maskStems = scala.collection.mutable.HashMap.empty[String, String]
+    def stemOfMask(masked: String): String =
+      maskStems.getOrElseUpdate(masked, Porter.stem(masked))
+    // (Int, Int) keys packed into one Long: no tuple, no boxing on lookup
+    private val headCache = scala.collection.mutable.LongMap.empty[Int]
     def head(begin: Int, end: Int): Int =
-      headCache.getOrElseUpdate((begin, end),
+      headCache.getOrElseUpdate((begin.toLong << 32) | (end & 0xffffffffL),
         DepGraph.entityHead(toks, depth, begin, end))
-    private val pathCache = scala.collection.mutable.HashMap.empty[(Int, Int), Vector[Int]]
+    private val pathCache = scala.collection.mutable.LongMap.empty[Vector[Int]]
     def path(a: Int, b: Int): Vector[Int] =
-      pathCache.getOrElseUpdate((a, b), DepGraph.shortestPath(adj, a, b))
+      pathCache.getOrElseUpdate((a.toLong << 32) | (b & 0xffffffffL),
+        DepGraph.shortestPath(adj, a, b))
+
+    /** The pair-independent tables of the sentence's mentions: per token,
+      * the class of the first mention containing it (null if none), and
+      * the (class, mention count) list in class order. Kept for the last
+      * mention list seen; every pair of a sentence passes the same one.
+      */
+    final class MentionTables(ms: Seq[Mention]) {
+      val classOf: Array[String] = Array.tabulate(toks.length) { i =>
+        val t = toks(i)
+        ms.find(m => t.begin >= m.begin && t.end <= m.end).map(_.class_id).orNull
+      }
+      val classCounts: Array[(String, Int)] =
+        ms.groupBy(_.class_id).toArray.map { case (c, g) => (c, g.size) }.sortBy(_._1)
+    }
+    private var tablesFor: Seq[Mention] = null
+    private var tables: MentionTables = null
+    def mentionTables(ms: Seq[Mention]): MentionTables = {
+      if (tables == null || (tablesFor ne ms)) {
+        tables = new MentionTables(ms)
+        tablesFor = ms
+      }
+      tables
+    }
 
     /** children(i) = tokens whose head is i (excluding the root's
       * self-loop) — precomputed once so chain walks don't scan the heads
@@ -287,35 +380,136 @@ object RelationScoring {
     "same", "so", "than", "too", "very", "can", "will", "just", "should",
     "now")
 
+  /** Constant prefixes of entity side `n` (1 or 2): its head surface
+    * (`hN_`), its own tokens (`eN_`) and its dependency chains
+    * (`eN_..._d_`, indexed by the visit's remaining depth 1..3).
+    */
+  private final class SideNames(n: Int) {
+    val headStem = new Prefix(s"h${n}_stem=")
+    val headPos = new Prefix(s"h${n}_pos=")
+    val headCap = new Prefix(s"h${n}_cap")
+    val headDigits = new Prefix(s"h${n}_digits")
+    val headPunct = new Prefix(s"h${n}_punct")
+    val headGram: Array[Prefix] = Array.tabulate(4)(g => new Prefix(s"h${n}_${g}g="))
+    val txt = new Prefix(s"e${n}_txt=")
+    val pos = new Prefix(s"e${n}_pos=")
+    val masked = new Prefix(s"e${n}_masked=")
+    val stemMasked = new Prefix(s"e${n}_stem_masked=")
+    val ann = new Prefix(s"e${n}_ann=")
+    val marker = s"entity${n}_"
+    private def byDepth(f: Int => String) = Array.tabulate(4)(d => new Prefix(f(d)))
+    val depFrom: Array[Prefix] = byDepth(d => s"e${n}_dep_dist_${d}_from_")
+    val depTo: Array[Prefix] = byDepth(d => s"e${n}_dep_dist_${d}_to_")
+    val chain: Array[Prefix] = byDepth(d => s"e${n}_chain_dep_dist_${d}_")
+    val distTxt: Array[Prefix] = byDepth(d => s"e${n}_dist_${d}_txt=")
+    val distPos: Array[Prefix] = byDepth(d => s"e${n}_dist_${d}_pos=")
+    val distMasked: Array[Prefix] = byDepth(d => s"e${n}_dist_${d}_masked=")
+    val distAnnEntity: Array[Prefix] = byDepth(d => s"e${n}_dist_${d}_ann_entity")
+    val distAnnType: Array[Prefix] = byDepth(d => s"e${n}_dist_${d}_ann_type=")
+  }
+
+  /** Constant prefixes of the `ld` or `pd` path: n-gram prefixes indexed
+    * by n (1..4), token counts and negation.
+    */
+  private final class PathNames(name: String) {
+    private def byN(kind: String) = Array.tabulate(5)(n => new Prefix(s"${name}_${kind}_${n}g="))
+    val bow: Array[Prefix] = byN("bow")
+    val pos: Array[Prefix] = byN("pos")
+    val undir: Array[Prefix] = byN("undir")
+    val dir: Array[Prefix] = byN("dir")
+    val full: Array[Prefix] = byN("full")
+    val tokensCount = new Prefix(name + "_tokens_count")
+    val tokensCountNoPunct = new Prefix(name + "_tokens_count_nopunct")
+    val isNegated = new Prefix(name + "_is_negated")
+  }
+
+  /** Intermediate-token prefixes: `it_fwd_`, `it_bkd_` or undirected `it_`. */
+  private final class BetweenNames(dir: String) {
+    val bow = new Prefix(s"it_${dir}bow=")
+    val masked = new Prefix(s"it_${dir}masked=")
+    val stem = new Prefix(s"it_${dir}stem=")
+    val pos = new Prefix(s"it_${dir}pos=")
+  }
+
+  /** Every constant name and name prefix [[enumerate]] emits. */
+  private object N {
+    val Order = new Prefix("order=")
+    val FOrder = new Prefix("f_order")
+    val SameSent = new Prefix("same_sent")
+    val SentDist = new Prefix("sent_dist=")
+    val CountsInd = new Prefix("f_counts_ind=")
+    val CountsTotal = new Prefix("f_counts_total")
+    val CountsBet = new Prefix("f_counts_bet=")
+    val CountsBetTotal = new Prefix("f_counts_bet_total")
+    val Bow = new Prefix("f_bow=")
+    val Pos = new Prefix("f_pos=")
+    val TokensCount = new Prefix("f_tokens_count")
+    val TokensBefore = new Prefix("f_tokens_count_before")
+    val TokensAfter = new Prefix("f_tokens_count_after")
+    val NBetween = new Prefix("n_between")
+    val BowBet = new Prefix("bow_bet=")
+    val SentNegated = new Prefix("sent_negated")
+    val NoMainVerb = new Prefix("main_verb=NO_MAIN_VERB")
+    val MainVerb = new Prefix("main_verb=")
+    val Entity1Count = new Prefix("f_entity1_count")
+    val Entity2Count = new Prefix("f_entity2_count")
+    val Together = new Prefix("f_diff_sents_together_count")
+    val TokDist = new Prefix("tok_dist")
+    val TokDistGt5 = new Prefix("tok_dist_gt5")
+    val Side1 = new SideNames(1)
+    val Side2 = new SideNames(2)
+    val ItFwd = new BetweenNames("fwd_")
+    val ItBkd = new BetweenNames("bkd_")
+    val It = new BetweenNames("")
+    val NeCount = new Prefix("ne_count_")
+    val BowText = new Prefix("bow_text=")
+    val BowStem = new Prefix("bow_stem=")
+    val NeBow = new Prefix("ne_bow=")
+    val Ld = new PathNames("ld")
+    val Pd = new PathNames("pd")
+    val PdLen = new Prefix("pd_len")
+    val PdTok = new Prefix("pd_tok=")
+    val PdPos = new Prefix("pd_pos=")
+    val PdVerb = new Prefix("pd_verb=")
+    val PdUnreachable = new Prefix("pd_unreachable")
+  }
+
   /** Single source of truth for the edge feature set; both the training
     * (Map) and inference (fold) paths stream through here, so hashed
     * indices agree by construction.
+    *
+    * Each feature reaches the sink as a constant [[Prefix]] (its FNV-1a
+    * state precomputed in [[N]]) followed by its variable parts — tokens,
+    * labels, class ids, counts and the `~` / `_` / `-` / ` ` separators —
+    * so the scoring path folds the name's hash without assembling it.
+    * Pair-independent work (stems, per-token mention classes, per-class
+    * mention counts, heads, paths, chain walks) lives in [[SentencePrep]].
     */
   private def enumerate(
       prep: SentencePrep,
       m1: Mention, m2: Mention,
       sameSentence: Boolean, sentDist: Int,
-      ctx: EdgeCtx)(add0: (CharSequence, Double) => Unit): Unit = {
+      ctx: EdgeCtx, sink: NameSink): Unit = {
 
     val toks = prep.toks
-    def add(f: String, v: Double = 1.0): Unit = add0(f, v)
-    // zero-materialization name assembly: the scoring path hashes the
-    // CharSequence directly, so multi-part names never become Strings —
-    // the single reusable builder removes the dominant allocation source
-    // of the 32-thread hot path (bandwidth-stall-bound on this box)
-    val nb = new java.lang.StringBuilder(96)
-    def add2(a: String, b: String, v: Double = 1.0): Unit = {
-      nb.setLength(0); nb.append(a).append(b); add0(nb, v)
+    def add(p: Prefix, v: Double = 1.0): Unit = { sink.start(p); sink.emit(v) }
+    def add2(p: Prefix, s: String, v: Double = 1.0): Unit = {
+      sink.start(p); sink.part(s); sink.emit(v)
     }
-    def add3(a: String, b: String, c: String): Unit = {
-      nb.setLength(0); nb.append(a).append(b).append(c); add0(nb, 1.0)
+    // '~'-joined n-gram of rendered(s until s + n)
+    def gram(p: Prefix, rendered: Array[String], s: Int, n: Int): Unit = {
+      sink.start(p)
+      sink.part(rendered(s))
+      var j = 1
+      while (j < n) { sink.char('~'); sink.part(rendered(s + j)); j += 1 }
+      sink.emit(1.0)
     }
 
     val h1 = prep.head(m1.begin, m1.end)
     val h2 = prep.head(m2.begin, m2.end)
 
     def inSpan(t: Tok, m: Mention): Boolean = t.begin >= m.begin && t.end <= m.end
-    // per-pair caches: chains/paths/BOW revisit the same tokens many times
+    // per-pair cache: chains/paths/BOW revisit the same tokens many times
     val maskedCache = new Array[String](toks.length)
     def masked(i: Int): String = {
       var v = maskedCache(i)
@@ -328,21 +522,17 @@ object RelationScoring {
       }
       v
     }
+    val tables =
+      if (ctx.sentMentions.nonEmpty) prep.mentionTables(ctx.sentMentions) else null
     /** ann class of token i: the edge's entities first, then any other
       * sentence mention containing it (masked_text / ann_type semantics).
       */
-    val annCache = new Array[String](toks.length)
-    val annNone = "\u0000none"
     def annClass(i: Int): String = {
-      var v = annCache(i)
-      if (v == null) {
-        val t = toks(i)
-        v = if (inSpan(t, m1)) m1.class_id
-        else if (inSpan(t, m2)) m2.class_id
-        else ctx.sentMentions.find(m => inSpan(t, m)).map(_.class_id).getOrElse(annNone)
-        annCache(i) = v
-      }
-      if (v eq annNone) null else v
+      val t = toks(i)
+      if (inSpan(t, m1)) m1.class_id
+      else if (inSpan(t, m2)) m2.class_id
+      else if (tables == null) null
+      else tables.classOf(i)
     }
 
     // token index bounds of each mention (first/last token within span)
@@ -352,93 +542,95 @@ object RelationScoring {
     val e2First = firstTok(m2); val e2Last = lastTok(m2)
 
     // ==== SentenceFeatureGenerator (`relations/new/sentence.py`) ========
-    add(s"order=${m1.class_id}_${m2.class_id}")
-    if (m1.class_id < m2.class_id) add("f_order")
-    add(if (sameSentence) "same_sent" else s"sent_dist=$sentDist")
+    sink.start(N.Order); sink.part(m1.class_id); sink.char('_'); sink.part(m2.class_id)
+    sink.emit(1.0)
+    if (m1.class_id < m2.class_id) add(N.FOrder)
+    if (sameSentence) add(N.SameSent) else add2(N.SentDist, Integer.toString(sentDist))
 
     // entity counts in the edge's sentence(s) (`sentence.py:82-105`):
     // per class, individual = count - 1 (one is the edge's own entity)
-    if (ctx.sentMentions.nonEmpty) {
-      val byClass = ctx.sentMentions.groupBy(_.class_id)
+    if (tables != null) {
       var total = 0
-      byClass.toSeq.sortBy(_._1).foreach { case (cls, ms) =>
-        val ind = math.max(0, ms.size - 1)
+      tables.classCounts.foreach { case (cls, n) =>
+        val ind = math.max(0, n - 1)
         total += ind
-        add(s"f_counts_ind=$cls", ind.toDouble)
+        add2(N.CountsInd, cls, ind.toDouble)
       }
-      add("f_counts_total", total.toDouble)
+      add(N.CountsTotal, total.toDouble)
       // entities strictly between the pair (char-span between the
-      // earlier mention's end and the later one's begin)
+      // earlier mention's end and the later one's begin), per class in
+      // class order
       val (lo, hi) =
         if (m1.begin <= m2.begin) (m1.end, m2.begin) else (m2.end, m1.begin)
-      val between = ctx.sentMentions.filter(m => m.begin >= lo && m.end <= hi)
       var btotal = 0
-      between.groupBy(_.class_id).toSeq.sortBy(_._1).foreach { case (cls, ms) =>
-        btotal += ms.size
-        add(s"f_counts_bet=$cls", ms.size.toDouble)
+      tables.classCounts.foreach { case (cls, _) =>
+        val n = ctx.sentMentions.count(m => m.class_id == cls && m.begin >= lo && m.end <= hi)
+        if (n > 0) {
+          btotal += n
+          add2(N.CountsBet, cls, n.toDouble)
+        }
       }
-      add("f_counts_bet_total", btotal.toDouble)
+      add(N.CountsBetTotal, btotal.toDouble)
     }
 
     // masked-lemma BOW + coarse POS of the whole (combined) sentence
     // (`sentence.py:111-113`)
     var ti = 0
     while (ti < toks.length) {
-      add2("f_bow=", masked(ti))
-      add2("f_pos=", prep.pos(ti))
+      add2(N.Bow, masked(ti))
+      add2(N.Pos, prep.pos(ti))
       ti += 1
     }
-    add("f_tokens_count", toks.length.toDouble)
-    if (e1First >= 0) add("f_tokens_count_before", e1First.toDouble)
-    if (e2Last >= 0) add("f_tokens_count_after", (toks.length - 1 - e2Last).toDouble)
+    add(N.TokensCount, toks.length.toDouble)
+    if (e1First >= 0) add(N.TokensBefore, e1First.toDouble)
+    if (e2Last >= 0) add(N.TokensAfter, (toks.length - 1 - e2Last).toDouble)
 
     val between = if (h1 >= 0 && h2 >= 0) {
       val lo = math.min(h1, h2); val hi = math.max(h1, h2)
       (lo + 1 until hi)
     } else 0 until 0
-    add("n_between", between.size.toDouble)
-    between.foreach { i => add2("bow_bet=", masked(i)) }
+    add(N.NBetween, between.size.toDouble)
+    between.foreach { i => add2(N.BowBet, masked(i)) }
 
     // sentence negation + main-verb lemmas (`sentence.py:127-138`)
-    if (prep.negated) add("sent_negated")
-    if (prep.mainVerbStems.isEmpty) add("main_verb=NO_MAIN_VERB")
-    else prep.mainVerbStems.foreach { v => add2("main_verb=", v) }
+    if (prep.negated) add(N.SentNegated)
+    if (prep.mainVerbStems.isEmpty) add(N.NoMainVerb)
+    else prep.mainVerbStems.foreach { v => add2(N.MainVerb, v) }
 
     // DOCUMENT-level (`sentence.py:140-171`): per-conversation norm-key
     // frequency of each entity, distinct-sentence co-occurrence count
-    add("f_entity1_count", ctx.e1DocCount.toDouble)
-    add("f_entity2_count", ctx.e2DocCount.toDouble)
-    if (ctx.togetherCount > 0)
-      add("f_diff_sents_together_count", ctx.togetherCount.toDouble)
+    add(N.Entity1Count, ctx.e1DocCount.toDouble)
+    add(N.Entity2Count, ctx.e2DocCount.toDouble)
+    if (ctx.togetherCount > 0) add(N.Together, ctx.togetherCount.toDouble)
 
     // ==== LinearDistance / EntityOrder (`relations/context.py:5-73`) ====
     if (h1 >= 0 && h2 >= 0) {
       val d = math.abs(h1 - h2)
-      add("tok_dist", d.toDouble)
-      if (d > 5) add("tok_dist_gt5")
+      add(N.TokDist, d.toDouble)
+      if (d > 5) add(N.TokDistGt5)
     }
 
     // ==== Entity-head surface (`relations/entityhead.py:7-229`) =========
     // stem/POS + case/digit/punct flags and char 2/3-grams
-    def headSurface(prefix: String, hi: Int): Unit = if (hi >= 0) {
+    def headSurface(side: SideNames, hi: Int): Unit = if (hi >= 0) {
       val w = toks(hi).word
-      add3(prefix, "_stem=", prep.stem(hi))
-      add3(prefix, "_pos=", prep.pos(hi))
-      if (w.nonEmpty && w.head.isUpper) add(s"${prefix}_cap")
-      if (w.exists(_.isDigit)) add(s"${prefix}_digits")
-      if (w.contains('-') || w.contains('/')) add(s"${prefix}_punct")
+      add2(side.headStem, prep.stem(hi))
+      add2(side.headPos, prep.pos(hi))
+      if (w.nonEmpty && w.head.isUpper) add(side.headCap)
+      if (w.exists(_.isDigit)) add(side.headDigits)
+      if (w.contains('-') || w.contains('/')) add(side.headPunct)
       var n = 2
       while (n <= 3) {
         var i = 0
         while (i + n <= w.length) {
-          add(s"${prefix}_${n}g=${w.substring(i, i + n)}")
+          sink.start(side.headGram(n)); sink.part(w, i, i + n); sink.emit(1.0)
           i += 1
         }
         n += 1
       }
     }
-    headSurface("h1", h1)
-    headSurface("h2", h2)
+    headSurface(N.Side1, h1)
+    headSurface(N.Side2, h2)
 
     // per-token surface features of the entities' own tokens —
     // TokenFeatureGenerator.token_features (`relations/__init__.py:127-170`)
@@ -446,49 +638,45 @@ object RelationScoring {
     // text, stem of the masked text (the reference stems the mask — its
     // own TODO notes the oddity; mirrored), and annotated_types = the
     // token's entity class + entityK_class marker.
-    def entityTokenFeats(prefix: String, first: Int, last: Int,
-                         entMarker: String, cls: String): Unit =
+    def entityTokenFeats(side: SideNames, first: Int, last: Int, cls: String): Unit =
       if (first >= 0) {
         var i = first
         while (i <= last) {
-          add3(prefix, "_txt=", prep.lower(i))
-          add3(prefix, "_pos=", prep.pos(i))
-          add3(prefix, "_masked=", masked(i))
-          add3(prefix, "_stem_masked=", Porter.stem(masked(i)))
-          add3(prefix, "_ann=", cls)
-          add3(prefix, "_ann=", entMarker)
+          add2(side.txt, prep.lower(i))
+          add2(side.pos, prep.pos(i))
+          add2(side.masked, masked(i))
+          add2(side.stemMasked, prep.stemOfMask(masked(i)))
+          add2(side.ann, cls)
+          sink.start(side.ann); sink.part(side.marker); sink.part(cls); sink.emit(1.0)
           i += 1
         }
       }
-    entityTokenFeats("e1", e1First, e1Last, "entity1_" + m1.class_id, m1.class_id)
-    entityTokenFeats("e2", e2First, e2Last, "entity2_" + m2.class_id, m2.class_id)
+    entityTokenFeats(N.Side1, e1First, e1Last, m1.class_id)
+    entityTokenFeats(N.Side2, e2First, e2Last, m2.class_id)
 
     // ==== IntermediateTokens (`context.py:76-166`): tokens strictly
     // between the heads, directional (fwd when h1 < h2, bkd otherwise)
     // plus the undirected variants ================================
     if (h1 >= 0 && h2 >= 0) {
-      val pBow = if (h1 < h2) "it_fwd_bow=" else "it_bkd_bow="
-      val pMask = if (h1 < h2) "it_fwd_masked=" else "it_bkd_masked="
-      val pStem = if (h1 < h2) "it_fwd_stem=" else "it_bkd_stem="
-      val pPos = if (h1 < h2) "it_fwd_pos=" else "it_bkd_pos="
+      val it = if (h1 < h2) N.ItFwd else N.ItBkd
       between.foreach { i =>
         val w = prep.lower(i)
-        add2(pBow, w)
-        add2(pMask, masked(i))
-        add2(pStem, prep.stem(i))
-        add2(pPos, prep.pos(i))
-        add2("it_bow=", w)
-        add2("it_masked=", masked(i))
-        add2("it_stem=", prep.stem(i))
-        add2("it_pos=", prep.pos(i))
+        add2(it.bow, w)
+        add2(it.masked, masked(i))
+        add2(it.stem, prep.stem(i))
+        add2(it.pos, prep.pos(i))
+        add2(N.It.bow, w)
+        add2(N.It.masked, masked(i))
+        add2(N.It.stem, prep.stem(i))
+        add2(N.It.pos, prep.pos(i))
       }
     }
 
     // ==== NamedEntityCount (`relations/sentence.py:6-30`): count of
     // same-class entities in the edge's sentence(s), count in the name ==
-    if (ctx.sentMentions.nonEmpty) {
-      ctx.sentMentions.groupBy(_.class_id).toSeq.sortBy(_._1)
-        .foreach { case (cls, ms) => add(s"ne_count_${cls}_${ms.size}") }
+    if (tables != null) tables.classCounts.foreach { case (cls, n) =>
+      sink.start(N.NeCount); sink.part(cls); sink.char('_'); sink.part(Integer.toString(n))
+      sink.emit(1.0)
     }
 
     // ==== BagOfWords / StemmedBagOfWords (`relations/sentence.py:33-113`)
@@ -500,16 +688,16 @@ object RelationScoring {
         val w = toks(i).word
         val isPunct = prep.pos(i) == "PUNCT"
         if (!isPunct && !stopWords.contains(prep.lower(i))) {
-          add2("bow_text=", w)
+          add2(N.BowText, w)
           if (annClass(i) != null)
             neCounts.update(w, neCounts.getOrElse(w, 0) + 1)
         }
         if (!isPunct && !stopWords.contains(prep.stem(i)))
-          add2("bow_stem=", prep.stem(i))
+          add2(N.BowStem, prep.stem(i))
         i += 1
       }
       neCounts.toSeq.sortBy(_._1).foreach { case (w, c) =>
-        add2("ne_bow=", w, c.toDouble)
+        add2(N.NeBow, w, c.toDouble)
       }
     }
 
@@ -519,11 +707,11 @@ object RelationScoring {
     // lemma and POS n-grams 1..4 with [SOURCE/[TARGET] sentinels, token
     // counts ±punct and path negation; PD adds undirected/directed edge
     // n-grams and full n-grams (`utils/graphs.py` Path string algebra).
-    def pathFeatures(name: String, path: IndexedSeq[Int], withEdges: Boolean): Unit = {
+    def pathFeatures(names: PathNames, path: IndexedSeq[Int], withEdges: Boolean): Unit = {
       if (path.length < 2) return
       val last = path.length - 1
-      // prerender every per-node string ONCE (the n-gram assembly below
-      // touches each node up to 4× per kind on long linear paths)
+      // render every per-node string ONCE (the n-grams below touch each
+      // node up to 4× per kind on long linear paths)
       val bowR = new Array[String](path.length)
       val posR = new Array[String](path.length)
       var k = 0
@@ -534,38 +722,24 @@ object RelationScoring {
         k += 1
       }
       // token-only n-grams: n=1 over middle, n>1 over all nodes
-      def tokenNGrams(kind: String, rendered: Array[String],
-                      renderMid: Int => String): Unit = {
-        val g1 = name + "_" + kind + "_1g="
+      def tokenNGrams(grams: Array[Prefix], rendered: Array[String]): Unit = {
         var k = 1
-        while (k < last) { add2(g1, renderMid(path(k))); k += 1 }
+        while (k < last) { gram(grams(1), rendered, k, 1); k += 1 }
         var n = 2
         while (n <= 4) {
-          val gn = name + "_" + kind + "_" + n + "g="
           var s = 0
-          while (s + n <= path.length) {
-            nb.setLength(0); nb.append(gn)
-            var j = 0
-            while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(rendered(s + j))
-              j += 1
-            }
-            add0(nb, 1.0)
-            s += 1
-          }
+          while (s + n <= path.length) { gram(grams(n), rendered, s, n); s += 1 }
           n += 1
         }
       }
-      tokenNGrams("bow", bowR, masked)
-      tokenNGrams("pos", posR, prep.pos)
+      tokenNGrams(names.bow, bowR)
+      tokenNGrams(names.pos, posR)
       // counts + negation over the middle tokens
       val middle = (1 until last).map(path(_))
-      add(name + "_tokens_count", middle.size.toDouble)
-      add(name + "_tokens_count_nopunct",
-        middle.count(i => prep.pos(i) != "PUNCT").toDouble)
+      add(names.tokensCount, middle.size.toDouble)
+      add(names.tokensCountNoPunct, middle.count(i => prep.pos(i) != "PUNCT").toDouble)
       if (DepGraph.isNegated(middle.map(toks(_))))
-        add(name + "_is_negated")
+        add(names.isNegated)
       if (withEdges) {
         // edge n-grams over source+middle steps (PathNode.edge_type)
         val undR = new Array[String](last)
@@ -579,26 +753,10 @@ object RelationScoring {
         }
         var n = 1
         while (n <= 4) {
-          val gu = name + "_undir_" + n + "g="
-          val gd = name + "_dir_" + n + "g="
           var s = 0
           while (s + n <= last) {
-            nb.setLength(0); nb.append(gu)
-            var j = 0
-            while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(undR(s + j))
-              j += 1
-            }
-            add0(nb, 1.0)
-            nb.setLength(0); nb.append(gd)
-            j = 0
-            while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(dirR(s + j))
-              j += 1
-            }
-            add0(nb, 1.0)
+            gram(names.undir(n), undR, s, n)
+            gram(names.dir(n), dirR, s, n)
             s += 1
           }
           n += 1
@@ -611,24 +769,12 @@ object RelationScoring {
           fullR(k) = if (k < last) bowR(k) + " " + dirR(k) else bowR(k)
           k += 1
         }
-        val f1 = name + "_full_1g="
         k = 0
-        while (k < last) { add2(f1, fullR(k)); k += 1 }
+        while (k < last) { gram(names.full(1), fullR, k, 1); k += 1 }
         n = 2
         while (n <= 4) {
-          val gn = name + "_full_" + n + "g="
           var s = 0
-          while (s + n <= path.length) {
-            nb.setLength(0); nb.append(gn)
-            var j = 0
-            while (j < n) {
-              if (j > 0) nb.append('~')
-              nb.append(fullR(s + j))
-              j += 1
-            }
-            add0(nb, 1.0)
-            s += 1
-          }
+          while (s + n <= path.length) { gram(names.full(n), fullR, s, n); s += 1 }
           n += 1
         }
       }
@@ -639,23 +785,24 @@ object RelationScoring {
       val (ldFrom, ldTo) =
         if (m1.begin <= m2.begin) (e1Last, e2First) else (e2Last, e1First)
       if (ldFrom >= 0 && ldTo > ldFrom)
-        pathFeatures("ld", ldFrom to ldTo, withEdges = false)
+        pathFeatures(N.Ld, ldFrom to ldTo, withEdges = false)
     }
 
     // PD path (`dependency.py:170`): shortest path between heads
     if (h1 >= 0 && h2 >= 0) {
       val path = prep.path(h1, h2)
       if (path.nonEmpty) {
-        add("pd_len", path.length.toDouble)
-        val inner = path.drop(1).dropRight(1)
-        inner.foreach { i =>
-          add(s"pd_tok=${masked(i)}")
-          add(s"pd_pos=${prep.pos(i)}")
-          if (prep.pos(i) == "VERB")
-            add(s"pd_verb=${Porter.stem(toks(i).word.toLowerCase)}")
+        add(N.PdLen, path.length.toDouble)
+        var k = 1
+        while (k < path.length - 1) {
+          val i = path(k)
+          add2(N.PdTok, masked(i))
+          add2(N.PdPos, prep.pos(i))
+          if (prep.pos(i) == "VERB") add2(N.PdVerb, prep.stemLower(i))
+          k += 1
         }
-        pathFeatures("pd", path, withEdges = true)
-      } else add("pd_unreachable")
+        pathFeatures(N.Pd, path, withEdges = true)
+      } else add(N.PdUnreachable)
     }
 
     // ==== Entity-head dependency chains, depth 3 (`entityhead.py:230-302`)
@@ -665,45 +812,32 @@ object RelationScoring {
     // (DepGraph.depLabels), mirroring the reference's
     // `from_<dep>` / `chain..-fw_<dep>` naming (`entityhead.py:264-281`).
     // the walk itself (pair-independent tree structure) is cached per
-    // start token in SentencePrep and replayed here as a flat loop —
-    // per-visit work is a handful of two-part concats (the walk revisits
-    // O(fanout²) nodes on flat parses, so per-visit cost is the hot spot)
-    def chainsFor(prefix: String, start: Int): Unit = {
+    // start token in SentencePrep and replayed here as a flat loop
+    def chainsFor(side: SideNames, start: Int): Unit = {
       if (start < 0) return
-      val depFrom = Array.tabulate(4)(d => prefix + "dep_dist_" + d + "_from_")
-      val depTo = Array.tabulate(4)(d => prefix + "dep_dist_" + d + "_to_")
-      val chainBase = Array.tabulate(4)(d => prefix + "chain_dep_dist_" + d + "_")
-      val loBase = Array.tabulate(4)(d => prefix + "dist_" + d + "_")
       val visits = prep.chainVisitsOf(start)
       var vi = 0
       while (vi < visits.length) {
         val v = visits(vi)
-        if (v.fw) {
-          add2(depFrom(v.depth), v.label)
-          nb.setLength(0)
-          nb.append(chainBase(v.depth)).append(v.chain).append("-fw_").append(v.label)
-          add0(nb, 1.0)
-        } else {
-          add2(depTo(v.depth), v.label)
-          nb.setLength(0)
-          nb.append(chainBase(v.depth)).append(v.chain).append("-rv_").append(v.label)
-          add0(nb, 1.0)
-        }
-        val base = loBase(v.depth)
+        val d = v.depth
+        add2(if (v.fw) side.depFrom(d) else side.depTo(d), v.label)
+        sink.start(side.chain(d)); sink.part(v.chain)
+        sink.part(if (v.fw) "-fw_" else "-rv_"); sink.part(v.label)
+        sink.emit(1.0)
         val i = v.token
-        add3(base, "txt=", prep.lower(i))
-        add3(base, "pos=", prep.pos(i))
-        add3(base, "masked=", masked(i))
+        add2(side.distTxt(d), prep.lower(i))
+        add2(side.distPos(d), prep.pos(i))
+        add2(side.distMasked(d), masked(i))
         val ac = annClass(i)
         if (ac != null) {
-          add2(base, "ann_entity")
-          add3(base, "ann_type=", ac)
+          add(side.distAnnEntity(d))
+          add2(side.distAnnType(d), ac)
         }
         vi += 1
       }
     }
-    chainsFor("e1_", h1)
-    chainsFor("e2_", h2)
+    chainsFor(N.Side1, h1)
+    chainsFor(N.Side2, h2)
   }
 
   // ==== Distributed doc-level count aggregations (declarative route) ====

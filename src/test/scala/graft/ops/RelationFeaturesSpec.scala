@@ -171,6 +171,28 @@ class RelationFeaturesSpec extends SparkSpec {
     pinned.foreach { case (name, idx) => assert(RelationScoring.h(name) == idx, name) }
   }
 
+  test("part-wise FNV fold from a prefix state == h of the concatenation") {
+    import RelationScoring.{fold, index, FnvOffset, Prefix}
+    val rng = new scala.util.Random(17)
+    // ASCII, Latin-1 and chars above 0xFF (only their low byte is folded)
+    val alphabet = "ab~_- [ST]09zéÿĀ中€".toVector
+    (0 until 2000).foreach { _ =>
+      val s = Seq.fill(rng.nextInt(24))(alphabet(rng.nextInt(alphabet.length))).mkString
+      // random cut points, repeats allowed: some parts are empty
+      val cuts = (Seq.fill(rng.nextInt(5))(rng.nextInt(s.length + 1)) :+ 0 :+ s.length).sorted
+      val parts = cuts.zip(cuts.tail).map { case (a, b) => s.substring(a, b) }
+      val prefix = new Prefix(parts.head)
+      val viaParts = parts.tail.foldLeft(prefix.state)(fold(_, _))
+      assert(index(viaParts) == RelationScoring.h(s), s"$parts")
+      // the same fold over ranges of the whole string and char by char
+      val viaRanges = cuts.zip(cuts.tail).foldLeft(FnvOffset) { case (st, (a, b)) =>
+        fold(st, s, a, b)
+      }
+      assert(index(viaRanges) == RelationScoring.h(s), s)
+      assert(index(s.foldLeft(FnvOffset)(fold(_, _))) == RelationScoring.h(s), s)
+    }
+  }
+
   test("distributed salted doc counts == fused group-local counts") {
     import spark.implicits._
     // mentions as the fused pipeline would tag them
