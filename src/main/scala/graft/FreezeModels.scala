@@ -9,10 +9,14 @@ import graft.ops._
   * `src/test/resources/models/` are REGRESSION GUARDS: FrozenModelSpec
   * loads them and re-checks held-out P/R, so any drift in feature naming,
   * feature hashing or label conventions across rounds breaks the spec
-  * instead of silently degrading every previously-trained model. After an
-  * INTENTIONAL feature change, re-freeze with:
+  * instead of silently degrading every previously-trained model. The spec
+  * also retrains the linear model and requires the committed weights
+  * exactly, which catches renamed features that P/R alone does not. After
+  * an INTENTIONAL feature change, re-freeze with:
   *
   *   sbt "runMain graft.FreezeModels src/test/resources/models"
+  *
+  * and commit the part files only (not the local `.crc` checksums).
   */
 object FreezeModels {
 

@@ -53,4 +53,17 @@ class FrozenModelSpec extends SparkSpec {
     assert(p >= 0.95, s"frozen linear drifted: precision=$p (tp=$tp fp=$fp fn=$fn)")
     assert(r >= 0.95, s"frozen linear drifted: recall=$r (tp=$tp fp=$fp fn=$fn)")
   }
+
+  test("a fresh FreezeModels linear training reproduces the committed weights exactly") {
+    // held-out P/R cannot see a renamed feature that the model does not
+    // need (a dependency label moving from conj to dep went unnoticed this
+    // way); equal weights pin every trained index and value
+    val committed = ModelIO.loadLinear(spark, s"$root/frozen_linear")
+    val fresh = RelationScoring.train(
+      FreezeModels.linearTrain(0 until 60, FreezeModels.relationCfg), epochs = 8)
+    val differing = committed.w.indices.count(i => committed.w(i) != fresh.w(i))
+    assert(differing == 0 && committed.b == fresh.b,
+      s"$differing weights differ (bias ${committed.b} vs ${fresh.b}) — " +
+        "if the feature change was intentional, re-run graft.FreezeModels")
+  }
 }
