@@ -250,14 +250,13 @@ object RelationScoring {
     def stemOfMask(masked: String): String =
       maskStems.getOrElseUpdate(masked, Porter.stem(masked))
     // (Int, Int) keys packed into one Long: no tuple, no boxing on lookup
+    private def key(a: Int, b: Int): Long = (a.toLong << 32) | (b & 0xffffffffL)
     private val headCache = scala.collection.mutable.LongMap.empty[Int]
     def head(begin: Int, end: Int): Int =
-      headCache.getOrElseUpdate((begin.toLong << 32) | (end & 0xffffffffL),
-        DepGraph.entityHead(toks, depth, begin, end))
+      headCache.getOrElseUpdate(key(begin, end), DepGraph.entityHead(toks, depth, begin, end))
     private val pathCache = scala.collection.mutable.LongMap.empty[Vector[Int]]
     def path(a: Int, b: Int): Vector[Int] =
-      pathCache.getOrElseUpdate((a.toLong << 32) | (b & 0xffffffffL),
-        DepGraph.shortestPath(adj, a, b))
+      pathCache.getOrElseUpdate(key(a, b), DepGraph.shortestPath(adj, a, b))
 
     /** The pair-independent tables of the sentence's mentions: per token,
       * the class of the first mention containing it (null if none), and
