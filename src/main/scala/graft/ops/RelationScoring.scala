@@ -479,8 +479,8 @@ object RelationScoring {
     *
     * Each feature reaches the sink as a constant [[Prefix]] (its FNV-1a
     * state precomputed in [[N]]) followed by its variable parts — tokens,
-    * labels, class ids, counts and the `~` / `_` / `-` / ` ` separators —
-    * so the scoring path folds the name's hash without assembling it.
+    * labels, class ids, counts and the `~` / `_` separators — so the
+    * scoring path folds the name's hash without assembling it.
     * Pair-independent work (stems, per-token mention classes, per-class
     * mention counts, heads, paths, chain walks) lives in [[SentencePrep]].
     */
