@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Try
+import org.apache.spark.sql.SparkSession
 import graft.model.Tok
 import graft.nlp.TextOps
 import graft.ops._
@@ -16,7 +18,8 @@ import graft.ops._
   *
   *   sbt "runMain graft.FreezeModels src/test/resources/models"
   *
-  * and commit the part files only (not the local `.crc` checksums).
+  * and commit the part files only (not the local `.crc` checksums). An
+  * artifact whose model did not change keeps its files ([[write]]).
   */
 object FreezeModels {
 
@@ -34,7 +37,7 @@ object FreezeModels {
   val dict: Map[String, String] = subjDict ++ objDict
 
   def dictTagger: IndexedSeq[Tok] => Seq[(String, Int, Int)] =
-    toks => toks.flatMap(t => dict.get(t.word).map(c => (c, t.begin, t.end)))
+    GazetteerTagger.sentenceTagger(dict)
 
   /** Gold-labeled CRF sentences over the seeded synthetic transcripts
     * (the CrfSpec task: planted subject/object surfaces get B- labels).
@@ -44,7 +47,7 @@ object FreezeModels {
       (0 until 4).flatMap { t =>
         val turn = Transcripts.syntheticTurn(c, t, seed = 42L)
         TextOps.segment(turn.text, "generic").map { case (_, _, _, toks) =>
-          val feats = Crf.tokenFeatures(toks).map(fs => "__bias__" :: fs)
+          val feats = Crf.features(toks)
           val labels = toks.map { tk =>
             if (subjDict.contains(tk.word)) "B-svc"
             else if (objDict.contains(tk.word)) "B-res"
@@ -63,11 +66,8 @@ object FreezeModels {
       for {
         s <- words.find(subjDict.contains)
         o <- words.find(objDict.contains)
-      } yield {
-        val m1 = graft.model.Mention(turn.conv_id, t, 0, SubjClass, 0, 0, s, 1.0, s)
-        val m2 = graft.model.Mention(turn.conv_id, t, 0, ObjClass, 0, 0, o, 1.0, o)
-        KgPipeline.tripleKey(RelType, m1, m2)
-      }
+      } yield Triples.key(RelType, SubjClass, Triples.entity(SubjClass, s),
+        ObjClass, Triples.entity(ObjClass, o))
     }.toSet
 
   /** Labeled relation training rows (the KgPipelineSpec task: an edge is
@@ -77,25 +77,43 @@ object FreezeModels {
                   cfg: KgPipeline.Config): Seq[(RelationScoring.Feats, Int)] =
     convs.flatMap { c =>
       val turns = (0 until 5).map(t => Transcripts.syntheticTurn(c, t, 42L))
-      val gold = goldKeys(c, 5)
-      KgPipeline.candidateEdges(f"conv_$c%06d", turns, cfg, dictTagger,
-          withFeatures = true)
-        .map(cand => (RelationScoring.hashFeats(cand.feats),
-          if (cand.sameSentence && gold.contains(cand.key)) 1 else -1))
+      KgPipeline.trainingRows(f"conv_$c%06d", turns, cfg, dictTagger, goldKeys(c, 5))
     }
 
   def relationCfg: KgPipeline.Config =
     KgPipeline.Config(RelType, SubjClass, ObjClass, window = 1, tokenizer = "generic")
 
+  /** Writes `frozen_crf` and `frozen_linear` under `out`, each only when
+    * its model differs, value by value, from the one already at the path:
+    * ModelIO's overwrite names every part file afresh, so rewriting an
+    * unchanged model would still replace its committed files. Returns the
+    * paths written.
+    */
+  def write(spark: SparkSession, crf: Crf.Model,
+            linear: RelationScoring.LinearModel, out: String): Seq[String] = {
+    def crfValues(m: Crf.Model) = (m.labels, m.emissions.map { case (f, w) => f -> w.toSeq },
+      m.transitions.map(_.toSeq).toSeq, m.start.toSeq, m.stop.toSeq)
+    def linearValues(m: RelationScoring.LinearModel) = (m.w.toSeq, m.b)
+    val crfPath = s"$out/frozen_crf"
+    val linearPath = s"$out/frozen_linear"
+    val writeCrf = !Try(ModelIO.loadCrf(spark, crfPath)).toOption
+      .map(crfValues).contains(crfValues(crf))
+    val writeLinear = !Try(ModelIO.loadLinear(spark, linearPath)).toOption
+      .map(linearValues).contains(linearValues(linear))
+    if (writeCrf) ModelIO.saveCrf(spark, crf, crfPath)
+    if (writeLinear) ModelIO.saveLinear(spark, linear, linearPath)
+    Seq(crfPath -> writeCrf, linearPath -> writeLinear).collect { case (p, true) => p }
+  }
+
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "src/test/resources/models"
     val spark = Session.get()
     val crf = Crf.train(crfGold(0 until 40), epochs = 5)
-    ModelIO.saveCrf(spark, crf, s"$out/frozen_crf")
     val linear = RelationScoring.train(linearTrain(0 until 60, relationCfg), epochs = 8)
-    ModelIO.saveLinear(spark, linear, s"$out/frozen_linear")
+    val written = write(spark, crf, linear, out)
     println(s"frozen: $out/frozen_crf (${crf.emissions.size} features), " +
-      s"$out/frozen_linear (${linear.w.count(_ != 0.0)} nonzero weights)")
+      s"$out/frozen_linear (${linear.w.count(_ != 0.0)} nonzero weights); " +
+      s"written: ${if (written.isEmpty) "none (unchanged)" else written.mkString(", ")}")
     spark.stop()
   }
 }

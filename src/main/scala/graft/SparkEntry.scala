@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -100,6 +100,39 @@ object SparkEntry {
   private def kgTriples(spark: SparkSession, dir: String): DataFrame =
     Triples.fromTurnEdges(kgEdges(spark, dir), Rel, OpClass, ObjClass)
 
+  /** Canonical triple key of a turn-window edge row (word1 op, word2 obj). */
+  private def edgeKey: Column = Triples.keyCol(Rel,
+    OpClass, Triples.entityCol(OpClass, col("word1")),
+    ObjClass, Triples.entityCol(ObjClass, col("word2")))
+
+  /** [[Evaluation.mentionEvalTables]] for kg_mention_eval and
+    * kg_subclass_eval, gold passed through `goldCols`. Both tables are
+    * localCheckpointed (small: one row per tagged token/run): the
+    * counting join references BOTH inputs on both array sides, and
+    * without materialization each reference re-executes the
+    * tokenize+Viterbi subtree (measured 32 s vs <1 s at sf0.001). The raw
+    * turns are repartitioned so the CPU-heavy tagging runs at full width
+    * (16.3 s single-task → 3.8 s best at sf0.1/32c), and the tokenized
+    * sentences are checkpointed so BOTH taggers share one tokenization
+    * pass. r4 barrier budget: toks stays EAGER (it feeds both tag
+    * subtrees, which the report job runs CONCURRENTLY — an eager
+    * checkpoint guarantees one tokenization instead of a cache race),
+    * while gold/pred are LAZY (each is referenced once; local
+    * checkpointing is cache-based, so the report job materializes them
+    * and cuts lineage in ITS OWN barrier). Two barriers total instead of
+    * four — per-barrier host steal made the eager form the most
+    * steal-sensitive query in the suite (31 s outlier reps vs a 1.3 s
+    * min).
+    */
+  private def mentionEvalInputs(s: SparkSession, dir: String,
+                                goldCols: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val toks = Segmentation.tokenized(
+      turnsOf(s, dir).repartition(s.sparkContext.defaultParallelism))
+      .localCheckpoint(true)
+    val (gold, pred) = Evaluation.mentionEvalTables(toks)
+    (goldCols(gold).localCheckpoint(false), pred.localCheckpoint(false))
+  }
+
   // ---- queries ---------------------------------------------------------
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -129,9 +162,7 @@ object SparkEntry {
     // compute_stats_relations_distances (`data.py:125-167`): histogram of
     // the minimum turn distance at which each unique relation key occurs
     "kg_dist_hist" -> ((s, dir) => {
-      val e = kgEdges(s, dir).select(col("conv_id"),
-        concat(lit(s"$Rel|$ObjClass|"), col("word2"),
-          lit(s"|$OpClass|"), col("word1")).as("key"),
+      val e = kgEdges(s, dir).select(col("conv_id"), edgeKey.as("key"),
         col("turn_dist").as("dist"))
       DatasetOps.relationDistanceHistogram(e)
         .select(col("min_dist"), col("count").cast("long").as("n_keys"))
@@ -169,33 +200,7 @@ object SparkEntry {
     // but aren't exact) and fn+fn_ov (the swallowed gold tokens). The
     // "document" key is conv#turn — offsets are turn-relative.
     "kg_mention_eval" -> ((s, dir) => {
-      def byTurn(df: DataFrame): DataFrame = df.select(
-        concat(col("conv_id"), lit("#"), col("turn_idx")).as("conv_id"),
-        col("class_id"), col("begin"), col("text"))
-      // localCheckpoint both mention tables (small: one row per tagged
-      // token/run): the counting join references BOTH inputs on both
-      // array sides, and without materialization each reference
-      // re-executes the tokenize+Viterbi subtree (measured 32 s vs <1 s
-      // at sf0.001). The raw turns are repartitioned so the CPU-heavy
-      // tagging runs at full width (16.3 s single-task → 3.8 s best at
-      // sf0.1/32c), and the tokenized sentences are themselves
-      // checkpointed so BOTH taggers share one tokenization pass. r4
-      // barrier budget: toks stays EAGER (it feeds both tag subtrees,
-      // which the report job runs CONCURRENTLY — an eager checkpoint
-      // guarantees one tokenization instead of a cache race), while
-      // gold/pred are LAZY (each is referenced once; local checkpointing
-      // is cache-based, so the report job materializes them and cuts
-      // lineage in ITS OWN barrier). Two barriers total instead of four
-      // — per-barrier host steal made the eager form the most
-      // steal-sensitive query in the suite (31 s outlier reps vs a
-      // 1.3 s min).
-      val toks = Segmentation.tokenized(
-        turnsOf(s, dir).repartition(s.sparkContext.defaultParallelism))
-        .localCheckpoint(true)
-      val gold = byTurn(GazetteerTagger.tag(toks).toDF()).localCheckpoint(false)
-      val pred = byTurn(Crf.tag(toks,
-        Crf.dictionaryModel(GazetteerTagger.gazetteer),
-        withConfidence = false).toDF()).localCheckpoint(false)
+      val (gold, pred) = mentionEvalInputs(s, dir, identity)
       Evaluation.mentionPrfReport(gold, pred)
     }),
     // Per-SUBCLASS mention-eval breakdown
@@ -208,18 +213,8 @@ object SparkEntry {
     // deterministic form of the reference's subclass mutation
     // (`evaluators.py:451-456`). Output: corpus-wide counts per label.
     "kg_subclass_eval" -> ((s, dir) => {
-      def byTurn(df: DataFrame): DataFrame = df.select(
-        concat(col("conv_id"), lit("#"), col("turn_idx")).as("conv_id"),
-        col("class_id"), col("begin"), col("text"))
-      // eager toks + lazy mention tables — kg_mention_eval's barrier budget
-      val toks = Segmentation.tokenized(
-        turnsOf(s, dir).repartition(s.sparkContext.defaultParallelism))
-        .localCheckpoint(true)
-      val gold = byTurn(GazetteerTagger.tag(toks).toDF())
-        .withColumn("subclass", col("text")).localCheckpoint(false)
-      val pred = byTurn(Crf.tag(toks,
-        Crf.dictionaryModel(GazetteerTagger.gazetteer),
-        withConfidence = false).toDF()).localCheckpoint(false)
+      val (gold, pred) =
+        mentionEvalInputs(s, dir, _.withColumn("subclass", col("text")))
       Evaluation.mentionCountsBySubclassByDoc(gold, pred)
         .groupBy("label")
         .agg(sum("tp").as("tp"), sum("fp").as("fp"), sum("fn").as("fn"),
@@ -498,9 +493,7 @@ object SparkEntry {
       .filter(GoldPairs.map { case (a, b) =>
         col("word1") === a && col("word2") === b
       }.reduce(_ || _))
-    val gold = goldEdges.select(col("conv_id"),
-      concat(lit(s"$Rel|$ObjClass|"), col("word2"),
-        lit(s"|$OpClass|"), col("word1")).as("key"))
+    val gold = goldEdges.select(col("conv_id"), edgeKey.as("key"))
     val pred = kgTriples(s, dir).select(col("conv_id"), col("key"))
     Evaluation.relationCountsByDoc(gold, pred)
       .agg(sum(col("tp")).cast("long").as("tp"),

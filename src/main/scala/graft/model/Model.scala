@@ -112,24 +112,3 @@ final case class TripleRow(
     key: String,
     score: Double
 )
-
-/** A canonical entity node after linking/alias merge (north_rule stage 3). */
-final case class NodeRow(
-    node_id: Long,
-    canonical: String,
-    class_id: String,
-    n_mentions: Long,
-    n_convs: Long
-)
-
-/** Per-stage, per-partition lineage row (north_rule: "per-partition lineage
-  * + metrics", checkpoint-resumable stage boundaries).
-  */
-final case class LineageRow(
-    stage: String,
-    partition_id: Int,
-    input_rows: Long,
-    output_rows: Long,
-    wall_ms: Long,
-    ts: Timestamp
-)

@@ -653,6 +653,15 @@ object DepGraph {
     d
   }
 
+  /** The root of a head assignment: the first token that is its own
+    * head, 0 when none is.
+    */
+  def root(heads: Array[Int]): Int = {
+    var i = 0
+    while (i < heads.length) { if (heads(i) == i) return i; i += 1 }
+    0
+  }
+
   /** BFS depth of every token from the root — `Part.compute_tokens_depth`
     * (`data.py:1124-1159`).
     */

@@ -180,16 +180,28 @@ object TextOps {
   // Scalar helpers shared by feature generators
   // ---------------------------------------------------------------------
 
-  private val numberRe = java.util.regex.Pattern.compile("^[0-9]+([.,][0-9]+)*$")
-
-  /** masked_text semantics (`features/util.py:9-22`): a token inside an
-    * entity becomes the entity class id; a numeric token becomes "NUM";
-    * otherwise the (lowercased) word.
+  /** masked_text semantics (`features/util.py:9-22`) for a token outside
+    * any entity (the caller masks entity tokens with their class id): a
+    * numeric token becomes "NUM", otherwise the lowercased word.
     */
-  def maskedWord(word: String, entityClass: Option[String]): String =
-    entityClass.getOrElse(
-      if (numberRe.matcher(word).matches()) "NUM" else word.toLowerCase
-    )
+  def maskedWord(word: String): String =
+    if (isNumber(word)) "NUM" else word.toLowerCase
+
+  /** `^[0-9]+([.,][0-9]+)*$` as a char loop: ASCII digit runs separated
+    * by single '.' or ',' — no separator first, last or doubled.
+    */
+  private[nlp] def isNumber(word: String): Boolean = {
+    var i = 0
+    var digitRun = false
+    while (i < word.length) {
+      val c = word.charAt(i)
+      if (c >= '0' && c <= '9') digitRun = true
+      else if ((c == '.' || c == ',') && digitRun) digitRun = false
+      else return false
+      i += 1
+    }
+    digitRun
+  }
 
   private val digitsRe = java.util.regex.Pattern.compile("[0-9]+")
 

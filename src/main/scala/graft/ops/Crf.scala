@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.Dataset
 import graft.model._
-import graft.nlp.{Labeling, Porter, TextOps}
+import graft.nlp.{Labeling, Porter}
 
 /** Linear-chain CRF-style sequence tagging — nalaf's `PyCRFSuite`
   * (`learning/crfsuite.py`) re-expressed Spark-first:
@@ -68,6 +68,12 @@ object Crf {
       fs
     }
   }
+
+  /** Per-token features with the `__bias__` feature prepended — the keys
+    * of the broadcast emission weights, in training and in tagging.
+    */
+  def features(sent: IndexedSeq[Tok]): IndexedSeq[List[String]] =
+    tokenFeatures(sent).map("__bias__" :: _)
 
   private def emissionScores(m: Model, feats: Seq[List[String]]): Array[Array[Double]] = {
     val L = m.labels.length
@@ -365,12 +371,20 @@ object Crf {
     Model(labels, em.toMap, Array.ofDim[Double](L, L), new Array[Double](L), new Array[Double](L))
   }
 
+  /** The per-sentence CRF tagger of [[tag]] and the fused
+    * [[KgPipeline.triples]]: [[features]] → [[decodeSentence]].
+    */
+  def tagSentence(m: Model, toks: IndexedSeq[Tok],
+                  withConfidence: Boolean): Vector[(String, Labeling.Decoded)] =
+    if (toks.isEmpty) Vector.empty
+    else decodeSentence(m, toks, emissionScores(m, features(toks)), withConfidence)
+
   /** Distributed scoring: batched mapPartitions over tokenized sentences
     * with the broadcast model; Viterbi + forward-backward marginals →
     * BIO-decode (`data.py:236-273`) → mentions with mean-marginal
     * confidence.
-    */
-  /** `withConfidence = false` skips the forward-backward pass entirely
+    *
+    * `withConfidence = false` skips the forward-backward pass entirely
     * (marginals cost ~3× Viterbi — log-sum-exp per cell vs max) and
     * emits confidence 1.0: the decoded SPANS are identical, so callers
     * that drop or ignore the confidence column (the oracle-checked
@@ -384,47 +398,44 @@ object Crf {
     val bc = spark.sparkContext.broadcast(model)
     ts.mapPartitions { it =>
       val m = bc.value
-      it.flatMap { s =>
-        val toks = s.tokens.toIndexedSeq
-        if (toks.isEmpty) Iterator.empty
-        else {
-          val feats = tokenFeatures(toks).map(fs => "__bias__" :: fs)
-          decodeWithEm(m, s, emissionScores(m, feats), withConfidence)
-        }
-      }
+      it.flatMap(s => mentionsOf(s, tagSentence(m, s.tokens.toIndexedSeq, withConfidence)))
     }
   }
 
-  /** Viterbi + forward-backward + BIO-decode of one sentence given its
-    * emission matrix — shared by [[tag]] (broadcast emissions) and
-    * [[tagWithTable]] (joined emissions).
+  /** Viterbi + optional forward-backward + BIO-decode
+    * (`data.py:236-273`) of one sentence given its emission matrix, each
+    * run's class taken from its first token's label — the core of
+    * [[tagSentence]] (broadcast emissions) and [[tagWithTable]] (joined
+    * emissions).
     */
-  private def decodeWithEm(m: Model, s: TokenizedSentence,
-                           em: Array[Array[Double]],
-                           withConfidence: Boolean = true): Iterator[Mention] = {
-    val toks = s.tokens.toIndexedSeq
-    val oIdx = m.labelIndex.getOrElse("O", -1)
+  private def decodeSentence(m: Model, toks: IndexedSeq[Tok],
+                             em: Array[Array[Double]],
+                             withConfidence: Boolean): Vector[(String, Labeling.Decoded)] = {
     val pred = viterbiEm(m, em)
     val conf =
       if (!withConfidence) toks.indices.map(_ => 1.0)
       else {
+        val oIdx = m.labelIndex.getOrElse("O", -1)
         val marg = marginalsEm(m, em)
         toks.indices.map { i =>
           val l = m.labelIndex(pred(i))
           if (l == oIdx) 0.0 else marg(i)(l)
         }
       }
-    Labeling.decode(toks, pred, conf).iterator.map { d =>
+    Labeling.decode(toks, pred, conf).map { d =>
       // class id from the first token's label (B-cls / I-cls)
       val firstLabel = pred(toks.indexWhere(_.begin == d.begin))
-      val cls = if (firstLabel.length > 2) firstLabel.substring(2) else firstLabel
-      // Entity text = part.text[start:end] (`data.py:270`) — exact
-      // substring reconstructed from the sentence text carry.
-      val text = s.sent_text.substring(d.begin - s.sent_start, d.end - s.sent_start)
-      Mention(s.conv_id, s.turn_idx, s.sent_idx, cls, d.begin, d.end,
-        text, d.confidence, TextOps.normKey(text))
+      (if (firstLabel.length > 2) firstLabel.substring(2) else firstLabel, d)
     }
   }
+
+  /** Mentions of one sentence's spans (text = part.text[start:end], `data.py:270`). */
+  private def mentionsOf(s: TokenizedSentence,
+                         tagged: Vector[(String, Labeling.Decoded)]): Iterator[Mention] =
+    tagged.iterator.map { case (cls, d) =>
+      Mentions.of(s.conv_id, s.turn_idx, s.sent_idx, cls, d.begin, d.end,
+        s.sent_text, s.sent_start, d.confidence)
+    }
 
   /** One (token, label) cell of a distributed emission matrix. */
   final case class EmCell(tok_idx: Int, lbl: Int, w: Double)
@@ -551,7 +562,7 @@ object Crf {
             }
             if (scoredOrNull != null)
               scoredOrNull._4.foreach(c => em(c.tok_idx)(c.lbl) += c.w)
-            decodeWithEm(m, s, em, withConfidence)
+            mentionsOf(s, decodeSentence(m, toks.toIndexedSeq, em, withConfidence))
           }
         }
       }

@@ -34,12 +34,8 @@ object CrossValidation {
     val results = (0 until k).map { f =>
       val trainKeys = conversations.keys.filter(c => folds(c) != f).toSeq.sorted
       val evalKeys = conversations.keys.filter(c => folds(c) == f).toSeq.sorted
-      val trainData = trainKeys.flatMap { c =>
-        val g = gold.getOrElse(c, Set.empty)
-        KgPipeline.candidateEdges(c, conversations(c), cfg, tagger, withFeatures = true)
-          .map(cand => (RelationScoring.hashFeats(cand.feats),
-            if (cand.sameSentence && g.contains(cand.key)) 1 else -1))
-      }
+      val trainData = trainKeys.flatMap(c => KgPipeline.trainingRows(c,
+        conversations(c), cfg, tagger, gold.getOrElse(c, Set.empty)))
       val model = RelationScoring.train(trainData, epochs = epochs, seed = seed)
       var tp = 0L; var fp = 0L; var fn = 0L
       evalKeys.foreach { c =>

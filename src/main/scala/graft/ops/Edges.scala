@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model._
@@ -97,26 +97,38 @@ object EdgeGen {
 
 object Triples {
 
+  /** Entity string of a triple: `class|lower(text)` (`data.py:1997-2015`). */
+  def entity(cls: String, text: String): String = s"$cls|${text.toLowerCase}"
+
+  /** Canonical triple key of `Relation.map`: relType|e1|e2, the entity
+    * strings swapped when class2 <= class1 (bidirectional order).
+    */
+  def key(relType: String, class1: String, e1: String, class2: String, e2: String): String =
+    if (class2 <= class1) s"$relType|$e2|$e1" else s"$relType|$e1|$e2"
+
+  /** Column form of [[entity]] over a word column. */
+  def entityCol(cls: String, word: Column): Column = concat(lit(cls), lit("|"), lower(word))
+
+  /** Column form of [[key]] over entity columns. */
+  def keyCol(relType: String, class1: String, e1: Column, class2: String, e2: Column): Column =
+    if (class2 <= class1) concat(lit(relType), lit("|"), e2, lit("|"), e1)
+    else concat(lit(relType), lit("|"), e1, lit("|"), e2)
+
   /** Stub same-turn relation extraction → deduplicated document-level
     * triples. Semantics: `StubSameSentenceRelationExtractor`
     * (`taggers.py:154-173`; every distance-0 edge becomes a relation with
     * pred_target=+1, `data.py:276-294`) followed by the document-level
     * canonical dedup of `Document.map_relations`/`Relation.map`
-    * (`data.py:1281-1310,1997-2015`): key = relType|e1|e2 with the two
-    * `class|lower(text)` entity strings swapped when
-    * class2 <= class1 (bidirectional canonical order).
+    * (`data.py:1281-1310,1997-2015`) keyed by [[keyCol]].
     */
   def fromTurnEdges(edges: DataFrame, relType: String,
                     class1: String, class2: String): DataFrame = {
-    val e1 = concat(lit(class1), lit("|"), lower(col("word1")))
-    val e2 = concat(lit(class2), lit("|"), lower(col("word2")))
-    val ordered = lit(class2) <= lit(class1)
-    val key = when(ordered,
-      concat(lit(relType), lit("|"), e2, lit("|"), e1))
-      .otherwise(concat(lit(relType), lit("|"), e1, lit("|"), e2))
+    val e1 = entityCol(class1, col("word1"))
+    val e2 = entityCol(class2, col("word2"))
     edges.filter(col("turn_dist") === 0)
       .select(col("conv_id"), col("turn1").as("turn_idx"),
-        lit(relType).as("pred"), e1.as("subj"), e2.as("obj"), key.as("key"))
+        lit(relType).as("pred"), e1.as("subj"), e2.as("obj"),
+        keyCol(relType, class1, e1, class2, e2).as("key"))
       .groupBy(col("conv_id"), col("key"))
       .agg(min(col("turn_idx")).as("turn_idx"),
         first(col("pred")).as("pred"),

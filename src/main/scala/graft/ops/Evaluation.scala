@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.model.TokenizedSentence
 
 /** Distributed evaluators — nalaf's `learning/evaluators.py` re-expressed
   * as joins + aggregations. Match mode is an explicit parameter, never the
@@ -90,6 +91,18 @@ object Evaluation {
       .groupBy("conv_id")
       .agg(sum("tp").as("tp"), sum("fp").as("fp"), sum("fn").as("fn"),
         sum("fp_ov").as("fp_ov"), sum("fn_ov").as("fn_ov"))
+  }
+
+  /** (gold, pred) of the mention evaluations: gazetteer tokens vs the
+    * dictionary CRF's runs (no confidence: same spans), keyed conv#turn.
+    */
+  def mentionEvalTables(toks: Dataset[TokenizedSentence]): (DataFrame, DataFrame) = {
+    def byTurn(df: DataFrame): DataFrame = df.select(
+      concat(col("conv_id"), lit("#"), col("turn_idx")).as("conv_id"),
+      col("class_id"), col("begin"), col("text"))
+    (byTurn(GazetteerTagger.tag(toks).toDF()),
+      byTurn(Crf.tag(toks, Crf.dictionaryModel(GazetteerTagger.gazetteer),
+        withConfidence = false).toDF()))
   }
 
   /** One-row mention-level evaluation report: the five corpus-wide counts
@@ -350,17 +363,9 @@ object Evaluation {
       .filter(!col("key").contains("UNKNOWN:")) // pass unknown gold norms
     val g2 = g.select(col("conv_id").as("conv_id2"), col("class_id").as("class_id2"),
       col("begin").as("begin2"), col("end").as("end2"), col("key").as("key2"))
-    val acceptCondPred = accept match {
-      case "equality" =>
-        col("conv_id") === col("conv_id2") && col("key") === col("key2")
-      case "exact" =>
-        col("conv_id") === col("conv_id2") && col("class_id") === col("class_id2") &&
-          col("begin") === col("begin2") && col("end") === col("end2")
-      case "overlapping" =>
-        col("conv_id") === col("conv_id2") && col("class_id") === col("class_id2") &&
-          col("begin") < col("end2") && col("end") > col("begin2")
-    }
-    val fpSet = p.join(g2, acceptCondPred, "left_anti")
+    // the accept predicate is symmetric in (gold, pred) up to the side
+    // suffix, so the pred-side anti join reuses it against renamed gold
+    val fpSet = p.join(g2, acceptCond, "left_anti")
     tpSet.select(col("conv_id"), lit("tp").as("kind"))
       .unionByName(fpSet.select(col("conv_id"), lit("fp").as("kind")))
       .unionByName(fnSet.select(col("conv_id"), lit("fn").as("kind")))

@@ -45,12 +45,9 @@ object KgPipeline {
       sentDist: Int, key: String, feats: Map[String, Double],
       score: Double = 1.0)
 
-  def tripleKey(relType: String, m1: Mention, m2: Mention): String = {
-    val e1 = s"${m1.class_id}|${m1.text.toLowerCase}"
-    val e2 = s"${m2.class_id}|${m2.text.toLowerCase}"
-    if (m2.class_id <= m1.class_id) s"$relType|$e2|$e1"
-    else s"$relType|$e1|$e2"
-  }
+  def tripleKey(relType: String, m1: Mention, m2: Mention): String =
+    Triples.key(relType, m1.class_id, Triples.entity(m1.class_id, m1.text),
+      m2.class_id, Triples.entity(m2.class_id, m2.text))
 
   /** Candidate edges of one conversation (materialized form — training
     * and tests; inference streams through [[foreachCandidate]] with the
@@ -68,6 +65,19 @@ object KgPipeline {
       skipKey = _ => false)(out += _)
     out.result()
   }
+
+  /** Labeled relation training rows of one conversation (`label_edges`):
+    * a candidate is +1 iff it is same-sentence and its canonical key is in
+    * `gold`, −1 otherwise.
+    */
+  def trainingRows(
+      convId: String,
+      turns: Seq[Turn],
+      cfg: Config,
+      tagger: IndexedSeq[Tok] => Seq[(String, Int, Int)],
+      gold: Set[String]): Vector[(RelationScoring.Feats, Int)] =
+    candidateEdges(convId, turns, cfg, tagger, withFeatures = true).map(c =>
+      (RelationScoring.hashFeats(c.feats), if (c.sameSentence && gold.contains(c.key)) 1 else -1))
 
   /** Streaming candidate generation: segment → tag → doc-level counts →
     * turn-window pair generation (+ optional edge features over the
@@ -102,21 +112,12 @@ object KgPipeline {
     // same way, utils/graph.py:29-46)
     final case class SentCtx(turnIdx: Int, sentIdx: Int, toks: IndexedSeq[Tok],
         mentions: Seq[Mention]) {
-      lazy val prep: RelationScoring.SentencePrep = {
-        // one sentencePos pass shared by heads AND depLabels (hot loop)
-        val sp = DepGraph.sentencePos(toks)
-        val hs = DepGraph.heads(toks, sp)
-        val adj = DepGraph.adjacency(toks.length, hs)
-        val root = hs.indices.find(i => hs(i) == i).getOrElse(0)
-        new RelationScoring.SentencePrep(toks, hs, adj,
-          DepGraph.depths(adj, root), sentPos = sp)
-      }
+      lazy val prep: RelationScoring.SentencePrep = RelationScoring.SentencePrep.of(toks)
     }
     val ctxs: Vector[SentCtx] = sorted.iterator.flatMap { t =>
       TextOps.segment(t.text, cfg.tokenizer).map { case (si, _, _, toks) =>
         val ms = tagger(toks).map { case (cls, b, e) =>
-          Mention(convId, t.turn_idx, si, cls, b, e,
-            t.text.substring(b, e), 1.0, TextOps.normKey(t.text.substring(b, e)))
+          Mentions.of(convId, t.turn_idx, si, cls, b, e, t.text, 0)
         }
         SentCtx(t.turn_idx, si, toks, ms)
       }
@@ -127,6 +128,9 @@ object KgPipeline {
     // the mention's norm key (first norm id else lowercased text,
     // `sentence.py:174-180`).
     val needCtx = withFeatures || scorer.isDefined
+    // class-ordered norm pair key (`edge2key`, `sentence.py:183-191`)
+    def pairKey(n1: String, n2: String): String =
+      if (cfg.class1 < cfg.class2) s"$n1|$n2" else s"$n2|$n1"
     val docCounts: collection.Map[(String, String), Int] =
       if (!needCtx) Map.empty
       else {
@@ -138,8 +142,7 @@ object KgPipeline {
         m
       }
     // distinct sentences where a (class1-norm, class2-norm) pair
-    // co-occurs, keyed by class-ordered norm pair (`edge2key`,
-    // `sentence.py:183-191`)
+    // co-occurs, keyed by pairKey
     val together: collection.Map[String, Int] =
       if (!needCtx) Map.empty
       else {
@@ -151,24 +154,19 @@ object KgPipeline {
           val n2 = c.mentions.iterator.filter(_.class_id == cfg.class2)
             .map(_.norm).toSeq.distinct
           for (a <- n1; b <- n2) {
-            val key = if (cfg.class1 < cfg.class2) s"$a|$b" else s"$b|$a"
-            sents.getOrElseUpdate(key, scala.collection.mutable.Set.empty) +=
+            sents.getOrElseUpdate(pairKey(a, b), scala.collection.mutable.Set.empty) +=
               ((c.turnIdx, c.sentIdx))
           }
         }
         sents.map { case (k, v) => (k, v.size) }
       }
     def edgeCtxOf(m1: Mention, m2: Mention, sentMentions: Seq[Mention])
-      : RelationScoring.EdgeCtx = {
-      val pairKey =
-        if (cfg.class1 < cfg.class2) s"${m1.norm}|${m2.norm}"
-        else s"${m2.norm}|${m1.norm}"
+      : RelationScoring.EdgeCtx =
       RelationScoring.EdgeCtx(
         sentMentions = sentMentions,
         e1DocCount = docCounts.getOrElse((m1.class_id, m1.norm), 0),
         e2DocCount = docCounts.getOrElse((m2.class_id, m2.norm), 0),
-        togetherCount = together.getOrElse(pairKey, 0))
-    }
+        togetherCount = together.getOrElse(pairKey(m1.norm, m2.norm), 0))
 
     val byTurn = ctxs.groupBy(_.turnIdx)
 
@@ -263,8 +261,8 @@ object KgPipeline {
       skipKey) { c =>
       if (c.score > 0) {
         out.update(c.key, TripleRow(convId, c.turn1, cfg.relType,
-          s"${c.m1.class_id}|${c.m1.text.toLowerCase}",
-          s"${c.m2.class_id}|${c.m2.text.toLowerCase}", c.key, c.score))
+          Triples.entity(c.m1.class_id, c.m1.text),
+          Triples.entity(c.m2.class_id, c.m2.text), c.key, c.score))
       }
     }
     out.values.toVector.sortBy(r => (r.turn_idx, r.key))
@@ -280,12 +278,8 @@ object KgPipeline {
       adj: Array[List[Int]], depth: Array[Int],
       extraLabels: Map[Long, String], delta: Int)
 
-  def combined(toks1: IndexedSeq[Tok], toks2: IndexedSeq[Tok]): CombinedCtx =
-    combined(toks1, toks2, DepGraph.heads(toks1), DepGraph.heads(toks2))
-
-  /** Heads-reusing form: the pipeline passes each sentence's memoized
-    * head assignment so per-sentence parsing never repeats per sentence
-    * PAIR.
+  /** The pipeline passes each sentence's memoized head assignment so
+    * per-sentence parsing never repeats per sentence PAIR.
     */
   def combined(toks1: IndexedSeq[Tok], toks2: IndexedSeq[Tok],
                hs1: Array[Int], hs2: Array[Int]): CombinedCtx = {
@@ -298,8 +292,8 @@ object KgPipeline {
     val heads = Array.tabulate(all.length) { i =>
       if (i < toks1.length) hs1(i) else hs2(i - toks1.length) + toks1.length
     }
-    val root1 = hs1.indices.find(i => hs1(i) == i).getOrElse(0)
-    val root2 = hs2.indices.find(i => hs2(i) == i).getOrElse(0) + toks1.length
+    val root1 = DepGraph.root(hs1)
+    val root2 = DepGraph.root(hs2) + toks1.length
     // same-word noun links across the two sides (`data.py:1649-1666`)
     val nouns1 = toks1.indices.filter(i => DepGraph.coarsePos(toks1(i).word) == "NOUN")
     val nouns2 = shifted.indices.map(_ + toks1.length)
@@ -315,24 +309,6 @@ object KgPipeline {
         (pack(root1, root2) -> "rootDep")).toMap
     val adj = DepGraph.adjacency(all.length, heads, (root1, root2) +: lemmaLinks)
     CombinedCtx(all, heads, adj, DepGraph.depths(adj, root1), extraLabels, delta)
-  }
-
-  /** Backwards-compatible form returning the shifted m2 along with the
-    * combined structures (used by tests asserting the re-basing).
-    */
-  def combined(toks1: IndexedSeq[Tok], toks2: IndexedSeq[Tok], sameCtx: Boolean,
-               m1: Mention, m2: Mention)
-    : (IndexedSeq[Tok], Mention, Mention, Array[List[Int]], Array[Int]) = {
-    if (sameCtx) {
-      val hs = DepGraph.heads(toks1)
-      val adj = DepGraph.adjacency(toks1.length, hs)
-      val root = hs.indices.find(i => hs(i) == i).getOrElse(0)
-      (toks1, m1, m2, adj, DepGraph.depths(adj, root))
-    } else {
-      val c = combined(toks1, toks2)
-      (c.toks, m1, m2.copy(begin = m2.begin + c.delta, end = m2.end + c.delta),
-        c.adj, c.depth)
-    }
   }
 
   /** Distributed form: ONE shuffle on conv_id, then per-conversation
@@ -370,22 +346,11 @@ object KgPipeline {
         org.apache.spark.sql.functions.col("turn_idx"))
       .mapPartitions { (it: Iterator[Turn]) =>
         val tagger: IndexedSeq[Tok] => Seq[(String, Int, Int)] = bcCrf.value match {
-          case Some(m) => toks => {
-            if (toks.isEmpty) Nil
-            else {
-              val feats = Crf.tokenFeatures(toks).map(fs => "__bias__" :: fs)
-              val pred = Crf.viterbi(m, feats)
-              graft.nlp.Labeling.decode(toks, pred, Seq.fill(toks.length)(1.0)).map { d =>
-                val firstLabel = pred(toks.indexWhere(_.begin == d.begin))
-                val cls = if (firstLabel.length > 2) firstLabel.substring(2) else firstLabel
-                (cls, d.begin, d.end)
-              }
+          case Some(m) => toks =>
+            Crf.tagSentence(m, toks, withConfidence = false).map { case (cls, d) =>
+              (cls, d.begin, d.end)
             }
-          }
-          case None => toks => {
-            val g = bcGaz.value
-            toks.flatMap(t => g.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
-          }
+          case None => GazetteerTagger.sentenceTagger(bcGaz.value)
         }
         // stream maximal runs of one conv_id (partition sorted by conv_id)
         val rows = it.buffered

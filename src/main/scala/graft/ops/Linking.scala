@@ -138,15 +138,13 @@ object Linking {
     val edgeCount = sym.count()
     val localCap = spark.conf.getOption("graft.cc.localEdgeCap")
       .map(_.toLong).getOrElse(1L << 22)
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
     if (edgeCount <= localCap) {
       // single-task union-find: union-by-min roots + path compression —
       // the root of every tree IS the component minimum at all times, so
       // no second resolution pass is needed. Runs on an executor (this is
       // a mapPartitions fold, not a driver collect); memory is bounded by
       // the edge cap (two longs per node).
-      val t0 = System.nanoTime()
-      val out = sym.as[(Long, Long)].coalesce(1).mapPartitions { it =>
+      sym.as[(Long, Long)].coalesce(1).mapPartitions { it =>
         val parent = new scala.collection.mutable.LongMap[Long](1 << 16)
         def find(x0: Long): Long = {
           var x = x0
@@ -170,10 +168,6 @@ object Linking {
         val keys = parent.keys.toArray
         keys.iterator.map(n => (n, find(n)))
       }.toDF("node", "comp").localCheckpoint(false)
-      if (ccDebug) System.err.println(
-        f"[cc] local union-find over $edgeCount edges " +
-          f"${(System.nanoTime() - t0) / 1e9}%.3fs (plan only; lazy)")
-      out
     } else {
       // distributed label propagation — the > cap path. LAZY
       // localCheckpoint throughout the loop (r4): local checkpointing is
@@ -183,7 +177,6 @@ object Linking {
         df.as("a").join(df.as("b"), col("a.comp") === col("b.node"), "left")
           .select(col("a.node").as("node"),
             least(col("a.comp"), coalesce(col("b.comp"), col("a.comp"))).as("comp"))
-      var t0 = System.nanoTime()
       var comp = jump(sym.groupBy($"src").agg(min($"dst").as("md"))
           .select($"src".as("node"), least($"src", $"md").as("comp")))
         .localCheckpoint(false)
@@ -197,12 +190,9 @@ object Linking {
         df.agg(coalesce(sum($"comp".cast("decimal(38,0)")),
           lit(java.math.BigDecimal.ZERO))).first().getDecimal(0)
       var sigma = sigmaOf(comp)
-      if (ccDebug) System.err.println(
-        f"[cc] init sigma job ${(System.nanoTime() - t0) / 1e9}%.3fs")
       var iter = 0
       var converged = false
       while (iter < maxIter && !converged) {
-        t0 = System.nanoTime()
         // neighbor minimum: for each node, min comp over neighbors ∪ self
         val nbrMin = sym.join(comp, sym("dst") === comp("node"))
           .groupBy(sym("src").as("node")).agg(min($"comp").as("nbr_comp"))
@@ -215,8 +205,6 @@ object Linking {
         converged = newSigma.compareTo(sigma) == 0
         sigma = newSigma
         iter += 1
-        if (ccDebug) System.err.println(
-          f"[cc] round $iter ${(System.nanoTime() - t0) / 1e9}%.3fs converged=$converged")
       }
       comp
     }

@@ -14,6 +14,21 @@ import graft.nlp.TextOps
   *  - [[graft.ops.CrfTagger]]: linear-chain Viterbi with broadcast weights
   *    (`learning/crfsuite.py:33-49` semantics) — see Crf.scala.
   */
+object Mentions {
+
+  /** The one Mention constructor of the taggers: the text is the span
+    * [begin, end) of `source`, whose first char sits at turn offset
+    * `sourceStart`, and the norm is [[TextOps.normKey]] of that text.
+    */
+  def of(convId: String, turnIdx: Int, sentIdx: Int, cls: String,
+         begin: Int, end: Int, source: String, sourceStart: Int,
+         confidence: Double = 1.0): Mention = {
+    val text = source.substring(begin - sourceStart, end - sourceStart)
+    Mention(convId, turnIdx, sentIdx, cls, begin, end, text, confidence,
+      TextOps.normKey(text))
+  }
+}
+
 object GazetteerTagger {
 
   /** The fixed two-class gazetteer used by the driver-facing queries over
@@ -27,18 +42,22 @@ object GazetteerTagger {
     "table" -> ObjClass, "vector" -> ObjClass, "stream" -> ObjClass, "batch" -> ObjClass
   )
 
-  /** Tag every token whose lowercased word is a gazetteer term. Confidence
-    * 1.0 (dictionary match). Narrow map — no shuffle.
+  /** The gazetteer rule on one sentence, shared by [[tag]], the fused
+    * pipeline and the stream: a token whose lowercased word is a term.
+    */
+  def sentenceTagger(gaz: Map[String, String]): IndexedSeq[Tok] => Seq[(String, Int, Int)] =
+    toks => toks.flatMap(t => gaz.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
+
+  /** [[sentenceTagger]] over tokenized sentences. Confidence 1.0
+    * (dictionary match). Narrow map — no shuffle.
     */
   def tag(ts: Dataset[TokenizedSentence],
           gaz: Map[String, String] = gazetteer): Dataset[Mention] = {
     import ts.sparkSession.implicits._
+    val tagger = sentenceTagger(gaz)
     ts.flatMap { s =>
-      s.tokens.iterator.flatMap { t =>
-        gaz.get(t.word.toLowerCase).map { cls =>
-          Mention(s.conv_id, s.turn_idx, s.sent_idx, cls,
-            t.begin, t.end, t.word, 1.0, TextOps.normKey(t.word))
-        }
+      tagger(s.tokens.toIndexedSeq).map { case (cls, b, e) =>
+        Mentions.of(s.conv_id, s.turn_idx, s.sent_idx, cls, b, e, s.sent_text, s.sent_start)
       }
     }
   }

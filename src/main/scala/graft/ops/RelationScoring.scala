@@ -147,24 +147,10 @@ object RelationScoring {
       togetherCount: Int = 0)
   object EdgeCtx { val empty: EdgeCtx = EdgeCtx() }
 
-  /** Sentence-local candidate: tokens of the (possibly combined) sentence,
-    * token index of each entity head, char spans of the two mentions.
-    * Map form — used by TRAINING (needs materialized vectors) and tests.
-    */
-  def features(
-      toks: IndexedSeq[Tok],
-      heads: Array[Int],
-      adj: Array[List[Int]],
-      depth: Array[Int],
-      m1: Mention, m2: Mention,
-      sameSentence: Boolean, sentDist: Int,
-      ctx: EdgeCtx = EdgeCtx.empty): Map[String, Double] =
-    features(new SentencePrep(toks, heads, adj, depth), m1, m2,
-      sameSentence, sentDist, ctx)
-
-  /** Prep-sharing form — the pipeline passes the SAME memoized prep
-    * (incl. synthetic-link labels) to both the Map and the fold path so
-    * hashed indices agree by construction.
+  /** Map form of the edge features — used by TRAINING (needs
+    * materialized vectors) and tests. The pipeline passes the SAME
+    * memoized prep (incl. synthetic-link labels) to both the Map and the
+    * fold path ([[scoreEdge]]) so hashed indices agree by construction.
     */
   def features(prep: SentencePrep, m1: Mention, m2: Mention,
       sameSentence: Boolean, sentDist: Int,
@@ -214,7 +200,7 @@ object RelationScoring {
     }
     private val maskCache = new Array[String](toks.length)
     def maskedBase(i: Int): String = {
-      if (maskCache(i) == null) maskCache(i) = TextOps.maskedWord(toks(i).word, None)
+      if (maskCache(i) == null) maskCache(i) = TextOps.maskedWord(toks(i).word)
       maskCache(i)
     }
     private val stemCache = new Array[String](toks.length)
@@ -360,6 +346,19 @@ object RelationScoring {
       if (v < heads.length && heads(v) == u) "F"
       else if (u < heads.length && heads(u) == v) "B"
       else if (u < v) "F" else "B"
+  }
+
+  object SentencePrep {
+    /** The parse of one sentence: one sentencePos pass shared by heads
+      * AND depLabels, the head assignment, its adjacency and the BFS
+      * depths from its root.
+      */
+    def of(toks: IndexedSeq[Tok]): SentencePrep = {
+      val sp = DepGraph.sentencePos(toks)
+      val hs = DepGraph.heads(toks, sp)
+      val adj = DepGraph.adjacency(toks.length, hs)
+      new SentencePrep(toks, hs, adj, DepGraph.depths(adj, DepGraph.root(hs)), sentPos = sp)
+    }
   }
 
   // compact English stopword list (NLTK-core subset) for the BOW

@@ -236,20 +236,11 @@ object Stages {
       Segmentation.tokenized(Segmentation.turns(transcripts)).toDF()
     }
     reports += r2
-    val toks = toksDf.as[graft.model.TokenizedSentence]
-    def byTurn(df: DataFrame): DataFrame = df.select(
-      concat(col("conv_id"), lit("#"), col("turn_idx")).as("conv_id"),
-      col("class_id"), col("begin"), col("text"))
-    val (gold, r3) = run(spark, root, "eval_gold") {
-      byTurn(GazetteerTagger.tag(toks).toDF())
-    }
+    val (goldDf, predDf) =
+      Evaluation.mentionEvalTables(toksDf.as[graft.model.TokenizedSentence])
+    val (gold, r3) = run(spark, root, "eval_gold")(goldDf)
     reports += r3
-    val (pred, r4) = run(spark, root, "eval_pred") {
-      // byTurn drops the confidence column — skip the forward-backward
-      // pass, identical spans (same choice as the in-session queries)
-      byTurn(Crf.tag(toks, Crf.dictionaryModel(GazetteerTagger.gazetteer),
-        withConfidence = false).toDF())
-    }
+    val (pred, r4) = run(spark, root, "eval_pred")(predDf)
     reports += r4
     (gold, pred, reports.result())
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.{TripleRow, Turn}
-import graft.ops.{KgPipeline, RelationScoring}
+import graft.ops.{GazetteerTagger, KgPipeline, RelationScoring}
 
 /** Structured Streaming surface: incremental KG construction over a
   * growing transcripts table (the reference is batch-only; our
@@ -108,11 +108,8 @@ object StreamingKg {
     val seen = prev.turns.map(_.turn_idx).toSet
     val merged = prev.turns ++
       newTurns.filterNot(t => seen(t.turn_idx)).distinctBy(_.turn_idx)
-    val tagger: IndexedSeq[graft.model.Tok] => Seq[(String, Int, Int)] =
-      toks => toks.flatMap(t =>
-        gaz.get(t.word.toLowerCase).map(cls => (cls, t.begin, t.end)))
     val fresh = KgPipeline.processConversation(convId, merged, cfg,
-      tagger, scorer, decided = prev.emittedKeys)
+      GazetteerTagger.sentenceTagger(gaz), scorer, decided = prev.emittedKeys)
     state.update(ConvState(merged, prev.emittedKeys ++ fresh.map(_.key)))
     fresh.iterator
   }

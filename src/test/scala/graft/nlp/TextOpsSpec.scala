@@ -123,4 +123,23 @@ class TextOpsSpec extends AnyFunSuite {
     assert(TextOps.normKey("  Spark 3.5 ") == "spark 0.0")
     assert(TextOps.normKey("DB_users42") == "db_users0")
   }
+
+  test("maskedWord's number test equals the ^[0-9]+([.,][0-9]+)*$ regex") {
+    // the regex is the reference; the loop must agree on the edge cases
+    // and on random strings over digits, separators, letters, '-' and an
+    // Arabic-Indic digit (which [0-9] rejects)
+    val numberRe = java.util.regex.Pattern.compile("^[0-9]+([.,][0-9]+)*$")
+    def viaRegex(w: String): String =
+      if (numberRe.matcher(w).matches()) "NUM" else w.toLowerCase
+    val fixed = Seq("", "1.", ".1", "1,,2", "1.2.3", "1", "12,5", "\u0661")
+    val alphabet = "0123456789.,aA-\u0661"
+    val rng = new scala.util.Random(7)
+    val random = Seq.fill(20000) {
+      Seq.fill(rng.nextInt(7))(alphabet.charAt(rng.nextInt(alphabet.length))).mkString
+    }
+    (fixed ++ random).foreach { w =>
+      assert(TextOps.maskedWord(w) == viaRegex(w), s"maskedWord [$w]")
+    }
+    assert(TextOps.maskedWord("1.2.3") == "NUM" && TextOps.maskedWord("1.") == "1.")
+  }
 }
