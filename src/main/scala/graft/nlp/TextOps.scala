@@ -190,7 +190,7 @@ object TextOps {
   /** `^[0-9]+([.,][0-9]+)*$` as a char loop: ASCII digit runs separated
     * by single '.' or ',' — no separator first, last or doubled.
     */
-  private[nlp] def isNumber(word: String): Boolean = {
+  private def isNumber(word: String): Boolean = {
     var i = 0
     var digitRun = false
     while (i < word.length) {

@@ -11,24 +11,9 @@ import graft.nlp.TextOps
   *    form of nalaf's `DictionaryFeatureGenerator` gazetteers
   *    (`features/dictionaries.py:11-25`) used directly as a no-ML tagger
   *    (the reference's stub-extractor route, `learning/taggers.py:126-185`).
-  *  - [[graft.ops.CrfTagger]]: linear-chain Viterbi with broadcast weights
+  *  - [[graft.ops.Crf]]: linear-chain Viterbi with broadcast weights
   *    (`learning/crfsuite.py:33-49` semantics) — see Crf.scala.
   */
-object Mentions {
-
-  /** The one Mention constructor of the taggers: the text is the span
-    * [begin, end) of `source`, whose first char sits at turn offset
-    * `sourceStart`, and the norm is [[TextOps.normKey]] of that text.
-    */
-  def of(convId: String, turnIdx: Int, sentIdx: Int, cls: String,
-         begin: Int, end: Int, source: String, sourceStart: Int,
-         confidence: Double = 1.0): Mention = {
-    val text = source.substring(begin - sourceStart, end - sourceStart)
-    Mention(convId, turnIdx, sentIdx, cls, begin, end, text, confidence,
-      TextOps.normKey(text))
-  }
-}
-
 object GazetteerTagger {
 
   /** The fixed two-class gazetteer used by the driver-facing queries over
@@ -74,5 +59,20 @@ object GazetteerTagger {
     import org.apache.spark.sql.functions._
     mentions.groupBy($"conv_id", $"turn_idx", $"class_id", lower($"text").as("word"))
       .agg(min($"begin").as("begin"), count(lit(1)).as("n_occ"))
+  }
+}
+
+object Mentions {
+
+  /** The one Mention constructor of the taggers: the text is the span
+    * [begin, end) of `source`, whose first char sits at turn offset
+    * `sourceStart`, and the norm is [[TextOps.normKey]] of that text.
+    */
+  def of(convId: String, turnIdx: Int, sentIdx: Int, cls: String,
+         begin: Int, end: Int, source: String, sourceStart: Int,
+         confidence: Double = 1.0): Mention = {
+    val text = source.substring(begin - sourceStart, end - sourceStart)
+    Mention(convId, turnIdx, sentIdx, cls, begin, end, text, confidence,
+      TextOps.normKey(text))
   }
 }
