@@ -161,18 +161,9 @@ object TextOps {
       if (tokenizer == "generic") genericTokenize else tmvarTokenize
     var soFar = 0
     splitSentences(text).zipWithIndex.map { case ((sent, start), idx) =>
-      val words = tokFn(sent)
-      var tid = 0
-      val toks = Vector.newBuilder[Tok]
-      words.foreach { w =>
-        val s = text.indexOf(w, soFar)
-        if (s >= 0) {
-          soFar = s + w.length
-          toks += Tok(tid, w, s, s + w.length)
-          tid += 1
-        }
-      }
-      (idx, start, sent, toks.result())
+      val toks = withOffsets(text, tokFn(sent), soFar)
+      if (toks.nonEmpty) soFar = toks.last.end
+      (idx, start, sent, toks)
     }
   }
 

@@ -113,6 +113,11 @@ object KgPipeline {
     final case class SentCtx(turnIdx: Int, sentIdx: Int, toks: IndexedSeq[Tok],
         mentions: Seq[Mention]) {
       lazy val prep: RelationScoring.SentencePrep = RelationScoring.SentencePrep.of(toks)
+      // the class-1 and class-2 mentions, each with its entity string
+      val side1: Vector[(Mention, String)] = ofClass(cfg.class1)
+      val side2: Vector[(Mention, String)] = ofClass(cfg.class2)
+      private def ofClass(cls: String) = mentions.iterator.filter(_.class_id == cls)
+        .map(m => (m, Triples.entity(cls, m.text))).toVector
     }
     val ctxs: Vector[SentCtx] = sorted.iterator.flatMap { t =>
       TextOps.segment(t.text, cfg.tokenizer).map { case (si, _, _, toks) =>
@@ -149,10 +154,8 @@ object KgPipeline {
         val sents = scala.collection.mutable.HashMap
           .empty[String, scala.collection.mutable.Set[(Int, Int)]]
         ctxs.foreach { c =>
-          val n1 = c.mentions.iterator.filter(_.class_id == cfg.class1)
-            .map(_.norm).toSeq.distinct
-          val n2 = c.mentions.iterator.filter(_.class_id == cfg.class2)
-            .map(_.norm).toSeq.distinct
+          val n1 = c.side1.map(_._1.norm).distinct
+          val n2 = c.side2.map(_._1.norm).distinct
           for (a <- n1; b <- n2) {
             sents.getOrElseUpdate(pairKey(a, b), scala.collection.mutable.Set.empty) +=
               ((c.turnIdx, c.sentIdx))
@@ -187,18 +190,18 @@ object KgPipeline {
             c1.mentions ++ c2.mentions.map(m =>
               m.copy(begin = m.begin + cross.delta, end = m.end + cross.delta))
           for {
-            m1 <- c1.mentions if m1.class_id == cfg.class1
-            m2 <- c2.mentions if m2.class_id == cfg.class2
+            (m1, e1) <- c1.side1
+            (m2, e2) <- c2.side2
             // never pair a mention with itself (only possible when the two
             // entity classes coincide)
             if !(cfg.class1 == cfg.class2 && sameSent &&
               m1.begin == m2.begin && m1.end == m2.end)
           } {
-            val key = tripleKey(cfg.relType, m1, m2)
+            val key = Triples.key(cfg.relType, cfg.class1, e1, cfg.class2, e2)
             if (!skipKey(key)) {
               // same-sentence pairs share the memoized per-sentence prep
-              // (POS/mask/stem/head/path caches amortize over the k²
-              // pairs); cross-context pairs share the hoisted pair prep
+              // (per-token arrays, head/path caches amortize over the
+              // k² pairs); cross-context pairs share the hoisted pair prep
               val (prep, mm1, mm2, sentMs) =
                 if (sameSent) (c1.prep, m1, m2, c1.mentions)
                 else (crossPrep, m1,
@@ -302,11 +305,10 @@ object KgPipeline {
       a <- nouns1; b <- nouns2
       if all(a).word.equalsIgnoreCase(all(b).word)
     } yield (a, b)
-    def pack(u: Int, v: Int): Long =
-      (math.min(u, v).toLong << 32) | math.max(u, v).toLong
+    import RelationScoring.SentencePrep.linkKey
     val extraLabels: Map[Long, String] =
-      (lemmaLinks.map(l => pack(l._1, l._2) -> "sameLemma") :+
-        (pack(root1, root2) -> "rootDep")).toMap
+      (lemmaLinks.map(l => linkKey(l._1, l._2) -> "sameLemma") :+
+        (linkKey(root1, root2) -> "rootDep")).toMap
     val adj = DepGraph.adjacency(all.length, heads, (root1, root2) +: lemmaLinks)
     CombinedCtx(all, heads, adj, DepGraph.depths(adj, root1), extraLabels, delta)
   }

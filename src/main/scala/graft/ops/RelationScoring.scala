@@ -176,43 +176,40 @@ object RelationScoring {
     sink.score
   }
 
-  /** Per-sentence memoized tables shared across all candidate pairs of
-    * the sentence — the relational analogue of the reference's
-    * per-sentence graph cache (`utils/graph.py:29-46`). With dense
-    * mentions (k per class) a sentence yields O(k²) pairs; without this
-    * cache POS/stem/mask/head work is recomputed per pair.
+  /** Per-sentence values shared across all candidate pairs of the
+    * sentence — the relational analogue of the reference's per-token
+    * features (`relations/__init__.py:127-170`) and per-sentence graph
+    * cache (`utils/graph.py:29-46`). With dense mentions (k per class) a
+    * sentence yields O(k²) pairs; each value here is computed once.
+    *
+    * The per-token values are lazy arrays: every enumeration reads `pos`
+    * and `maskedBase` of each token and `lower`/`stem` of each non-PUNCT
+    * token, while a prep that is built only for its `heads` (the
+    * cross-context input of [[KgPipeline.combined]]) computes none.
+    * `stemLower` is filled for VERB tokens only (null elsewhere) — its
+    * readers, the PD verbs and the main verbs, touch nothing else.
     *
     * `heads(i)` is token i's dependency head (root points to itself);
     * `extraLabels` carries the labels of synthetic combined-sentence
-    * links ((min,max)-packed key → label, `data.py:1617-1666`).
+    * links ([[SentencePrep.linkKey]] → label, `data.py:1617-1666`).
     */
   final class SentencePrep(val toks: IndexedSeq[Tok], val heads: Array[Int],
                            val adj: Array[List[Int]], val depth: Array[Int],
                            val extraLabels: Map[Long, String] = Map.empty,
                            sentPos: IndexedSeq[String] = null) {
-    // per-index caches (not eager arrays): a pair typically touches only
-    // its path/between tokens, so cross-context preps stay cheap while
-    // dense same-sentence preps still amortize fully
-    private val posCache = new Array[String](toks.length)
-    def pos(i: Int): String = {
-      if (posCache(i) == null) posCache(i) = DepGraph.coarsePos(toks(i).word)
-      posCache(i)
-    }
-    private val maskCache = new Array[String](toks.length)
-    def maskedBase(i: Int): String = {
-      if (maskCache(i) == null) maskCache(i) = TextOps.maskedWord(toks(i).word)
-      maskCache(i)
-    }
-    private val stemCache = new Array[String](toks.length)
-    def stem(i: Int): String = {
-      if (stemCache(i) == null) stemCache(i) = Porter.stem(toks(i).word)
-      stemCache(i)
-    }
-    private val lowerCache = new Array[String](toks.length)
-    def lower(i: Int): String = {
-      if (lowerCache(i) == null) lowerCache(i) = toks(i).word.toLowerCase
-      lowerCache(i)
-    }
+    private def perToken(f: Int => String): Array[String] = Array.tabulate(toks.length)(f)
+    lazy val pos: Array[String] = perToken(i => DepGraph.coarsePos(toks(i).word))
+    lazy val maskedBase: Array[String] = perToken(i => TextOps.maskedWord(toks(i).word))
+    lazy val stem: Array[String] = perToken(i => Porter.stem(toks(i).word))
+    lazy val lower: Array[String] = perToken(i => toks(i).word.toLowerCase)
+    lazy val stemLower: Array[String] =
+      perToken(i => if (pos(i) == "VERB") Porter.stem(lower(i)) else null)
+    // BagOfWords / StemmedBagOfWords membership: non-PUNCT and not a
+    // stopword (by the lowercased word, resp. by the stem)
+    lazy val inBowText: Array[Boolean] =
+      Array.tabulate(toks.length)(i => pos(i) != "PUNCT" && !stopWords.contains(lower(i)))
+    lazy val inBowStem: Array[Boolean] =
+      Array.tabulate(toks.length)(i => pos(i) != "PUNCT" && !stopWords.contains(stem(i)))
     /** Rule-assigned dependency label of each token's edge to its head
       * (`token.features['dep']` in the reference) — shared by the PD edge
       * n-grams, the chain features and the negation test.
@@ -222,15 +219,8 @@ object RelationScoring {
       else DepGraph.depLabels(toks, heads)
     // labeled-dependency form (`data.py:1106-1118`): odd # of `neg` deps
     lazy val negated: Boolean = DepGraph.isNegatedLabeled(depLabels)
-    private val stemLowerCache = new Array[String](toks.length)
-    def stemLower(i: Int): String = {
-      if (stemLowerCache(i) == null) stemLowerCache(i) = Porter.stem(lower(i))
-      stemLowerCache(i)
-    }
-    lazy val mainVerbStems: List[String] = {
-      val rootIdx = depth.indices.find(depth(_) == 0).getOrElse(0)
-      DepGraph.mainVerbs(toks, adj, rootIdx).map(stemLower).toList
-    }
+    lazy val mainVerbStems: List[String] =
+      DepGraph.mainVerbs(toks, adj, DepGraph.root(heads)).map(stemLower(_)).toList
     // stems of masked entity tokens: a class id or a masked word
     private val maskStems = scala.collection.mutable.HashMap.empty[String, String]
     def stemOfMask(masked: String): String =
@@ -328,8 +318,6 @@ object RelationScoring {
         out.toArray
       })
 
-    private def pack(u: Int, v: Int): Long =
-      (math.min(u, v).toLong << 32) | math.max(u, v).toLong
     /** Dependency label of the edge (u, v): the rule-assigned label of
       * the edge's LOWER node for parser edges, the synthetic link's label
       * otherwise (`PathNode.edge_type`).
@@ -337,7 +325,7 @@ object RelationScoring {
     def edgeLabel(u: Int, v: Int): String =
       if (v < heads.length && heads(v) == u) depLabels(v)
       else if (u < heads.length && heads(u) == v) depLabels(u)
-      else extraLabels.getOrElse(pack(u, v), "user")
+      else extraLabels.getOrElse(SentencePrep.linkKey(u, v), "user")
     /** Direction of the step u→v: "F" when u is v's head, "B" when v is
       * u's head (`PathNode.str_direction`); synthetic links read forward
       * in insertion (left-to-right) order.
@@ -349,6 +337,12 @@ object RelationScoring {
   }
 
   object SentencePrep {
+    /** Key of the synthetic link (u, v) in `extraLabels`: the two token
+      * indices packed into one Long, smaller first.
+      */
+    def linkKey(u: Int, v: Int): Long =
+      (math.min(u, v).toLong << 32) | math.max(u, v).toLong
+
     /** The parse of one sentence: one sentencePos pass shared by heads
       * AND depLabels, the head assignment, its adjacency and the BFS
       * depths from its root.
@@ -684,13 +678,12 @@ object RelationScoring {
       var i = 0
       while (i < toks.length) {
         val w = toks(i).word
-        val isPunct = prep.pos(i) == "PUNCT"
-        if (!isPunct && !stopWords.contains(prep.lower(i))) {
+        if (prep.inBowText(i)) {
           add2(N.BowText, w)
           if (annClass(i) != null)
             neCounts.update(w, neCounts.getOrElse(w, 0) + 1)
         }
-        if (!isPunct && !stopWords.contains(prep.stem(i)))
+        if (prep.inBowStem(i))
           add2(N.BowStem, prep.stem(i))
         i += 1
       }

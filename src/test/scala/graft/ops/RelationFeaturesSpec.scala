@@ -163,6 +163,24 @@ class RelationFeaturesSpec extends SparkSpec {
     assert(ls2.count(_ == "neg") == 2)
   }
 
+  test("main_verb= is found from the heads' root, not from the depth origin") {
+    import graft.nlp.{DepGraph, TextOps}
+    val text = "merge calls table and sent stream"
+    val toks = TextOps.segment(text, "generic").head._4
+    val hs = DepGraph.heads(toks)
+    val adj = DepGraph.adjacency(toks.length, hs)
+    // 'calls' is the root; 'sent' is a second verb off the root
+    assert(DepGraph.root(hs) == 1)
+    assert(DepGraph.coarsePos("sent") == "VERB")
+    // depths BFS'd from 'sent' put depth 0 on a token that is not the root
+    val prep = new RelationScoring.SentencePrep(toks, hs, adj, DepGraph.depths(adj, 4))
+    def mention(cls: String, i: Int) =
+      Mention("c0", 0, 0, cls, toks(i).begin, toks(i).end, toks(i).word, 1.0, toks(i).word)
+    val f = RelationScoring.features(prep, mention("op", 0), mention("obj", 2),
+      sameSentence = true, sentDist = 0, RelationScoring.EdgeCtx.empty)
+    assert(f.keys.filter(_.startsWith("main_verb=")).toSet == Set("main_verb=call"))
+  }
+
   test("feature-name hash indices are pinned (the committed weights' index space)") {
     val pinned = Seq("same_sent" -> 65826, "f_bow=table" -> 124163,
       "pd_full_1g=[S nsubj-B" -> 106956, "pd_dir_2g=nsubj-B~dobj-F" -> 113771,

@@ -8,7 +8,16 @@
 # each side per round, alternating which side goes first. Prints one line
 # per run, then per end-to-end metric: each side's median, the base's
 # quartiles, the ratio change/base and, for the metrics BENCHMARK.json
-# lists, the rounds the change won. Each side builds its own engine into
+# lists, the rounds the change won and a verdict against the metric's
+# `bound` (the first that holds):
+#   worse       the change median is worse than the base median by more
+#               than the bound;
+#   unresolved  the base's IQR/median exceeds the bound and not every
+#               change run beats every base run;
+#   gain        the change won at least 90% of the pairs and the medians
+#               differ by more than the base IQR;
+#   ok          otherwise.
+# Each side builds its own engine into
 # its .bench_build/ on its first run, outside the timed window. With
 # trace=1 each side ends with one `--trace 1` run, and the two sides'
 # per-layer values are printed next to each other. Exits 1 when a run
@@ -57,7 +66,7 @@ runs = {"base": {}, "change": {}}
 for line in open(path):
     side, rnd, out = line.rstrip("\n").split("\t", 2)
     runs[side][rnd] = json.loads(out)
-better = {m["name"]: m["better"] for m in json.load(open("BENCHMARK.json"))["end_to_end"]}
+e2e = {m["name"]: m for m in json.load(open("BENCHMARK.json"))["end_to_end"]}
 
 def value(r, k):
     m = r.get("metrics", {}).get(k)
@@ -67,7 +76,8 @@ def quartiles(vals):
     return statistics.quantiles(vals, n=4) if len(vals) > 1 else [vals[0]] * 3
 
 print("%s seed %s: base %s vs this tree, %d rounds" % (workload, seed, base, len(runs["base"])))
-print("%-16s %10s %22s %10s %7s %6s" % ("metric", "base", "base q1..q3", "change", "ratio", "won"))
+print("%-16s %10s %22s %10s %7s %6s %10s"
+      % ("metric", "base", "base q1..q3", "change", "ratio", "won", "verdict"))
 names = sorted({k for rs in runs.values() for r in rs.values() for k in r.get("metrics", {})})
 for k in names:
     vals = {s: [v for v in (value(r, k) for r in rs.values()) if v is not None]
@@ -76,15 +86,26 @@ for k in names:
         continue
     mb, mc = statistics.median(vals["base"]), statistics.median(vals["change"])
     q1, _, q3 = quartiles(vals["base"])
-    won = "-"
-    if k in better:
+    won = verdict = "-"
+    if k in e2e:
         pairs = [(value(runs["base"][r], k), value(runs["change"][r], k))
                  for r in runs["base"] if r in runs["change"]]
         pairs = [(b, c) for b, c in pairs if b is not None and c is not None]
-        sign = 1 if better[k] == "higher" else -1
-        won = "%d/%d" % (sum(1 for b, c in pairs if sign * (c - b) > 0), len(pairs))
-    print("%-16s %10.4f %10.4f..%-10.4f %10.4f %7.3f %6s"
-          % (k, mb, q1, q3, mc, mc / mb if mb else float("nan"), won))
+        sign = 1 if e2e[k]["better"] == "higher" else -1
+        wins = sum(1 for b, c in pairs if sign * (c - b) > 0)
+        won = "%d/%d" % (wins, len(pairs))
+        bound = e2e[k]["bound"]
+        if mb and sign * (mc - mb) / mb < -bound:
+            verdict = "worse"
+        elif q3 - q1 > bound * abs(mb) and not all(
+                sign * (c - b) > 0 for c in vals["change"] for b in vals["base"]):
+            verdict = "unresolved"
+        elif pairs and wins >= 0.9 * len(pairs) and abs(mc - mb) > q3 - q1:
+            verdict = "gain"
+        else:
+            verdict = "ok"
+    print("%-16s %10.4f %10.4f..%-10.4f %10.4f %7.3f %6s %10s"
+          % (k, mb, q1, q3, mc, mc / mb if mb else float("nan"), won, verdict))
 # the per-layer evidence of one traced run per side
 if os.path.exists(traced):
     tr = {}
