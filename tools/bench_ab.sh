@@ -14,13 +14,14 @@
 #               than the bound;
 #   unresolved  the base's IQR/median exceeds the bound and not every
 #               change run beats every base run;
-#   gain        the change won at least 90% of the pairs and the medians
-#               differ by more than the base IQR;
+#   gain        at least 10 pairs ran, the change won at least 90% of
+#               them and the medians differ by more than the base IQR
+#               (the quartiles of fewer runs do not measure spread);
 #   ok          otherwise.
-# Each side builds its own engine into
-# its .bench_build/ on its first run, outside the timed window. With
-# trace=1 each side ends with one `--trace 1` run, and the two sides'
-# per-layer values are printed next to each other. Exits 1 when a run
+# Each side builds its own engine into its .bench_build/ on its first
+# run, outside the timed window. With trace=1 each side ends with one
+# `--trace 1` run, and the two sides' per-layer values are printed next
+# to each other. Exits 1 when a run
 # reported no result or failed one of perfbench's checks.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -100,7 +101,7 @@ for k in names:
         elif q3 - q1 > bound * abs(mb) and not all(
                 sign * (c - b) > 0 for c in vals["change"] for b in vals["base"]):
             verdict = "unresolved"
-        elif pairs and wins >= 0.9 * len(pairs) and abs(mc - mb) > q3 - q1:
+        elif len(pairs) >= 10 and wins >= 0.9 * len(pairs) and abs(mc - mb) > q3 - q1:
             verdict = "gain"
         else:
             verdict = "ok"
