@@ -181,6 +181,16 @@ class RelationFeaturesSpec extends SparkSpec {
     assert(f.keys.filter(_.startsWith("main_verb=")).toSet == Set("main_verb=call"))
   }
 
+  test("bag of words drops stopwords by the word, stemmed bag by the stem") {
+    val f = KgPipeline.candidateEdges("c0", Seq(turn(0, "merge doing this table")), cfg,
+      tagger, withFeatures = true).head.feats
+    // 'this' is a stopword, its stem 'thi' is not; 'doing' is not, its stem 'do' is
+    assert(!f.contains("bow_text=this"))
+    assert(f("bow_stem=thi") == 1.0)
+    assert(f("bow_text=doing") == 1.0)
+    assert(!f.contains("bow_stem=do"))
+  }
+
   test("feature-name hash indices are pinned (the committed weights' index space)") {
     val pinned = Seq("same_sent" -> 65826, "f_bow=table" -> 124163,
       "pd_full_1g=[S nsubj-B" -> 106956, "pd_dir_2g=nsubj-B~dobj-F" -> 113771,
