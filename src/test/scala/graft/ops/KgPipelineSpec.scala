@@ -253,6 +253,68 @@ class KgPipelineSpec extends SparkSpec {
     assert((chat.length, scoreDigest(chat)) == ((270, "5dc5388612f43beb")))
   }
 
+  test("multi-token, zero-width and part-token mentions: features and score bits are pinned") {
+    import GazetteerTagger.{gazetteer, ObjClass => Obj, OpClass => Op}
+    // a run of adjacent dictionary words is one mention of its first
+    // word's class, and the run's last word is also a mention of its own
+    // class, listed after the run (overlapping spans: the first one
+    // listed classes the shared token); 'spark' adds a zero-width
+    // mention and 'window' one over part of the token, so no token lies
+    // fully inside either
+    val tagger: IndexedSeq[Tok] => Seq[(String, Int, Int)] = toks => {
+      val out = Vector.newBuilder[(String, Int, Int)]
+      var i = 0
+      while (i < toks.length) {
+        gazetteer.get(toks(i).word) match {
+          case None => i += 1
+          case Some(cls) =>
+            var j = i
+            while (j + 1 < toks.length && gazetteer.contains(toks(j + 1).word)) j += 1
+            out += ((cls, toks(i).begin, toks(j).end))
+            if (j > i) out += ((gazetteer(toks(j).word), toks(j).begin, toks(j).end))
+            i = j + 1
+        }
+      }
+      toks.foreach { t =>
+        if (t.word == "spark") out += ((Obj, t.begin, t.begin))
+        if (t.word == "window") out += ((Op, t.begin + 2, t.end))
+      }
+      out.result()
+    }
+    val vocab = Vector("merge", "filter", "scan", "sort", "table", "vector", "stream",
+      "batch", "spark", "window", "the", "a", "fast", "join", "not", "row", "calls")
+    val textRng = new scala.util.Random(13)
+    def sentence: String =
+      Seq.fill(4 + textRng.nextInt(10))(vocab(textRng.nextInt(vocab.length))).mkString(" ")
+    val convs = (0 until 8).map { c =>
+      (0 until 3).map { t =>
+        val text = Seq.fill(1 + textRng.nextInt(3))(sentence).mkString(". ") + "."
+        Turn(f"conv_$c%06d", t, "user", text, None, new java.sql.Timestamp(0L))
+      }
+    }
+    val cfg = KgPipeline.Config("r_op_obj", Op, Obj, window = 1, tokenizer = "generic")
+    val rng = new scala.util.Random(31)
+    val model = RelationScoring.LinearModel(
+      Array.fill(RelationScoring.Dims)(rng.nextDouble() - 0.5), b = 0.5)
+    val feats = convs.flatMap(ts => KgPipeline.candidateEdges(ts.head.conv_id, ts, cfg,
+      tagger, withFeatures = true))
+    val scored = convs.flatMap(ts => KgPipeline.candidateEdges(ts.head.conv_id, ts, cfg,
+      tagger, withFeatures = false, scorer = Some(model)))
+    assert(feats.exists(_.sameSentence) && feats.exists(!_.sameSentence))
+    assert(feats.exists(c => c.m1.text.contains(' ')) && feats.exists(c => c.m2.text.contains(' ')))
+    assert(feats.exists(_.m1.text == "ndow") && feats.exists(c => c.m2.begin == c.m2.end))
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    feats.foreach { c =>
+      md.update(s"${c.key}\t${c.turn1}\t${c.sameSentence}\n".getBytes("UTF-8"))
+      c.feats.toSeq.sortBy(_._1).foreach { case (f, v) =>
+        md.update(s"$f\t${java.lang.Double.doubleToLongBits(v)}\n".getBytes("UTF-8"))
+      }
+    }
+    val featDigest = md.digest().take(8).map(b => f"${b & 0xff}%02x").mkString
+    assert((feats.length, featDigest) == ((695, "818a568dbd6dabef")))
+    assert((scored.length, scoreDigest(scored)) == ((695, "0c07ed3a1341a551")))
+  }
+
   test("tmvar fast path == cascade on mixed content") {
     val samples = Seq("plain lowercase words only", "Mixed Case c.2708_2711delTTAG",
       "digits 123abc", "naive caf text", "a, b; c!", "")
