@@ -720,13 +720,21 @@ object DepGraph {
     Nil
   }
 
-  /** Head token of an entity span: the token with minimum depth, nouns
-    * preferred, first wins — `Part.set_entities_head_tokens`
-    * (`data.py:1162-1220`).
+  /** Index range (first, last) of the tokens lying fully inside [begin,
+    * end], (-1, -1) if none: one range, as tokens are offset-ascending.
     */
-  def entityHead(toks: IndexedSeq[Tok], depth: Array[Int], begin: Int, end: Int): Int = {
-    val in = toks.indices.filter(i => toks(i).begin >= begin && toks(i).end <= end)
-    if (in.isEmpty) return -1
+  def tokenRange(toks: IndexedSeq[Tok], begin: Int, end: Int): (Int, Int) = {
+    def inside(t: Tok) = t.begin >= begin && t.end <= end
+    (toks.indexWhere(inside), toks.lastIndexWhere(inside))
+  }
+
+  /** Head token of an entity's [[tokenRange]] (-1 if empty): the token
+    * with minimum depth, nouns preferred, first wins —
+    * `Part.set_entities_head_tokens` (`data.py:1162-1220`).
+    */
+  def entityHead(toks: IndexedSeq[Tok], depth: Array[Int], range: (Int, Int)): Int = {
+    if (range._1 < 0) return -1
+    val in = range._1 to range._2
     val nonPunct = in.filter(i => coarsePos(toks(i).word) != "PUNCT")
     val cands = if (nonPunct.nonEmpty) nonPunct else in
     val nouns = cands.filter(i => coarsePos(toks(i).word) == "NOUN")

@@ -188,6 +188,8 @@ object RelationScoring {
     * cross-context input of [[KgPipeline.combined]]) computes none.
     * `stemLower` is filled for VERB tokens only (null elsewhere) — its
     * readers, the PD verbs and the main verbs, touch nothing else.
+    * Each mention's token range and head are resolved once, by [[span]],
+    * which needs `toks` offset-ascending (TextOps.segment, combined).
     *
     * `heads(i)` is token i's dependency head (root points to itself);
     * `extraLabels` carries the labels of synthetic combined-sentence
@@ -197,6 +199,7 @@ object RelationScoring {
                            val adj: Array[List[Int]], val depth: Array[Int],
                            val extraLabels: Map[Long, String] = Map.empty,
                            sentPos: IndexedSeq[String] = null) {
+    import SentencePrep._
     private def perToken(f: Int => String): Array[String] = Array.tabulate(toks.length)(f)
     lazy val pos: Array[String] = perToken(i => DepGraph.coarsePos(toks(i).word))
     lazy val maskedBase: Array[String] = perToken(i => TextOps.maskedWord(toks(i).word))
@@ -227,31 +230,20 @@ object RelationScoring {
       maskStems.getOrElseUpdate(masked, Porter.stem(masked))
     // (Int, Int) keys packed into one Long: no tuple, no boxing on lookup
     private def key(a: Int, b: Int): Long = (a.toLong << 32) | (b & 0xffffffffL)
-    private val headCache = scala.collection.mutable.LongMap.empty[Int]
-    def head(begin: Int, end: Int): Int =
-      headCache.getOrElseUpdate(key(begin, end), DepGraph.entityHead(toks, depth, begin, end))
+    private val spanCache = scala.collection.mutable.LongMap.empty[Span]
+    def span(m: Mention): Span = spanCache.getOrElseUpdate(key(m.begin, m.end), {
+      val (first, last) = DepGraph.tokenRange(toks, m.begin, m.end)
+      Span(first, last, DepGraph.entityHead(toks, depth, (first, last)))
+    })
     private val pathCache = scala.collection.mutable.LongMap.empty[Vector[Int]]
     def path(a: Int, b: Int): Vector[Int] =
       pathCache.getOrElseUpdate(key(a, b), DepGraph.shortestPath(adj, a, b))
 
-    /** The pair-independent tables of the sentence's mentions: per token,
-      * the class of the first mention containing it (null if none), and
-      * the (class, mention count) list in class order. Kept for the last
-      * mention list seen; every pair of a sentence passes the same one.
-      */
-    final class MentionTables(ms: Seq[Mention]) {
-      val classOf: Array[String] = Array.tabulate(toks.length) { i =>
-        val t = toks(i)
-        ms.find(m => t.begin >= m.begin && t.end <= m.end).map(_.class_id).orNull
-      }
-      val classCounts: Array[(String, Int)] =
-        ms.groupBy(_.class_id).toArray.map { case (c, g) => (c, g.size) }.sortBy(_._1)
-    }
     private var tablesFor: Seq[Mention] = null
     private var tables: MentionTables = null
     def mentionTables(ms: Seq[Mention]): MentionTables = {
       if (tables == null || (tablesFor ne ms)) {
-        tables = new MentionTables(ms)
+        tables = new MentionTables(this, ms)
         tablesFor = ms
       }
       tables
@@ -282,18 +274,6 @@ object RelationScoring {
       out
     }
 
-    /** One step of an entity-head dependency chain walk
-      * (`entityhead.py:264-281`): the visited token, remaining depth,
-      * direction (true = -fw via the head, false = -rv via a child), the
-      * chain string accumulated BEFORE this step, and the dependency
-      * LABEL of the traversed edge (the reference's
-      * `token.features['dep']` for upward steps, `dependency[1]` for
-      * downward ones — both are the label of the edge's lower node).
-      * Pair-independent — cached per start token and replayed per
-      * candidate pair.
-      */
-    final case class ChainVisit(token: Int, depth: Int, fw: Boolean,
-                                chain: String, label: String)
     private val chainCache = scala.collection.mutable.HashMap.empty[Int, Array[ChainVisit]]
     def chainVisitsOf(start: Int): Array[ChainVisit] =
       chainCache.getOrElseUpdate(start, {
@@ -337,6 +317,38 @@ object RelationScoring {
   }
 
   object SentencePrep {
+    /** A mention's [[DepGraph.tokenRange]] and [[DepGraph.entityHead]]. */
+    final case class Span(first: Int, last: Int, head: Int) {
+      def contains(i: Int): Boolean = first <= i && i <= last
+    }
+
+    /** The pair-independent tables of a sentence's mentions: per token,
+      * the class of the first mention containing it (null if none), and
+      * the (class, mention count) list in class order. A prep keeps them
+      * for the last mention list seen; every pair of a sentence passes it.
+      */
+    final class MentionTables(prep: SentencePrep, ms: Seq[Mention]) {
+      val classOf: Array[String] = new Array[String](prep.toks.length)
+      // in reverse, so the first mention containing a token writes last
+      for (m <- ms.reverseIterator; s = prep.span(m); i <- s.first to s.last if i >= 0)
+        classOf(i) = m.class_id
+      val classCounts: Array[(String, Int)] =
+        ms.groupBy(_.class_id).toArray.map { case (c, g) => (c, g.size) }.sortBy(_._1)
+    }
+
+    /** One step of an entity-head dependency chain walk
+      * (`entityhead.py:264-281`): the visited token, remaining depth,
+      * direction (true = -fw via the head, false = -rv via a child), the
+      * chain string accumulated BEFORE this step, and the dependency
+      * LABEL of the traversed edge (the reference's
+      * `token.features['dep']` for upward steps, `dependency[1]` for
+      * downward ones — both are the label of the edge's lower node).
+      * Pair-independent — cached per start token and replayed per
+      * candidate pair.
+      */
+    final case class ChainVisit(token: Int, depth: Int, fw: Boolean,
+                                chain: String, label: String)
+
     /** Key of the synthetic link (u, v) in `extraLabels`: the two token
       * indices packed into one Long, smaller first.
       */
@@ -474,8 +486,9 @@ object RelationScoring {
     * state precomputed in [[N]]) followed by its variable parts — tokens,
     * labels, class ids, counts and the `~` / `_` separators — so the
     * scoring path folds the name's hash without assembling it.
-    * Pair-independent work (stems, per-token mention classes, per-class
-    * mention counts, heads, paths, chain walks) lives in [[SentencePrep]].
+    * Pair-independent work (stems, mention token ranges and heads,
+    * per-token mention classes, per-class mention counts, paths, chain
+    * walks) lives in [[SentencePrep]].
     */
   private def enumerate(
       prep: SentencePrep,
@@ -497,41 +510,20 @@ object RelationScoring {
       sink.emit(1.0)
     }
 
-    val h1 = prep.head(m1.begin, m1.end)
-    val h2 = prep.head(m2.begin, m2.end)
-
-    def inSpan(t: Tok, m: Mention): Boolean = t.begin >= m.begin && t.end <= m.end
-    // per-pair cache: chains/paths/BOW revisit the same tokens many times
-    val maskedCache = new Array[String](toks.length)
-    def masked(i: Int): String = {
-      var v = maskedCache(i)
-      if (v == null) {
-        val t = toks(i)
-        v = if (inSpan(t, m1)) m1.class_id
-        else if (inSpan(t, m2)) m2.class_id
-        else prep.maskedBase(i)
-        maskedCache(i) = v
-      }
-      v
-    }
+    val s1 = prep.span(m1); val s2 = prep.span(m2)
+    val h1 = s1.head; val h2 = s2.head
+    def masked(i: Int): String =
+      if (s1.contains(i)) m1.class_id else if (s2.contains(i)) m2.class_id else prep.maskedBase(i)
     val tables =
       if (ctx.sentMentions.nonEmpty) prep.mentionTables(ctx.sentMentions) else null
     /** ann class of token i: the edge's entities first, then any other
       * sentence mention containing it (masked_text / ann_type semantics).
       */
-    def annClass(i: Int): String = {
-      val t = toks(i)
-      if (inSpan(t, m1)) m1.class_id
-      else if (inSpan(t, m2)) m2.class_id
+    def annClass(i: Int): String =
+      if (s1.contains(i)) m1.class_id
+      else if (s2.contains(i)) m2.class_id
       else if (tables == null) null
       else tables.classOf(i)
-    }
-
-    // token index bounds of each mention (first/last token within span)
-    def firstTok(m: Mention): Int = toks.indexWhere(t => inSpan(t, m))
-    def lastTok(m: Mention): Int = toks.lastIndexWhere(t => inSpan(t, m))
-    val e1First = firstTok(m1); val e1Last = lastTok(m1)
-    val e2First = firstTok(m2); val e2Last = lastTok(m2)
 
     // ==== SentenceFeatureGenerator (`relations/new/sentence.py`) ========
     sink.start(N.Order); sink.part(m1.class_id); sink.char('_'); sink.part(m2.class_id)
@@ -574,8 +566,8 @@ object RelationScoring {
       ti += 1
     }
     add(N.TokensCount, toks.length.toDouble)
-    if (e1First >= 0) add(N.TokensBefore, e1First.toDouble)
-    if (e2Last >= 0) add(N.TokensAfter, (toks.length - 1 - e2Last).toDouble)
+    if (s1.first >= 0) add(N.TokensBefore, s1.first.toDouble)
+    if (s2.last >= 0) add(N.TokensAfter, (toks.length - 1 - s2.last).toDouble)
 
     val between = if (h1 >= 0 && h2 >= 0) {
       val lo = math.min(h1, h2); val hi = math.max(h1, h2)
@@ -630,10 +622,10 @@ object RelationScoring {
     // text, stem of the masked text (the reference stems the mask — its
     // own TODO notes the oddity; mirrored), and annotated_types = the
     // token's entity class + entityK_class marker.
-    def entityTokenFeats(side: SideNames, first: Int, last: Int, cls: String): Unit =
-      if (first >= 0) {
-        var i = first
-        while (i <= last) {
+    def entityTokenFeats(side: SideNames, s: SentencePrep.Span, cls: String): Unit =
+      if (s.first >= 0) {
+        var i = s.first
+        while (i <= s.last) {
           add2(side.txt, prep.lower(i))
           add2(side.pos, prep.pos(i))
           add2(side.masked, masked(i))
@@ -643,8 +635,8 @@ object RelationScoring {
           i += 1
         }
       }
-    entityTokenFeats(N.Side1, e1First, e1Last, m1.class_id)
-    entityTokenFeats(N.Side2, e2First, e2Last, m2.class_id)
+    entityTokenFeats(N.Side1, s1, m1.class_id)
+    entityTokenFeats(N.Side2, s2, m2.class_id)
 
     // ==== IntermediateTokens (`context.py:76-166`): tokens strictly
     // between the heads, directional (fwd when h1 < h2, bkd otherwise)
@@ -772,11 +764,10 @@ object RelationScoring {
     }
 
     // LD path: e1-last .. e2-first in offset order (`dependency.py:163-168`)
-    if (e1First >= 0 && e2First >= 0) {
+    if (s1.first >= 0 && s2.first >= 0) {
       val (ldFrom, ldTo) =
-        if (m1.begin <= m2.begin) (e1Last, e2First) else (e2Last, e1First)
-      if (ldFrom >= 0 && ldTo > ldFrom)
-        pathFeatures(N.Ld, ldFrom to ldTo, withEdges = false)
+        if (m1.begin <= m2.begin) (s1.last, s2.first) else (s2.last, s1.first)
+      pathFeatures(N.Ld, ldFrom to ldTo, withEdges = false)
     }
 
     // PD path (`dependency.py:170`): shortest path between heads

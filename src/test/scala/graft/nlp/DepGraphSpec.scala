@@ -62,8 +62,8 @@ class DepGraphSpec extends AnyFunSuite {
     val adj = DepGraph.adjacency(toks.length, heads)
     val root = heads.indices.find(i => heads(i) == i).get
     val depth = DepGraph.depths(adj, root)
-    assert(DepGraph.entityHead(toks, depth, 12, 18) == 3) // "the db" → db? both nouns, min depth
-    assert(DepGraph.entityHead(toks, depth, 0, 5) == 0)
+    assert(DepGraph.entityHead(toks, depth, DepGraph.tokenRange(toks, 12, 18)) == 3) // "the db" → db? both nouns, min depth
+    assert(DepGraph.entityHead(toks, depth, DepGraph.tokenRange(toks, 0, 5)) == 0)
   }
 
   test("negation: odd count of negation tokens") {

@@ -181,6 +181,59 @@ class RelationFeaturesSpec extends SparkSpec {
     assert(f.keys.filter(_.startsWith("main_verb=")).toSet == Set("main_verb=call"))
   }
 
+  test("a mention's cached token range and head == the tokens fully inside its span") {
+    import graft.nlp.{DepGraph, TextOps}
+    val rng = new scala.util.Random(23)
+    val words = Vector("merge", "Table", "x2", "c.2708_2711delTTAG", "don't", "a", "-",
+      "scan,", "b/c", "café", "3.5", "(db)", "stream", "not", "calls", "!", "NaCl")
+    // the filter form every mention test used before token ranges
+    def inside(toks: IndexedSeq[Tok], b: Int, e: Int) =
+      toks.indices.filter(i => toks(i).begin >= b && toks(i).end <= e)
+    def filterHead(toks: IndexedSeq[Tok], depth: Array[Int], b: Int, e: Int): Int = {
+      val in = inside(toks, b, e)
+      if (in.isEmpty) return -1
+      val nonPunct = in.filter(i => DepGraph.coarsePos(toks(i).word) != "PUNCT")
+      val cands = if (nonPunct.nonEmpty) nonPunct else in
+      val nouns = cands.filter(i => DepGraph.coarsePos(toks(i).word) == "NOUN")
+      (if (nouns.nonEmpty) nouns else cands).minBy(depth(_))
+    }
+    var checked = 0
+    (0 until 150).foreach { _ =>
+      val text = Seq.fill(1 + rng.nextInt(30))(words(rng.nextInt(words.length))).mkString(" ")
+      Seq("generic", "tmvar").foreach { tokenizer =>
+        val sents = TextOps.segment(text, tokenizer).map(_._4).filter(_.nonEmpty)
+        val single = sents.map(RelationScoring.SentencePrep.of)
+        val cross = for (a <- single; b <- single) yield {
+          val c = KgPipeline.combined(a.toks, b.toks, a.heads, b.heads)
+          new RelationScoring.SentencePrep(c.toks, c.heads, c.adj, c.depth, c.extraLabels)
+        }
+        (single ++ cross).foreach { prep =>
+          val toks = prep.toks
+          assert(toks.forall(t => t.begin <= t.end), toks)
+          assert(toks.zip(toks.drop(1)).forall { case (a, b) => a.end <= b.begin }, toks)
+          (0 until 30).foreach { _ =>
+            // spans around token boundaries (exact, one char in or out),
+            // zero-width and reversed ones included
+            def jitter = rng.nextInt(5) match { case 0 => -1; case 1 => 1; case _ => 0 }
+            val b = toks(rng.nextInt(toks.length)).begin + jitter
+            val e = if (rng.nextInt(8) == 0) b else toks(rng.nextInt(toks.length)).end + jitter
+            val m = Mention("c0", 0, 0, "op", b, e, "", 1.0, "")
+            val s = prep.span(m)
+            val in = inside(toks, b, e)
+            if (in.isEmpty) assert((s.first, s.last) == ((-1, -1)), (b, e))
+            else assert((s.first to s.last) == in, (b, e))
+            val head = filterHead(toks, prep.depth, b, e)
+            assert(s.head == head, (b, e))
+            assert(DepGraph.entityHead(toks, prep.depth, DepGraph.tokenRange(toks, b, e)) == head)
+            assert(prep.span(m) eq s)
+            if (in.nonEmpty) checked += 1
+          }
+        }
+      }
+    }
+    assert(checked > 1000)
+  }
+
   test("bag of words drops stopwords by the word, stemmed bag by the stem") {
     val f = KgPipeline.candidateEdges("c0", Seq(turn(0, "merge doing this table")), cfg,
       tagger, withFeatures = true).head.feats
