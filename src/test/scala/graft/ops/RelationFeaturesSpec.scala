@@ -186,7 +186,7 @@ class RelationFeaturesSpec extends SparkSpec {
     val rng = new scala.util.Random(23)
     val words = Vector("merge", "Table", "x2", "c.2708_2711delTTAG", "don't", "a", "-",
       "scan,", "b/c", "café", "3.5", "(db)", "stream", "not", "calls", "!", "NaCl")
-    // the filter form every mention test used before token ranges
+    // reference forms: filter every token by full containment, then pick the head
     def inside(toks: IndexedSeq[Tok], b: Int, e: Int) =
       toks.indices.filter(i => toks(i).begin >= b && toks(i).end <= e)
     def filterHead(toks: IndexedSeq[Tok], depth: Array[Int], b: Int, e: Int): Int = {
