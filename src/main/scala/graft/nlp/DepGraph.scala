@@ -639,6 +639,37 @@ object DepGraph {
     Vector.empty
   }
 
+  /** [[shortestPath]]'s BFS from `u` run to the end: the predecessor of
+    * every node (u for u, -1 when unreachable). Neighbours are visited in
+    * the same ascending order and each entry is set once, so
+    * [[treePath]] gives `shortestPath(adj, u, v)` for every v.
+    */
+  def bfsTree(adj: Array[List[Int]], u: Int): Array[Int] = {
+    val prev = Array.fill(adj.length)(-1)
+    val q = new Array[Int](adj.length)
+    var qh = 0; var qt = 1
+    prev(u) = u; q(0) = u
+    while (qh < qt) {
+      val x = q(qh); qh += 1
+      adj(x).sorted.foreach { y =>
+        if (prev(y) < 0) { prev(y) = x; q(qt) = y; qt += 1 }
+      }
+    }
+    prev
+  }
+
+  /** The path u..v in `u`'s [[bfsTree]], empty when v is unreachable. */
+  def treePath(prev: Array[Int], u: Int, v: Int): Array[Int] =
+    if (prev(v) < 0) Array.emptyIntArray
+    else {
+      var n = 1; var c = v
+      while (c != u) { c = prev(c); n += 1 }
+      val path = new Array[Int](n)
+      c = v
+      while (n > 0) { n -= 1; path(n) = c; c = prev(c) }
+      path
+    }
+
   /** All-pairs distances (Floyd-Warshall, `utils/graphs.py:128-166`) —
     * used by the property tests to cross-check BFS.
     */

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.model._
-import graft.nlp.{DepGraph, TextOps}
+import graft.nlp.{DepGraph, Porter, TextOps}
 
 /** The fused end-to-end KG extraction pipeline — the engine's headline
   * operator and the unit the BASELINE throughput metric (turns/sec) is
@@ -107,17 +107,22 @@ object KgPipeline {
     // row per turn_idx in input order (sortBy is stable), matching the
     // first-write-wins rule of StreamingKg.ConvState.
     val sorted = turns.sortBy(_.turn_idx).distinctBy(_.turn_idx)
+    // each distinct word of the conversation is stemmed once
+    val stemMemo = scala.collection.mutable.HashMap.empty[String, String]
+    val stems: String => String = w => stemMemo.getOrElseUpdate(w, Porter.stem(w))
     // per-sentence dependency parse memoized across all edges touching
     // the sentence (the reference memoizes its per-sentence graphs the
     // same way, utils/graph.py:29-46)
     final case class SentCtx(turnIdx: Int, sentIdx: Int, toks: IndexedSeq[Tok],
         mentions: Seq[Mention]) {
-      lazy val prep: RelationScoring.SentencePrep = RelationScoring.SentencePrep.of(toks)
-      // the class-1 and class-2 mentions, each with its entity string
-      val side1: Vector[(Mention, String)] = ofClass(cfg.class1)
-      val side2: Vector[(Mention, String)] = ofClass(cfg.class2)
-      private def ofClass(cls: String) = mentions.iterator.filter(_.class_id == cls)
-        .map(m => (m, Triples.entity(cls, m.text))).toVector
+      lazy val prep: RelationScoring.SentencePrep = RelationScoring.SentencePrep.of(toks, stems)
+      // the class-1 and class-2 mentions, each with its entity string and
+      // its index in `mentions`
+      val side1: Vector[(Mention, String, Int)] = ofClass(cfg.class1)
+      val side2: Vector[(Mention, String, Int)] = ofClass(cfg.class2)
+      private def ofClass(cls: String) = mentions.iterator.zipWithIndex
+        .filter(_._1.class_id == cls)
+        .map { case (m, j) => (m, Triples.entity(cls, m.text), j) }.toVector
     }
     val ctxs: Vector[SentCtx] = sorted.iterator.flatMap { t =>
       TextOps.segment(t.text, cfg.tokenizer).map { case (si, _, _, toks) =>
@@ -181,17 +186,17 @@ object KgPipeline {
           val sentDist =
             if (c1.turnIdx == c2.turnIdx) math.abs(c2.sentIdx - c1.sentIdx)
             else cfg.window + math.abs(c2.turnIdx - c1.turnIdx)
-          // combined context hoisted per sentence PAIR: token/dep work is
-          // mention-independent, only the m2-side offsets shift per pair
+          // combined context hoisted per sentence PAIR: token/dep work and
+          // c2's mentions shifted into its coordinates are mention-independent
           lazy val cross = combined(c1.toks, c2.toks, c1.prep.heads, c2.prep.heads)
           lazy val crossPrep = new RelationScoring.SentencePrep(
-            cross.toks, cross.heads, cross.adj, cross.depth, cross.extraLabels)
-          lazy val crossMentions: Seq[Mention] =
-            c1.mentions ++ c2.mentions.map(m =>
-              m.copy(begin = m.begin + cross.delta, end = m.end + cross.delta))
+            cross.toks, cross.heads, cross.adj, cross.depth, cross.extraLabels, stems = stems)
+          lazy val shifted2: Vector[Mention] = c2.mentions.iterator.map(m =>
+            m.copy(begin = m.begin + cross.delta, end = m.end + cross.delta)).toVector
+          lazy val crossMentions: Seq[Mention] = c1.mentions ++ shifted2
           for {
-            (m1, e1) <- c1.side1
-            (m2, e2) <- c2.side2
+            (m1, e1, _) <- c1.side1
+            (m2, e2, j2) <- c2.side2
             // never pair a mention with itself (only possible when the two
             // entity classes coincide)
             if !(cfg.class1 == cfg.class2 && sameSent &&
@@ -204,9 +209,7 @@ object KgPipeline {
               // k² pairs); cross-context pairs share the hoisted pair prep
               val (prep, mm1, mm2, sentMs) =
                 if (sameSent) (c1.prep, m1, m2, c1.mentions)
-                else (crossPrep, m1,
-                  m2.copy(begin = m2.begin + cross.delta, end = m2.end + cross.delta),
-                  crossMentions)
+                else (crossPrep, m1, shifted2(j2), crossMentions)
               lazy val ctx = edgeCtxOf(m1, m2, sentMs)
               val feats =
                 if (!withFeatures) Map.empty[String, Double]

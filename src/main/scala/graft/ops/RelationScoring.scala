@@ -88,15 +88,28 @@ object RelationScoring {
   private[graft] def fold(state: Long, c: Char): Long = (state ^ (c & 0xffL)) * 0x100000001b3L
   private[graft] def index(state: Long): Int = ((state % Dims) + Dims).toInt % Dims
 
-  /** A constant name or name prefix with its FNV-1a state precomputed. */
+  /** A constant name or name prefix with its FNV-1a state precomputed;
+    * `id` numbers it for [[SentencePrep.memo]].
+    */
   private[graft] final class Prefix(val text: String) {
     val state: Long = fold(FnvOffset, text)
+    val id: Int = prefixIds.getAndIncrement()
   }
+  private val prefixIds = new java.util.concurrent.atomic.AtomicInteger
 
   /** Receives [[enumerate]]'s features part by part: `start` opens a name
     * at a constant prefix, `part`/`char` extend it, `emit` closes it with
     * its value. The two sinks see the same parts, so the Map path's names
     * hash to exactly the indices the scoring path folds.
+    *
+    * A name or a run of names that no pair of the sentence changes is
+    * enumerated under a test: `memoized(memo, i)` is true when `memo(i)`
+    * holds 1 + the name's index and the sink added it, `replayed(cache, slot)`
+    * when `cache(slot)` holds the indices of the run and the sink added
+    * them in order. Otherwise the caller enumerates the name or the run
+    * (closing the run with `recorded()`), and an indexing sink stores what
+    * it folded there. All such names have value 1.0. The Map sink keeps
+    * no indices, so it sees every name.
     */
   private abstract class NameSink {
     def start(p: Prefix): Unit
@@ -104,6 +117,9 @@ object RelationScoring {
     def part(s: String, from: Int, until: Int): Unit
     def char(c: Char): Unit
     def emit(v: Double): Unit
+    def memoized(memo: Array[Int], i: Int): Boolean = false
+    def replayed(cache: Array[Array[Int]], slot: Int): Boolean = false
+    def recorded(): Unit = ()
   }
 
   /** Builds each name and sums values per name (training, tests). */
@@ -120,17 +136,43 @@ object RelationScoring {
     }
   }
 
-  /** Folds each name's FNV state and adds w(index) * v to the score in
-    * enumeration order; no name is ever assembled.
+  /** Adds w(index) * v to the score in enumeration order, the index
+    * either folded from the name's parts (no name is ever assembled) or
+    * read from a prep's memo or replayed run; the order, and so every
+    * score bit, is the same either way.
     */
   private final class ScoreSink(w: Array[Double], b: Double) extends NameSink {
     private var st = 0L
     var score: Double = b
+    private var memo: Array[Int] = null; private var at = 0
+    private var cache: Array[Array[Int]] = null; private var slot = 0
+    private var rec: Array[Int] = null; private var n = 0
     def start(p: Prefix): Unit = st = p.state
     def part(s: String): Unit = st = fold(st, s)
     def part(s: String, from: Int, until: Int): Unit = st = fold(st, s, from, until)
     def char(c: Char): Unit = st = fold(st, c)
-    def emit(v: Double): Unit = score += w(index(st)) * v
+    def emit(v: Double): Unit = add(index(st), v)
+    private def add(x: Int, v: Double): Unit = {
+      if (memo != null) { memo(at) = x + 1; memo = null }
+      if (cache != null) {
+        if (n == rec.length) rec = java.util.Arrays.copyOf(rec, 2 * n)
+        rec(n) = x; n += 1
+      }
+      score += w(x) * v
+    }
+    override def memoized(m: Array[Int], i: Int): Boolean =
+      if (m(i) > 0) { add(m(i) - 1, 1.0); true } else { memo = m; at = i; false }
+    override def replayed(c: Array[Array[Int]], s: Int): Boolean = c(s) match {
+      case null =>
+        cache = c; slot = s; n = 0
+        if (rec == null) rec = new Array[Int](64)
+        false
+      case r =>
+        var i = 0
+        while (i < r.length) { add(r(i), 1.0); i += 1 }
+        true
+    }
+    override def recorded(): Unit = { cache(slot) = java.util.Arrays.copyOf(rec, n); cache = null }
   }
 
   /** Per-edge context beyond the sentence: mentions of the edge's
@@ -186,10 +228,15 @@ object RelationScoring {
     * and `maskedBase` of each token and `lower`/`stem` of each non-PUNCT
     * token, while a prep that is built only for its `heads` (the
     * cross-context input of [[KgPipeline.combined]]) computes none.
-    * `stemLower` is filled for VERB tokens only (null elsewhere) — its
-    * readers, the PD verbs and the main verbs, touch nothing else.
+    * `stems` stems a word (the pipeline passes a per-conversation memo).
     * Each mention's token range and head are resolved once, by [[span]],
     * which needs `toks` offset-ascending (TextOps.segment, combined).
+    *
+    * Scoring folds each pair-independent name once per prep, on first
+    * use: [[memo]] holds the index of each (prefix, token) name,
+    * [[segments]] the indices of each mention's head surface, own tokens
+    * and chain visits per (side, span, class), and [[path]] reads one BFS
+    * tree per source head.
     *
     * `heads(i)` is token i's dependency head (root points to itself);
     * `extraLabels` carries the labels of synthetic combined-sentence
@@ -198,15 +245,15 @@ object RelationScoring {
   final class SentencePrep(val toks: IndexedSeq[Tok], val heads: Array[Int],
                            val adj: Array[List[Int]], val depth: Array[Int],
                            val extraLabels: Map[Long, String] = Map.empty,
-                           sentPos: IndexedSeq[String] = null) {
+                           sentPos: IndexedSeq[String] = null,
+                           stems: String => String = Porter.stem) {
     import SentencePrep._
     private def perToken(f: Int => String): Array[String] = Array.tabulate(toks.length)(f)
     lazy val pos: Array[String] = perToken(i => DepGraph.coarsePos(toks(i).word))
     lazy val maskedBase: Array[String] = perToken(i => TextOps.maskedWord(toks(i).word))
-    lazy val stem: Array[String] = perToken(i => Porter.stem(toks(i).word))
+    // Porter.stem lowercases first: this is also the stem of `lower`
+    lazy val stem: Array[String] = perToken(i => stems(toks(i).word))
     lazy val lower: Array[String] = perToken(i => toks(i).word.toLowerCase)
-    lazy val stemLower: Array[String] =
-      perToken(i => if (pos(i) == "VERB") Porter.stem(lower(i)) else null)
     // BagOfWords / StemmedBagOfWords membership: non-PUNCT and not a
     // stopword (by the lowercased word, resp. by the stem)
     lazy val inBowText: Array[Boolean] =
@@ -223,7 +270,7 @@ object RelationScoring {
     // labeled-dependency form (`data.py:1106-1118`): odd # of `neg` deps
     lazy val negated: Boolean = DepGraph.isNegatedLabeled(depLabels)
     lazy val mainVerbStems: List[String] =
-      DepGraph.mainVerbs(toks, adj, DepGraph.root(heads)).map(stemLower(_)).toList
+      DepGraph.mainVerbs(toks, adj, DepGraph.root(heads)).map(stem(_)).toList
     // stems of masked entity tokens: a class id or a masked word
     private val maskStems = scala.collection.mutable.HashMap.empty[String, String]
     def stemOfMask(masked: String): String =
@@ -235,19 +282,44 @@ object RelationScoring {
       val (first, last) = DepGraph.tokenRange(toks, m.begin, m.end)
       Span(first, last, DepGraph.entityHead(toks, depth, (first, last)))
     })
-    private val pathCache = scala.collection.mutable.LongMap.empty[Vector[Int]]
-    def path(a: Int, b: Int): Vector[Int] =
-      pathCache.getOrElseUpdate(key(a, b), DepGraph.shortestPath(adj, a, b))
+    private val pathCache = scala.collection.mutable.LongMap.empty[Array[Int]]
+    private val trees = new Array[Array[Int]](adj.length)
+    /** [[DepGraph.shortestPath]] from a to b as an array, read from a's BFS tree. */
+    def path(a: Int, b: Int): Array[Int] = pathCache.getOrElseUpdate(key(a, b), {
+      if (trees(a) == null) trees(a) = DepGraph.bfsTree(adj, a)
+      DepGraph.treePath(trees(a), a, b)
+    })
+
+    private var memos = new Array[Array[Int]](0)
+    /** Per token i, 1 + the index of `p` + (a value of token i), 0 until folded. */
+    def memo(p: Prefix): Array[Int] = {
+      if (p.id >= memos.length) memos = java.util.Arrays.copyOf(memos, p.id + 32)
+      if (memos(p.id) == null) memos(p.id) = new Array[Int](toks.length)
+      memos(p.id)
+    }
 
     private var tablesFor: Seq[Mention] = null
     private var tables: MentionTables = null
+    private val segs = scala.collection.mutable.HashMap.empty[(Int, Span, String), Array[Array[Int]]]
+    /** The tables of `ms`, null when it is empty. A list other than the
+      * last one (by identity) rebuilds them and drops [[segments]], whose
+      * chain visits read them.
+      */
     def mentionTables(ms: Seq[Mention]): MentionTables = {
-      if (tables == null || (tablesFor ne ms)) {
-        tables = new MentionTables(this, ms)
+      if (tablesFor ne ms) {
+        tables = if (ms.isEmpty) null else new MentionTables(this, ms)
         tablesFor = ms
+        segs.clear()
       }
       tables
     }
+    /** Recorded name indices of entity `side` over span `s` of class
+      * `cls`: slot 0 its head surface, 1 its own tokens, 2 + k the k-th
+      * visit of its head's chain walk.
+      */
+    def segments(side: Int, s: Span, cls: String): Array[Array[Int]] =
+      segs.getOrElseUpdate((side, s, cls), new Array[Array[Int]](
+        2 + (if (s.head >= 0) chainVisitsOf(s.head).length else 0)))
 
     /** children(i) = tokens whose head is i (excluding the root's
       * self-loop) — precomputed once so chain walks don't scan the heads
@@ -359,11 +431,13 @@ object RelationScoring {
       * AND depLabels, the head assignment, its adjacency and the BFS
       * depths from its root.
       */
-    def of(toks: IndexedSeq[Tok]): SentencePrep = {
+    def of(toks: IndexedSeq[Tok]): SentencePrep = of(toks, Porter.stem)
+    def of(toks: IndexedSeq[Tok], stems: String => String): SentencePrep = {
       val sp = DepGraph.sentencePos(toks)
       val hs = DepGraph.heads(toks, sp)
       val adj = DepGraph.adjacency(toks.length, hs)
-      new SentencePrep(toks, hs, adj, DepGraph.depths(adj, DepGraph.root(hs)), sentPos = sp)
+      new SentencePrep(toks, hs, adj, DepGraph.depths(adj, DepGraph.root(hs)),
+        sentPos = sp, stems = stems)
     }
   }
 
@@ -489,6 +563,15 @@ object RelationScoring {
     * Pair-independent work (stems, mention token ranges and heads,
     * per-token mention classes, per-class mention counts, paths, chain
     * walks) lives in [[SentencePrep]].
+    *
+    * A name that no pair of the prep changes is enumerated through the
+    * sink's memo test ([[NameSink]]): per token (`f_pos=`, `f_bow=`, BOW,
+    * between-token, PD token and interior path n-gram names) and per
+    * entity side, span and class (head surface, own tokens, chain
+    * visits). The test falls through to the pair's own enumeration where
+    * a token lies in the other mention's span, whose class then masks it.
+    * Names of the pair itself (order, counts between the pair, distances,
+    * n-grams touching the path ends, `ne_bow=`) are folded per pair.
     */
   private def enumerate(
       prep: SentencePrep,
@@ -514,8 +597,7 @@ object RelationScoring {
     val h1 = s1.head; val h2 = s2.head
     def masked(i: Int): String =
       if (s1.contains(i)) m1.class_id else if (s2.contains(i)) m2.class_id else prep.maskedBase(i)
-    val tables =
-      if (ctx.sentMentions.nonEmpty) prep.mentionTables(ctx.sentMentions) else null
+    val tables = prep.mentionTables(ctx.sentMentions)
     /** ann class of token i: the edge's entities first, then any other
       * sentence mention containing it (masked_text / ann_type semantics).
       */
@@ -524,6 +606,16 @@ object RelationScoring {
       else if (s2.contains(i)) m2.class_id
       else if (tables == null) null
       else tables.classOf(i)
+    // names of one token's pair-independent value, memoized per token;
+    // masked(i) is pair-independent off the two spans
+    def tokName(p: Prefix, i: Int, s: String): Unit =
+      if (!sink.memoized(prep.memo(p), i)) add2(p, s)
+    def maskedName(p: Prefix, i: Int): Unit =
+      if (s1.contains(i) || s2.contains(i)) add2(p, masked(i))
+      else tokName(p, i, prep.maskedBase(i))
+    val overlap = s1.first >= 0 && s2.first >= 0 && s1.first <= s2.last && s2.first <= s1.last
+    val seg1 = prep.segments(1, s1, m1.class_id)
+    val seg2 = prep.segments(2, s2, m2.class_id)
 
     // ==== SentenceFeatureGenerator (`relations/new/sentence.py`) ========
     sink.start(N.Order); sink.part(m1.class_id); sink.char('_'); sink.part(m2.class_id)
@@ -561,8 +653,8 @@ object RelationScoring {
     // (`sentence.py:111-113`)
     var ti = 0
     while (ti < toks.length) {
-      add2(N.Bow, masked(ti))
-      add2(N.Pos, prep.pos(ti))
+      maskedName(N.Bow, ti)
+      tokName(N.Pos, ti, prep.pos(ti))
       ti += 1
     }
     add(N.TokensCount, toks.length.toDouble)
@@ -574,7 +666,7 @@ object RelationScoring {
       (lo + 1 until hi)
     } else 0 until 0
     add(N.NBetween, between.size.toDouble)
-    between.foreach { i => add2(N.BowBet, masked(i)) }
+    between.foreach { i => maskedName(N.BowBet, i) }
 
     // sentence negation + main-verb lemmas (`sentence.py:127-138`)
     if (prep.negated) add(N.SentNegated)
@@ -596,25 +688,27 @@ object RelationScoring {
 
     // ==== Entity-head surface (`relations/entityhead.py:7-229`) =========
     // stem/POS + case/digit/punct flags and char 2/3-grams
-    def headSurface(side: SideNames, hi: Int): Unit = if (hi >= 0) {
-      val w = toks(hi).word
-      add2(side.headStem, prep.stem(hi))
-      add2(side.headPos, prep.pos(hi))
-      if (w.nonEmpty && w.head.isUpper) add(side.headCap)
-      if (w.exists(_.isDigit)) add(side.headDigits)
-      if (w.contains('-') || w.contains('/')) add(side.headPunct)
-      var n = 2
-      while (n <= 3) {
-        var i = 0
-        while (i + n <= w.length) {
-          sink.start(side.headGram(n)); sink.part(w, i, i + n); sink.emit(1.0)
-          i += 1
+    def headSurface(side: SideNames, hi: Int, seg: Array[Array[Int]]): Unit =
+      if (hi >= 0 && !sink.replayed(seg, 0)) {
+        val w = toks(hi).word
+        add2(side.headStem, prep.stem(hi))
+        add2(side.headPos, prep.pos(hi))
+        if (w.nonEmpty && w.head.isUpper) add(side.headCap)
+        if (w.exists(_.isDigit)) add(side.headDigits)
+        if (w.contains('-') || w.contains('/')) add(side.headPunct)
+        var n = 2
+        while (n <= 3) {
+          var i = 0
+          while (i + n <= w.length) {
+            sink.start(side.headGram(n)); sink.part(w, i, i + n); sink.emit(1.0)
+            i += 1
+          }
+          n += 1
         }
-        n += 1
+        sink.recorded()
       }
-    }
-    headSurface(N.Side1, h1)
-    headSurface(N.Side2, h2)
+    headSurface(N.Side1, h1, seg1)
+    headSurface(N.Side2, h2, seg2)
 
     // per-token surface features of the entities' own tokens —
     // TokenFeatureGenerator.token_features (`relations/__init__.py:127-170`)
@@ -622,21 +716,23 @@ object RelationScoring {
     // text, stem of the masked text (the reference stems the mask — its
     // own TODO notes the oddity; mirrored), and annotated_types = the
     // token's entity class + entityK_class marker.
-    def entityTokenFeats(side: SideNames, s: SentencePrep.Span, cls: String): Unit =
-      if (s.first >= 0) {
+    def entityTokenFeats(side: SideNames, s: SentencePrep.Span, cls: String,
+        seg: Array[Array[Int]]): Unit =
+      if (s.first >= 0 && (overlap || !sink.replayed(seg, 1))) {
         var i = s.first
         while (i <= s.last) {
-          add2(side.txt, prep.lower(i))
-          add2(side.pos, prep.pos(i))
+          tokName(side.txt, i, prep.lower(i))
+          tokName(side.pos, i, prep.pos(i))
           add2(side.masked, masked(i))
           add2(side.stemMasked, prep.stemOfMask(masked(i)))
           add2(side.ann, cls)
           sink.start(side.ann); sink.part(side.marker); sink.part(cls); sink.emit(1.0)
           i += 1
         }
+        if (!overlap) sink.recorded()
       }
-    entityTokenFeats(N.Side1, s1, m1.class_id)
-    entityTokenFeats(N.Side2, s2, m2.class_id)
+    entityTokenFeats(N.Side1, s1, m1.class_id, seg1)
+    entityTokenFeats(N.Side2, s2, m2.class_id, seg2)
 
     // ==== IntermediateTokens (`context.py:76-166`): tokens strictly
     // between the heads, directional (fwd when h1 < h2, bkd otherwise)
@@ -644,15 +740,14 @@ object RelationScoring {
     if (h1 >= 0 && h2 >= 0) {
       val it = if (h1 < h2) N.ItFwd else N.ItBkd
       between.foreach { i =>
-        val w = prep.lower(i)
-        add2(it.bow, w)
-        add2(it.masked, masked(i))
-        add2(it.stem, prep.stem(i))
-        add2(it.pos, prep.pos(i))
-        add2(N.It.bow, w)
-        add2(N.It.masked, masked(i))
-        add2(N.It.stem, prep.stem(i))
-        add2(N.It.pos, prep.pos(i))
+        tokName(it.bow, i, prep.lower(i))
+        maskedName(it.masked, i)
+        tokName(it.stem, i, prep.stem(i))
+        tokName(it.pos, i, prep.pos(i))
+        tokName(N.It.bow, i, prep.lower(i))
+        maskedName(N.It.masked, i)
+        tokName(N.It.stem, i, prep.stem(i))
+        tokName(N.It.pos, i, prep.pos(i))
       }
     }
 
@@ -671,12 +766,12 @@ object RelationScoring {
       while (i < toks.length) {
         val w = toks(i).word
         if (prep.inBowText(i)) {
-          add2(N.BowText, w)
+          tokName(N.BowText, i, w)
           if (annClass(i) != null)
             neCounts.update(w, neCounts.getOrElse(w, 0) + 1)
         }
         if (prep.inBowStem(i))
-          add2(N.BowStem, prep.stem(i))
+          tokName(N.BowStem, i, prep.stem(i))
         i += 1
       }
       neCounts.toSeq.sortBy(_._1).foreach { case (w, c) =>
@@ -690,7 +785,7 @@ object RelationScoring {
     // lemma and POS n-grams 1..4 with [SOURCE/[TARGET] sentinels, token
     // counts ±punct and path negation; PD adds undirected/directed edge
     // n-grams and full n-grams (`utils/graphs.py` Path string algebra).
-    def pathFeatures(names: PathNames, path: IndexedSeq[Int], withEdges: Boolean): Unit = {
+    def pathFeatures(names: PathNames, path: Array[Int], withEdges: Boolean): Unit = {
       if (path.length < 2) return
       val last = path.length - 1
       // render every per-node string ONCE (the n-grams below touch each
@@ -704,24 +799,37 @@ object RelationScoring {
         posR(k) = if (k == 0) "[S" else if (k == last) "T]" else prep.pos(i)
         k += 1
       }
+      // run(k): interior nodes ending at node k, for bow also off the two
+      // spans; an n-gram over such nodes is memoized by its first token
+      // (n > 1 only on the linear LD path, whose nodes are consecutive)
+      val posRun = new Array[Int](path.length); val bowRun = new Array[Int](path.length)
+      k = 1
+      while (k < last) {
+        posRun(k) = k
+        if (!s1.contains(path(k)) && !s2.contains(path(k))) bowRun(k) = bowRun(k - 1) + 1
+        k += 1
+      }
       // token-only n-grams: n=1 over middle, n>1 over all nodes
-      def tokenNGrams(grams: Array[Prefix], rendered: Array[String]): Unit = {
+      def tokenNGrams(grams: Array[Prefix], rendered: Array[String], run: Array[Int]): Unit = {
+        def at(s: Int, n: Int): Unit =
+          if (!((n == 1 || !withEdges) && run(s + n - 1) >= n &&
+              sink.memoized(prep.memo(grams(n)), path(s)))) gram(grams(n), rendered, s, n)
         var k = 1
-        while (k < last) { gram(grams(1), rendered, k, 1); k += 1 }
+        while (k < last) { at(k, 1); k += 1 }
         var n = 2
         while (n <= 4) {
           var s = 0
-          while (s + n <= path.length) { gram(grams(n), rendered, s, n); s += 1 }
+          while (s + n <= path.length) { at(s, n); s += 1 }
           n += 1
         }
       }
-      tokenNGrams(names.bow, bowR)
-      tokenNGrams(names.pos, posR)
+      tokenNGrams(names.bow, bowR, bowRun)
+      tokenNGrams(names.pos, posR, posRun)
       // counts + negation over the middle tokens
-      val middle = (1 until last).map(path(_))
-      add(names.tokensCount, middle.size.toDouble)
+      val middle = path.slice(1, last)
+      add(names.tokensCount, middle.length.toDouble)
       add(names.tokensCountNoPunct, middle.count(i => prep.pos(i) != "PUNCT").toDouble)
-      if (DepGraph.isNegated(middle.map(toks(_))))
+      if (DepGraph.isNegated(middle.map(toks(_)).toIndexedSeq))
         add(names.isNegated)
       if (withEdges) {
         // edge n-grams over source+middle steps (PathNode.edge_type)
@@ -767,7 +875,7 @@ object RelationScoring {
     if (s1.first >= 0 && s2.first >= 0) {
       val (ldFrom, ldTo) =
         if (m1.begin <= m2.begin) (s1.last, s2.first) else (s2.last, s1.first)
-      pathFeatures(N.Ld, ldFrom to ldTo, withEdges = false)
+      pathFeatures(N.Ld, Array.range(ldFrom, ldTo + 1), withEdges = false)
     }
 
     // PD path (`dependency.py:170`): shortest path between heads
@@ -778,9 +886,9 @@ object RelationScoring {
         var k = 1
         while (k < path.length - 1) {
           val i = path(k)
-          add2(N.PdTok, masked(i))
-          add2(N.PdPos, prep.pos(i))
-          if (prep.pos(i) == "VERB") add2(N.PdVerb, prep.stemLower(i))
+          maskedName(N.PdTok, i)
+          tokName(N.PdPos, i, prep.pos(i))
+          if (prep.pos(i) == "VERB") tokName(N.PdVerb, i, prep.stem(i))
           k += 1
         }
         pathFeatures(N.Pd, path, withEdges = true)
@@ -794,32 +902,39 @@ object RelationScoring {
     // (DepGraph.depLabels), mirroring the reference's
     // `from_<dep>` / `chain..-fw_<dep>` naming (`entityhead.py:264-281`).
     // the walk itself (pair-independent tree structure) is cached per
-    // start token in SentencePrep and replayed here as a flat loop
-    def chainsFor(side: SideNames, start: Int): Unit = {
+    // start token in SentencePrep and replayed here as a flat loop; each
+    // visit's names are recorded per (side, span, class) unless it visits
+    // the other mention's span
+    def chainsFor(side: SideNames, start: Int, other: SentencePrep.Span,
+        seg: Array[Array[Int]]): Unit = {
       if (start < 0) return
       val visits = prep.chainVisitsOf(start)
       var vi = 0
       while (vi < visits.length) {
         val v = visits(vi)
-        val d = v.depth
-        add2(if (v.fw) side.depFrom(d) else side.depTo(d), v.label)
-        sink.start(side.chain(d)); sink.part(v.chain)
-        sink.part(if (v.fw) "-fw_" else "-rv_"); sink.part(v.label)
-        sink.emit(1.0)
-        val i = v.token
-        add2(side.distTxt(d), prep.lower(i))
-        add2(side.distPos(d), prep.pos(i))
-        add2(side.distMasked(d), masked(i))
-        val ac = annClass(i)
-        if (ac != null) {
-          add(side.distAnnEntity(d))
-          add2(side.distAnnType(d), ac)
+        val live = other.contains(v.token)
+        if (live || !sink.replayed(seg, 2 + vi)) {
+          val d = v.depth
+          add2(if (v.fw) side.depFrom(d) else side.depTo(d), v.label)
+          sink.start(side.chain(d)); sink.part(v.chain)
+          sink.part(if (v.fw) "-fw_" else "-rv_"); sink.part(v.label)
+          sink.emit(1.0)
+          val i = v.token
+          tokName(side.distTxt(d), i, prep.lower(i))
+          tokName(side.distPos(d), i, prep.pos(i))
+          maskedName(side.distMasked(d), i)
+          val ac = annClass(i)
+          if (ac != null) {
+            add(side.distAnnEntity(d))
+            add2(side.distAnnType(d), ac)
+          }
+          if (!live) sink.recorded()
         }
         vi += 1
       }
     }
-    chainsFor(N.Side1, h1)
-    chainsFor(N.Side2, h2)
+    chainsFor(N.Side1, h1, s2, seg1)
+    chainsFor(N.Side2, h2, s1, seg2)
   }
 
   // ==== Distributed doc-level count aggregations (declarative route) ====

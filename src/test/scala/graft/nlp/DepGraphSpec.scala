@@ -55,6 +55,39 @@ class DepGraphSpec extends AnyFunSuite {
     }
   }
 
+  test("BFS-tree paths == shortestPath for every ordered pair, combined contexts included") {
+    import graft.ops.{KgPipeline, RelationScoring}
+    val rng = new scala.util.Random(2727)
+    val sents = (1 to 100).map(_ => randomSentence(rng))
+    val heads = sents.map(DepGraph.heads)
+    var unreachable = 0
+    def check(toks: IndexedSeq[Tok], adj: Array[List[Int]]): Unit = {
+      val prep = new RelationScoring.SentencePrep(toks, Array.tabulate(toks.length)(i => i), adj,
+        Array.fill(toks.length)(0))
+      for (u <- adj.indices) {
+        val tree = DepGraph.bfsTree(adj, u)
+        for (v <- adj.indices) {
+          val p = DepGraph.shortestPath(adj, u, v)
+          assert(DepGraph.treePath(tree, u, v).toVector == p, s"u=$u v=$v")
+          assert(prep.path(u, v).toVector == p, s"u=$u v=$v")
+          if (p.isEmpty) unreachable += 1
+        }
+      }
+    }
+    sents.indices.foreach { i =>
+      check(sents(i), DepGraph.adjacency(sents(i).length, heads(i)))
+      if (i > 0) {
+        val (a, b) = (i - 1, i)
+        val c = KgPipeline.combined(sents(a), sents(b), heads(a), heads(b))
+        check(c.toks, c.adj)
+        // the two parses side by side without the combined links: no
+        // path joins them
+        check(c.toks, DepGraph.adjacency(c.toks.length, c.heads))
+      }
+    }
+    assert(unreachable > 0)
+  }
+
   test("entity head: minimum-depth noun, first wins") {
     val toks = IndexedSeq(Tok(0, "svc_a", 0, 5), Tok(1, "calls", 6, 11),
       Tok(2, "the", 12, 15), Tok(3, "db", 16, 18), Tok(4, ".", 18, 19))

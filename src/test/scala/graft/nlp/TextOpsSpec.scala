@@ -119,6 +119,19 @@ class TextOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("porter stemmer lowercases first: stem(w) == stem(w.toLowerCase)") {
+    val rng = new scala.util.Random(19)
+    val stems = Vector("connect", "generaliz", "run", "hop", "relat", "agree", "sky", "caress",
+      "ponies", "happy", "feud", "motor", "electric", "sensitiv")
+    val suffixes = Vector("", "s", "es", "ed", "ing", "ation", "ational", "ness", "ful", "ly",
+      "ies", "er", "izer", "ousness", "al", "ive")
+    (0 until 3000).foreach { _ =>
+      val base = stems(rng.nextInt(stems.length)) + suffixes(rng.nextInt(suffixes.length))
+      val w = base.map(c => if (rng.nextInt(3) == 0) c.toUpper else c)
+      assert(Porter.stem(w) == Porter.stem(w.toLowerCase), w)
+    }
+  }
+
   test("normKey folds case, whitespace and digit runs") {
     assert(TextOps.normKey("  Spark 3.5 ") == "spark 0.0")
     assert(TextOps.normKey("DB_users42") == "db_users0")

@@ -356,4 +356,98 @@ class KgPipelineSpec extends SparkSpec {
     assert(viaCrf == viaDict)
     assert(viaCrf.nonEmpty)
   }
+
+  test("scoreEdge on one shared prep, pairs shuffled, == scoreEdge on a fresh prep per pair") {
+    import GazetteerTagger.{gazetteer, ObjClass => Obj, OpClass => Op}
+    import RelationScoring.{EdgeCtx, SentencePrep}
+    val terms = gazetteer ++ dict
+    // runs of adjacent terms are one mention of the first term's class,
+    // the run's last term also one of its own (overlapping spans); each
+    // 'table' is tagged with both classes (one span, two classes),
+    // 'spark' adds a zero-width mention and 'window' one over part of it
+    val tagger: IndexedSeq[Tok] => Seq[(String, Int, Int)] = toks => {
+      val out = Vector.newBuilder[(String, Int, Int)]
+      var i = 0
+      while (i < toks.length) {
+        terms.get(toks(i).word) match {
+          case None => i += 1
+          case Some(cls) =>
+            var j = i
+            while (j + 1 < toks.length && terms.contains(toks(j + 1).word)) j += 1
+            out += ((cls, toks(i).begin, toks(j).end))
+            if (j > i) out += ((terms(toks(j).word), toks(j).begin, toks(j).end))
+            i = j + 1
+        }
+      }
+      toks.foreach { t =>
+        if (t.word == "table") out += ((Op, t.begin, t.end))
+        if (t.word == "spark") out += ((Obj, t.begin, t.begin))
+        if (t.word == "window") out += ((Op, t.begin + 2, t.end))
+      }
+      out.result()
+    }
+    val vocab = Vector("merge", "filter", "scan", "table", "stream", "batch", "spark",
+      "window", "the", "a", "not", "calls", "join", "fast", "row", "data", "key", "value")
+    val textRng = new scala.util.Random(41)
+    def words(n: Int) = Seq.fill(n)(vocab(textRng.nextInt(vocab.length))).mkString(" ")
+    val docs = (0 until 3).map(c => (0 until 2).map { t =>
+      Turn(f"conv_$c%06d", t, "user", words(10 + textRng.nextInt(40)), None,
+        new java.sql.Timestamp(0L))
+    })
+    val chat = (0 until 6).map(c => (0 until 4).map { t =>
+      val turn = Transcripts.syntheticTurn(c, t, 42L)
+      turn.copy(text = turn.text + " " + words(2 + textRng.nextInt(6)) + ".")
+    })
+    val rng = new scala.util.Random(43)
+    val model = RelationScoring.LinearModel(
+      Array.fill(RelationScoring.Dims)(rng.nextDouble() - 0.5), b = -0.3)
+    // (shared prep, fresh prep, m1, m2, same sentence, ctx)
+    val pairs = Vector.newBuilder[(SentencePrep, () => SentencePrep, Mention, Mention,
+      Boolean, EdgeCtx)]
+    def ctx(ms: Seq[Mention]) = EdgeCtx(ms, rng.nextInt(4), rng.nextInt(4), rng.nextInt(3))
+    for ((turns, tokenizer) <- docs.map((_, "tmvar")) ++ chat.map((_, "generic"))) {
+      val sents = turns.flatMap { t =>
+        graft.nlp.TextOps.segment(t.text, tokenizer).map { case (si, _, _, toks) =>
+          (toks, tagger(toks).map { case (cls, b, e) =>
+            Mentions.of(t.conv_id, t.turn_idx, si, cls, b, e, t.text, 0)
+          })
+        }
+      }
+      sents.foreach { case (toks, ms) =>
+        val shared = SentencePrep.of(toks)
+        // two mention lists on one prep: the classes of overlapped tokens differ
+        val lists = Seq(ms, ms.reverse)
+        for (a <- ms.indices; b <- ms.indices if a != b) {
+          val sentMs = lists(rng.nextInt(2))
+          pairs += ((shared, () => SentencePrep.of(toks), ms(a), ms(b), true, ctx(sentMs)))
+        }
+      }
+      sents.zip(sents.drop(1)).foreach { case ((t1, ms1), (t2, ms2)) =>
+        val h1 = SentencePrep.of(t1).heads; val h2 = SentencePrep.of(t2).heads
+        def fresh() = {
+          val c = KgPipeline.combined(t1, t2, h1, h2)
+          new SentencePrep(c.toks, c.heads, c.adj, c.depth, c.extraLabels)
+        }
+        val c = KgPipeline.combined(t1, t2, h1, h2)
+        val shifted = ms2.map(m => m.copy(begin = m.begin + c.delta, end = m.end + c.delta))
+        val shared = fresh()
+        val sentMs = ms1 ++ shifted
+        for (m1 <- ms1; m2 <- shifted) pairs += ((shared, () => fresh(), m1, m2, false, ctx(sentMs)))
+      }
+    }
+    val all = pairs.result()
+    def bits(p: (SentencePrep, () => SentencePrep, Mention, Mention, Boolean, EdgeCtx),
+        prep: SentencePrep) = java.lang.Double.doubleToLongBits(RelationScoring.scoreEdge(
+      model, prep, p._3, p._4, p._5, if (p._5) 0 else 1, p._6))
+    val viaShared = rng.shuffle(all.indices.toVector).map(i => i -> bits(all(i), all(i)._1)).toMap
+    all.indices.foreach { i =>
+      assert(viaShared(i) == bits(all(i), all(i)._2()), s"${all(i)._3} / ${all(i)._4}")
+    }
+    def span(m: Mention) = (m.turn_idx, m.begin, m.end)
+    assert(all.exists(p => !p._5) && all.exists(p => p._3.begin == p._3.end))
+    assert(all.exists(p => p._3.text.contains(' ')) && all.exists(p => p._3.text == "ndow"))
+    assert(all.exists(p => p._5 && span(p._3) == span(p._4)))
+    assert(all.exists(p => p._3.begin < p._4.end && p._4.begin < p._3.end &&
+      span(p._3) != span(p._4)))
+  }
 }
