@@ -639,11 +639,9 @@ object DepGraph {
     Vector.empty
   }
 
-  /** [[shortestPath]]'s BFS from `u` run to the end: the predecessor of
-    * every node (u for u, -1 when unreachable). Neighbours are visited in
-    * the same ascending order and each entry is set once, so
-    * [[treePath]] gives `shortestPath(adj, u, v)` for every v.
-    */
+  /** [[shortestPath]]'s BFS from `u` run to the end: each node's predecessor
+    * (u for u, -1 if unreachable), set once in the same ascending order, so
+    * [[treePath]] gives `shortestPath(adj, u, v)` for every v. */
   def bfsTree(adj: Array[List[Int]], u: Int): Array[Int] = {
     val prev = Array.fill(adj.length)(-1)
     val q = new Array[Int](adj.length)

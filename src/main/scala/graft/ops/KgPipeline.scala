@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.model._
-import graft.nlp.{DepGraph, Porter, TextOps}
+import graft.nlp.{DepGraph, TextOps}
 
 /** The fused end-to-end KG extraction pipeline — the engine's headline
   * operator and the unit the BASELINE throughput metric (turns/sec) is
@@ -107,17 +107,15 @@ object KgPipeline {
     // row per turn_idx in input order (sortBy is stable), matching the
     // first-write-wins rule of StreamingKg.ConvState.
     val sorted = turns.sortBy(_.turn_idx).distinctBy(_.turn_idx)
-    // each distinct word of the conversation is stemmed once
-    val stemMemo = scala.collection.mutable.HashMap.empty[String, String]
-    val stems: String => String = w => stemMemo.getOrElseUpdate(w, Porter.stem(w))
+    // each word of the conversation is stemmed, and its names folded, once
+    val vocab = new RelationScoring.Vocab
     // per-sentence dependency parse memoized across all edges touching
     // the sentence (the reference memoizes its per-sentence graphs the
     // same way, utils/graph.py:29-46)
     final case class SentCtx(turnIdx: Int, sentIdx: Int, toks: IndexedSeq[Tok],
         mentions: Seq[Mention]) {
-      lazy val prep: RelationScoring.SentencePrep = RelationScoring.SentencePrep.of(toks, stems)
-      // the class-1 and class-2 mentions, each with its entity string and
-      // its index in `mentions`
+      lazy val prep: RelationScoring.SentencePrep = RelationScoring.SentencePrep.of(toks, vocab)
+      // the class-1 and class-2 mentions, with entity string and index
       val side1: Vector[(Mention, String, Int)] = ofClass(cfg.class1)
       val side2: Vector[(Mention, String, Int)] = ofClass(cfg.class2)
       private def ofClass(cls: String) = mentions.iterator.zipWithIndex
@@ -190,7 +188,7 @@ object KgPipeline {
           // c2's mentions shifted into its coordinates are mention-independent
           lazy val cross = combined(c1.toks, c2.toks, c1.prep.heads, c2.prep.heads)
           lazy val crossPrep = new RelationScoring.SentencePrep(
-            cross.toks, cross.heads, cross.adj, cross.depth, cross.extraLabels, stems = stems)
+            cross.toks, cross.heads, cross.adj, cross.depth, cross.extraLabels, vocab = vocab)
           lazy val shifted2: Vector[Mention] = c2.mentions.iterator.map(m =>
             m.copy(begin = m.begin + cross.delta, end = m.end + cross.delta)).toVector
           lazy val crossMentions: Seq[Mention] = c1.mentions ++ shifted2

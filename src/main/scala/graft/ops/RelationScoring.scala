@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.model._
 import graft.nlp.{DepGraph, Porter, TextOps}
+import java.util.Arrays
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -100,16 +101,11 @@ object RelationScoring {
   /** Receives [[enumerate]]'s features part by part: `start` opens a name
     * at a constant prefix, `part`/`char` extend it, `emit` closes it with
     * its value. The two sinks see the same parts, so the Map path's names
-    * hash to exactly the indices the scoring path folds.
-    *
-    * A name or a run of names that no pair of the sentence changes is
-    * enumerated under a test: `memoized(memo, i)` is true when `memo(i)`
-    * holds 1 + the name's index and the sink added it, `replayed(cache, slot)`
-    * when `cache(slot)` holds the indices of the run and the sink added
-    * them in order. Otherwise the caller enumerates the name or the run
-    * (closing the run with `recorded()`), and an indexing sink stores what
-    * it folded there. All such names have value 1.0. The Map sink keeps
-    * no indices, so it sees every name.
+    * hash to exactly the indices the scoring path folds. A pair-independent
+    * name (value 1.0) is enumerated only when `memoized(memo, i)` is false,
+    * a run of them only when `replayed(cache, slot)` is false (closed by
+    * `recorded()`); the scoring sink then stores the folded index there,
+    * otherwise it adds the stored one. The Map sink stores none.
     */
   private abstract class NameSink {
     def start(p: Prefix): Unit
@@ -154,25 +150,18 @@ object RelationScoring {
     def emit(v: Double): Unit = add(index(st), v)
     private def add(x: Int, v: Double): Unit = {
       if (memo != null) { memo(at) = x + 1; memo = null }
-      if (cache != null) {
-        if (n == rec.length) rec = java.util.Arrays.copyOf(rec, 2 * n)
-        rec(n) = x; n += 1
-      }
+      if (cache != null) { if (n == rec.length) rec = Arrays.copyOf(rec, 2 * n); rec(n) = x; n += 1 }
       score += w(x) * v
     }
     override def memoized(m: Array[Int], i: Int): Boolean =
       if (m(i) > 0) { add(m(i) - 1, 1.0); true } else { memo = m; at = i; false }
-    override def replayed(c: Array[Array[Int]], s: Int): Boolean = c(s) match {
-      case null =>
-        cache = c; slot = s; n = 0
-        if (rec == null) rec = new Array[Int](64)
-        false
-      case r =>
-        var i = 0
-        while (i < r.length) { add(r(i), 1.0); i += 1 }
-        true
+    override def replayed(c: Array[Array[Int]], s: Int): Boolean = {
+      val r = c(s)
+      if (r == null) { cache = c; slot = s; n = 0; if (rec == null) rec = new Array[Int](64) }
+      else { var i = 0; while (i < r.length) { add(r(i), 1.0); i += 1 } }
+      r != null
     }
-    override def recorded(): Unit = { cache(slot) = java.util.Arrays.copyOf(rec, n); cache = null }
+    override def recorded(): Unit = { cache(slot) = Arrays.copyOf(rec, n); cache = null }
   }
 
   /** Per-edge context beyond the sentence: mentions of the edge's
@@ -218,6 +207,25 @@ object RelationScoring {
     sink.score
   }
 
+  /** The words of a conversation (by default of one prep): id, stem and,
+    * per prefix p, the memo of `p` + (a value of the word) by word id. Every
+    * per-token value a name reads is a function of the word.
+    */
+  final class Vocab {
+    private val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    private val stems = scala.collection.mutable.ArrayBuffer.empty[String]
+    def id(w: String): Int = ids.getOrElseUpdate(w, { stems += Porter.stem(w); stems.length - 1 })
+    def stem(w: String): String = stems(id(w))
+    private var memos = new Array[Array[Int]](0)
+    /** By word id, 1 + the index of `p` + (a value of the word), 0 until folded. */
+    def memo(p: Prefix): Array[Int] = {
+      if (p.id >= memos.length) memos = Arrays.copyOf(memos, p.id + 32)
+      val m = if (memos(p.id) == null) Array.emptyIntArray else memos(p.id)
+      if (m.length < stems.length) memos(p.id) = Arrays.copyOf(m, 2 * stems.length)
+      memos(p.id)
+    }
+  }
+
   /** Per-sentence values shared across all candidate pairs of the
     * sentence — the relational analogue of the reference's per-token
     * features (`relations/__init__.py:127-170`) and per-sentence graph
@@ -228,15 +236,13 @@ object RelationScoring {
     * and `maskedBase` of each token and `lower`/`stem` of each non-PUNCT
     * token, while a prep that is built only for its `heads` (the
     * cross-context input of [[KgPipeline.combined]]) computes none.
-    * `stems` stems a word (the pipeline passes a per-conversation memo).
+    * `vocab` holds word ids and stems (one per conversation in the pipeline).
     * Each mention's token range and head are resolved once, by [[span]],
     * which needs `toks` offset-ascending (TextOps.segment, combined).
     *
-    * Scoring folds each pair-independent name once per prep, on first
-    * use: [[memo]] holds the index of each (prefix, token) name,
-    * [[segments]] the indices of each mention's head surface, own tokens
-    * and chain visits per (side, span, class), and [[path]] reads one BFS
-    * tree per source head.
+    * Scoring folds each pair-independent name once, on first use: `vocab`
+    * and [[memo]] hold per-word and path n-gram indices, [[segments]] runs
+    * per entity side, span and class; [[path]] reads one BFS tree per head.
     *
     * `heads(i)` is token i's dependency head (root points to itself);
     * `extraLabels` carries the labels of synthetic combined-sentence
@@ -246,13 +252,14 @@ object RelationScoring {
                            val adj: Array[List[Int]], val depth: Array[Int],
                            val extraLabels: Map[Long, String] = Map.empty,
                            sentPos: IndexedSeq[String] = null,
-                           stems: String => String = Porter.stem) {
+                           val vocab: Vocab = new Vocab) {
     import SentencePrep._
     private def perToken(f: Int => String): Array[String] = Array.tabulate(toks.length)(f)
     lazy val pos: Array[String] = perToken(i => DepGraph.coarsePos(toks(i).word))
     lazy val maskedBase: Array[String] = perToken(i => TextOps.maskedWord(toks(i).word))
+    lazy val wordId: Array[Int] = toks.iterator.map(t => vocab.id(t.word)).toArray
     // Porter.stem lowercases first: this is also the stem of `lower`
-    lazy val stem: Array[String] = perToken(i => stems(toks(i).word))
+    lazy val stem: Array[String] = perToken(i => vocab.stem(toks(i).word))
     lazy val lower: Array[String] = perToken(i => toks(i).word.toLowerCase)
     // BagOfWords / StemmedBagOfWords membership: non-PUNCT and not a
     // stopword (by the lowercased word, resp. by the stem)
@@ -271,10 +278,6 @@ object RelationScoring {
     lazy val negated: Boolean = DepGraph.isNegatedLabeled(depLabels)
     lazy val mainVerbStems: List[String] =
       DepGraph.mainVerbs(toks, adj, DepGraph.root(heads)).map(stem(_)).toList
-    // stems of masked entity tokens: a class id or a masked word
-    private val maskStems = scala.collection.mutable.HashMap.empty[String, String]
-    def stemOfMask(masked: String): String =
-      maskStems.getOrElseUpdate(masked, Porter.stem(masked))
     // (Int, Int) keys packed into one Long: no tuple, no boxing on lookup
     private def key(a: Int, b: Int): Long = (a.toLong << 32) | (b & 0xffffffffL)
     private val spanCache = scala.collection.mutable.LongMap.empty[Span]
@@ -291,9 +294,9 @@ object RelationScoring {
     })
 
     private var memos = new Array[Array[Int]](0)
-    /** Per token i, 1 + the index of `p` + (a value of token i), 0 until folded. */
+    /** By token i, 1 + the index of `p` + (a value from token i on), 0 until folded. */
     def memo(p: Prefix): Array[Int] = {
-      if (p.id >= memos.length) memos = java.util.Arrays.copyOf(memos, p.id + 32)
+      if (p.id >= memos.length) memos = Arrays.copyOf(memos, p.id + 32)
       if (memos(p.id) == null) memos(p.id) = new Array[Int](toks.length)
       memos(p.id)
     }
@@ -301,10 +304,8 @@ object RelationScoring {
     private var tablesFor: Seq[Mention] = null
     private var tables: MentionTables = null
     private val segs = scala.collection.mutable.HashMap.empty[(Int, Span, String), Array[Array[Int]]]
-    /** The tables of `ms`, null when it is empty. A list other than the
-      * last one (by identity) rebuilds them and drops [[segments]], whose
-      * chain visits read them.
-      */
+    /** The tables of `ms` (null if empty); another list (by identity)
+      * rebuilds them and drops [[segments]], whose chain visits read them. */
     def mentionTables(ms: Seq[Mention]): MentionTables = {
       if (tablesFor ne ms) {
         tables = if (ms.isEmpty) null else new MentionTables(this, ms)
@@ -313,10 +314,8 @@ object RelationScoring {
       }
       tables
     }
-    /** Recorded name indices of entity `side` over span `s` of class
-      * `cls`: slot 0 its head surface, 1 its own tokens, 2 + k the k-th
-      * visit of its head's chain walk.
-      */
+    /** Recorded indices of entity `side` (span `s`, class `cls`): slot 0
+      * head surface, 1 own tokens, 2 + k the k-th chain visit. */
     def segments(side: Int, s: Span, cls: String): Array[Array[Int]] =
       segs.getOrElseUpdate((side, s, cls), new Array[Array[Int]](
         2 + (if (s.head >= 0) chainVisitsOf(s.head).length else 0)))
@@ -431,13 +430,13 @@ object RelationScoring {
       * AND depLabels, the head assignment, its adjacency and the BFS
       * depths from its root.
       */
-    def of(toks: IndexedSeq[Tok]): SentencePrep = of(toks, Porter.stem)
-    def of(toks: IndexedSeq[Tok], stems: String => String): SentencePrep = {
+    def of(toks: IndexedSeq[Tok]): SentencePrep = of(toks, new Vocab)
+    def of(toks: IndexedSeq[Tok], vocab: Vocab): SentencePrep = {
       val sp = DepGraph.sentencePos(toks)
       val hs = DepGraph.heads(toks, sp)
       val adj = DepGraph.adjacency(toks.length, hs)
       new SentencePrep(toks, hs, adj, DepGraph.depths(adj, DepGraph.root(hs)),
-        sentPos = sp, stems = stems)
+        sentPos = sp, vocab = vocab)
     }
   }
 
@@ -563,15 +562,10 @@ object RelationScoring {
     * Pair-independent work (stems, mention token ranges and heads,
     * per-token mention classes, per-class mention counts, paths, chain
     * walks) lives in [[SentencePrep]].
-    *
-    * A name that no pair of the prep changes is enumerated through the
-    * sink's memo test ([[NameSink]]): per token (`f_pos=`, `f_bow=`, BOW,
-    * between-token, PD token and interior path n-gram names) and per
-    * entity side, span and class (head surface, own tokens, chain
-    * visits). The test falls through to the pair's own enumeration where
-    * a token lies in the other mention's span, whose class then masks it.
-    * Names of the pair itself (order, counts between the pair, distances,
-    * n-grams touching the path ends, `ne_bow=`) are folded per pair.
+    * Names no pair changes go through the sink's memo tests ([[NameSink]]),
+    * except where a token lies in the other mention's span (its class masks
+    * it); the pair's own names (order, counts between, distances, n-grams
+    * touching the path ends, `ne_bow=`) are folded per pair.
     */
   private def enumerate(
       prep: SentencePrep,
@@ -606,10 +600,12 @@ object RelationScoring {
       else if (s2.contains(i)) m2.class_id
       else if (tables == null) null
       else tables.classOf(i)
-    // names of one token's pair-independent value, memoized per token;
-    // masked(i) is pair-independent off the two spans
-    def tokName(p: Prefix, i: Int, s: String): Unit =
-      if (!sink.memoized(prep.memo(p), i)) add2(p, s)
+    // a token's pair-independent name, memoized by word (id first: it may
+    // add the prep's words); masked(i) is pair-independent off the spans
+    def tokName(p: Prefix, i: Int, s: String): Unit = {
+      val w = prep.wordId(i)
+      if (!sink.memoized(prep.vocab.memo(p), w)) add2(p, s)
+    }
     def maskedName(p: Prefix, i: Int): Unit =
       if (s1.contains(i) || s2.contains(i)) add2(p, masked(i))
       else tokName(p, i, prep.maskedBase(i))
@@ -724,7 +720,7 @@ object RelationScoring {
           tokName(side.txt, i, prep.lower(i))
           tokName(side.pos, i, prep.pos(i))
           add2(side.masked, masked(i))
-          add2(side.stemMasked, prep.stemOfMask(masked(i)))
+          add2(side.stemMasked, prep.vocab.stem(masked(i)))
           add2(side.ann, cls)
           sink.start(side.ann); sink.part(side.marker); sink.part(cls); sink.emit(1.0)
           i += 1
@@ -799,9 +795,8 @@ object RelationScoring {
         posR(k) = if (k == 0) "[S" else if (k == last) "T]" else prep.pos(i)
         k += 1
       }
-      // run(k): interior nodes ending at node k, for bow also off the two
-      // spans; an n-gram over such nodes is memoized by its first token
-      // (n > 1 only on the linear LD path, whose nodes are consecutive)
+      // run(k): interior nodes (for bow off the spans) ending at k; n-grams
+      // over them are memoized by first token (n > 1 on the linear LD path)
       val posRun = new Array[Int](path.length); val bowRun = new Array[Int](path.length)
       k = 1
       while (k < last) {
@@ -902,9 +897,8 @@ object RelationScoring {
     // (DepGraph.depLabels), mirroring the reference's
     // `from_<dep>` / `chain..-fw_<dep>` naming (`entityhead.py:264-281`).
     // the walk itself (pair-independent tree structure) is cached per
-    // start token in SentencePrep and replayed here as a flat loop; each
-    // visit's names are recorded per (side, span, class) unless it visits
-    // the other mention's span
+    // start token in SentencePrep and replayed here as a flat loop; visits
+    // off the other mention's span are recorded per (side, span, class)
     def chainsFor(side: SideNames, start: Int, other: SentencePrep.Span,
         seg: Array[Array[Int]]): Unit = {
       if (start < 0) return

@@ -357,9 +357,9 @@ class KgPipelineSpec extends SparkSpec {
     assert(viaCrf.nonEmpty)
   }
 
-  test("scoreEdge on one shared prep, pairs shuffled, == scoreEdge on a fresh prep per pair") {
+  test("scoreEdge on shared preps, pairs shuffled, == scoreEdge on a fresh prep per pair") {
     import GazetteerTagger.{gazetteer, ObjClass => Obj, OpClass => Op}
-    import RelationScoring.{EdgeCtx, SentencePrep}
+    import RelationScoring.{EdgeCtx, SentencePrep, Vocab}
     val terms = gazetteer ++ dict
     // runs of adjacent terms are one mention of the first term's class,
     // the run's last term also one of its own (overlapping spans); each
@@ -406,6 +406,8 @@ class KgPipelineSpec extends SparkSpec {
       Boolean, EdgeCtx)]
     def ctx(ms: Seq[Mention]) = EdgeCtx(ms, rng.nextInt(4), rng.nextInt(4), rng.nextInt(3))
     for ((turns, tokenizer) <- docs.map((_, "tmvar")) ++ chat.map((_, "generic"))) {
+      // the shared preps of a conversation share its words, as in the pipeline
+      val vocab = new Vocab
       val sents = turns.flatMap { t =>
         graft.nlp.TextOps.segment(t.text, tokenizer).map { case (si, _, _, toks) =>
           (toks, tagger(toks).map { case (cls, b, e) =>
@@ -414,7 +416,7 @@ class KgPipelineSpec extends SparkSpec {
         }
       }
       sents.foreach { case (toks, ms) =>
-        val shared = SentencePrep.of(toks)
+        val shared = SentencePrep.of(toks, vocab)
         // two mention lists on one prep: the classes of overlapped tokens differ
         val lists = Seq(ms, ms.reverse)
         for (a <- ms.indices; b <- ms.indices if a != b) {
@@ -424,15 +426,15 @@ class KgPipelineSpec extends SparkSpec {
       }
       sents.zip(sents.drop(1)).foreach { case ((t1, ms1), (t2, ms2)) =>
         val h1 = SentencePrep.of(t1).heads; val h2 = SentencePrep.of(t2).heads
-        def fresh() = {
+        def fresh(v: Vocab) = {
           val c = KgPipeline.combined(t1, t2, h1, h2)
-          new SentencePrep(c.toks, c.heads, c.adj, c.depth, c.extraLabels)
+          new SentencePrep(c.toks, c.heads, c.adj, c.depth, c.extraLabels, vocab = v)
         }
         val c = KgPipeline.combined(t1, t2, h1, h2)
         val shifted = ms2.map(m => m.copy(begin = m.begin + c.delta, end = m.end + c.delta))
-        val shared = fresh()
+        val shared = fresh(vocab)
         val sentMs = ms1 ++ shifted
-        for (m1 <- ms1; m2 <- shifted) pairs += ((shared, () => fresh(), m1, m2, false, ctx(sentMs)))
+        for (m1 <- ms1; m2 <- shifted) pairs += ((shared, () => fresh(new Vocab), m1, m2, false, ctx(sentMs)))
       }
     }
     val all = pairs.result()
