@@ -90,7 +90,7 @@ object RelationScoring {
   private[graft] def index(state: Long): Int = ((state % Dims) + Dims).toInt % Dims
 
   /** A constant name or name prefix with its FNV-1a state precomputed;
-    * `id` numbers it for [[SentencePrep.memo]].
+    * `id` numbers it for the index memos ([[Vocab]], [[SentencePrep.memo]]).
     */
   private[graft] final class Prefix(val text: String) {
     val state: Long = fold(FnvOffset, text)
