@@ -115,12 +115,14 @@ object KgPipeline {
     final case class SentCtx(turnIdx: Int, sentIdx: Int, toks: IndexedSeq[Tok],
         mentions: Seq[Mention]) {
       lazy val prep: RelationScoring.SentencePrep = RelationScoring.SentencePrep.of(toks, vocab)
-      // the class-1 and class-2 mentions, with entity string and index
-      val side1: Vector[(Mention, String, Int)] = ofClass(cfg.class1)
-      val side2: Vector[(Mention, String, Int)] = ofClass(cfg.class2)
-      private def ofClass(cls: String) = mentions.iterator.zipWithIndex
-        .filter(_._1.class_id == cls)
-        .map { case (m, j) => (m, Triples.entity(cls, m.text), j) }.toVector
+      // the class-1 and class-2 mentions, each with its entity string;
+      // side 2 also with its index in `mentions` (for its shifted copy)
+      val side1: Vector[(Mention, String)] = mentions.iterator
+        .filter(_.class_id == cfg.class1)
+        .map(m => (m, Triples.entity(cfg.class1, m.text))).toVector
+      val side2: Vector[(Mention, String, Int)] = mentions.iterator.zipWithIndex
+        .filter(_._1.class_id == cfg.class2)
+        .map { case (m, j) => (m, Triples.entity(cfg.class2, m.text), j) }.toVector
     }
     val ctxs: Vector[SentCtx] = sorted.iterator.flatMap { t =>
       TextOps.segment(t.text, cfg.tokenizer).map { case (si, _, _, toks) =>
@@ -193,7 +195,7 @@ object KgPipeline {
             m.copy(begin = m.begin + cross.delta, end = m.end + cross.delta)).toVector
           lazy val crossMentions: Seq[Mention] = c1.mentions ++ shifted2
           for {
-            (m1, e1, _) <- c1.side1
+            (m1, e1) <- c1.side1
             (m2, e2, j2) <- c2.side2
             // never pair a mention with itself (only possible when the two
             // entity classes coincide)

@@ -90,7 +90,7 @@ object RelationScoring {
   private[graft] def index(state: Long): Int = ((state % Dims) + Dims).toInt % Dims
 
   /** A constant name or name prefix with its FNV-1a state precomputed;
-    * `id` numbers it for the index memos ([[Vocab]], [[SentencePrep.memo]]).
+    * `id` numbers it for the per-word index memos of a [[Vocab]].
     */
   private[graft] final class Prefix(val text: String) {
     val state: Long = fold(FnvOffset, text)
@@ -101,11 +101,12 @@ object RelationScoring {
   /** Receives [[enumerate]]'s features part by part: `start` opens a name
     * at a constant prefix, `part`/`char` extend it, `emit` closes it with
     * its value. The two sinks see the same parts, so the Map path's names
-    * hash to exactly the indices the scoring path folds. A pair-independent
-    * name (value 1.0) is enumerated only when `memoized(memo, i)` is false,
-    * a run of them only when `replayed(cache, slot)` is false (closed by
-    * `recorded()`); the scoring sink then stores the folded index there,
-    * otherwise it adds the stored one. The Map sink stores none.
+    * hash to exactly the indices the scoring path folds. `memoName` is a
+    * pair-independent name `p` + `s` (value 1.0) whose index the scoring
+    * sink folds once into `memo(i)`; a run of such names is enumerated
+    * only when `replayed(cache, slot)` is false, and `recorded()` then
+    * stores the run's indices there for the scoring sink to add next time.
+    * The Map sink builds every name and stores no index.
     */
   private abstract class NameSink {
     def start(p: Prefix): Unit
@@ -113,7 +114,9 @@ object RelationScoring {
     def part(s: String, from: Int, until: Int): Unit
     def char(c: Char): Unit
     def emit(v: Double): Unit
-    def memoized(memo: Array[Int], i: Int): Boolean = false
+    def memoName(p: Prefix, s: String, memo: Array[Int], i: Int): Unit = {
+      start(p); part(s); emit(1.0)
+    }
     def replayed(cache: Array[Array[Int]], slot: Int): Boolean = false
     def recorded(): Unit = ()
   }
@@ -134,13 +137,12 @@ object RelationScoring {
 
   /** Adds w(index) * v to the score in enumeration order, the index
     * either folded from the name's parts (no name is ever assembled) or
-    * read from a prep's memo or replayed run; the order, and so every
+    * read from a word's memo or a replayed run; the order, and so every
     * score bit, is the same either way.
     */
   private final class ScoreSink(w: Array[Double], b: Double) extends NameSink {
     private var st = 0L
     var score: Double = b
-    private var memo: Array[Int] = null; private var at = 0
     private var cache: Array[Array[Int]] = null; private var slot = 0
     private var rec: Array[Int] = null; private var n = 0
     def start(p: Prefix): Unit = st = p.state
@@ -149,13 +151,15 @@ object RelationScoring {
     def char(c: Char): Unit = st = fold(st, c)
     def emit(v: Double): Unit = add(index(st), v)
     private def add(x: Int, v: Double): Unit = {
-      if (memo != null) { memo(at) = x + 1; memo = null }
       if (cache != null) { if (n == rec.length) rec = Arrays.copyOf(rec, 2 * n); rec(n) = x; n += 1 }
       score += w(x) * v
     }
-    override def memoized(m: Array[Int], i: Int): Boolean =
-      if (m(i) > 0) { add(m(i) - 1, 1.0); true } else { memo = m; at = i; false }
+    override def memoName(p: Prefix, s: String, memo: Array[Int], i: Int): Unit = {
+      if (memo(i) == 0) memo(i) = index(fold(p.state, s)) + 1
+      add(memo(i) - 1, 1.0)
+    }
     override def replayed(c: Array[Array[Int]], s: Int): Boolean = {
+      if (cache != null) throw new IllegalStateException("a recorded run is still open")
       val r = c(s)
       if (r == null) { cache = c; slot = s; n = 0; if (rec == null) rec = new Array[Int](64) }
       else { var i = 0; while (i < r.length) { add(r(i), 1.0); i += 1 } }
@@ -241,8 +245,8 @@ object RelationScoring {
     * which needs `toks` offset-ascending (TextOps.segment, combined).
     *
     * Scoring folds each pair-independent name once, on first use: `vocab`
-    * and [[memo]] hold per-word and path n-gram indices, [[segments]] runs
-    * per entity side, span and class; [[path]] reads one BFS tree per head.
+    * holds per-word indices, [[segments]] runs per entity side, span and
+    * class; [[path]] reads one BFS tree per head.
     *
     * `heads(i)` is token i's dependency head (root points to itself);
     * `extraLabels` carries the labels of synthetic combined-sentence
@@ -285,20 +289,11 @@ object RelationScoring {
       val (first, last) = DepGraph.tokenRange(toks, m.begin, m.end)
       Span(first, last, DepGraph.entityHead(toks, depth, (first, last)))
     })
-    private val pathCache = scala.collection.mutable.LongMap.empty[Array[Int]]
     private val trees = new Array[Array[Int]](adj.length)
     /** [[DepGraph.shortestPath]] from a to b as an array, read from a's BFS tree. */
-    def path(a: Int, b: Int): Array[Int] = pathCache.getOrElseUpdate(key(a, b), {
+    def path(a: Int, b: Int): Array[Int] = {
       if (trees(a) == null) trees(a) = DepGraph.bfsTree(adj, a)
       DepGraph.treePath(trees(a), a, b)
-    })
-
-    private var memos = new Array[Array[Int]](0)
-    /** By token i, 1 + the index of `p` + (a value from token i on), 0 until folded. */
-    def memo(p: Prefix): Array[Int] = {
-      if (p.id >= memos.length) memos = Arrays.copyOf(memos, p.id + 32)
-      if (memos(p.id) == null) memos(p.id) = new Array[Int](toks.length)
-      memos(p.id)
     }
 
     private var tablesFor: Seq[Mention] = null
@@ -562,10 +557,10 @@ object RelationScoring {
     * Pair-independent work (stems, mention token ranges and heads,
     * per-token mention classes, per-class mention counts, paths, chain
     * walks) lives in [[SentencePrep]].
-    * Names no pair changes go through the sink's memo tests ([[NameSink]]),
+    * Names no pair changes go through the sink's memos ([[NameSink]]),
     * except where a token lies in the other mention's span (its class masks
-    * it); the pair's own names (order, counts between, distances, n-grams
-    * touching the path ends, `ne_bow=`) are folded per pair.
+    * it); the pair's own names (order, counts between, distances, path
+    * n-grams, `ne_bow=`) are folded per pair.
     */
   private def enumerate(
       prep: SentencePrep,
@@ -604,7 +599,7 @@ object RelationScoring {
     // add the prep's words); masked(i) is pair-independent off the spans
     def tokName(p: Prefix, i: Int, s: String): Unit = {
       val w = prep.wordId(i)
-      if (!sink.memoized(prep.vocab.memo(p), w)) add2(p, s)
+      sink.memoName(p, s, prep.vocab.memo(p), w)
     }
     def maskedName(p: Prefix, i: Int): Unit =
       if (s1.contains(i) || s2.contains(i)) add2(p, masked(i))
@@ -795,31 +790,19 @@ object RelationScoring {
         posR(k) = if (k == 0) "[S" else if (k == last) "T]" else prep.pos(i)
         k += 1
       }
-      // run(k): interior nodes (for bow off the spans) ending at k; n-grams
-      // over them are memoized by first token (n > 1 on the linear LD path)
-      val posRun = new Array[Int](path.length); val bowRun = new Array[Int](path.length)
-      k = 1
-      while (k < last) {
-        posRun(k) = k
-        if (!s1.contains(path(k)) && !s2.contains(path(k))) bowRun(k) = bowRun(k - 1) + 1
-        k += 1
-      }
       // token-only n-grams: n=1 over middle, n>1 over all nodes
-      def tokenNGrams(grams: Array[Prefix], rendered: Array[String], run: Array[Int]): Unit = {
-        def at(s: Int, n: Int): Unit =
-          if (!((n == 1 || !withEdges) && run(s + n - 1) >= n &&
-              sink.memoized(prep.memo(grams(n)), path(s)))) gram(grams(n), rendered, s, n)
+      def tokenNGrams(grams: Array[Prefix], rendered: Array[String]): Unit = {
         var k = 1
-        while (k < last) { at(k, 1); k += 1 }
+        while (k < last) { gram(grams(1), rendered, k, 1); k += 1 }
         var n = 2
         while (n <= 4) {
           var s = 0
-          while (s + n <= path.length) { at(s, n); s += 1 }
+          while (s + n <= path.length) { gram(grams(n), rendered, s, n); s += 1 }
           n += 1
         }
       }
-      tokenNGrams(names.bow, bowR, bowRun)
-      tokenNGrams(names.pos, posR, posRun)
+      tokenNGrams(names.bow, bowR)
+      tokenNGrams(names.pos, posR)
       // counts + negation over the middle tokens
       val middle = path.slice(1, last)
       add(names.tokensCount, middle.length.toDouble)
