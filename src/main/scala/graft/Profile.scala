@@ -22,8 +22,11 @@ object Profile {
   type Query = (SparkSession, String) => DataFrame
   /** Named counters; the `_s` values are held in nanoseconds. */
   type Counts = Map[String, Long]
-  /** Per-rep counters, summed over the tasks of the rep's jobs. */
-  val Fields: Vector[String] = Vector("jobs", "stages", "tasks", "run_s", "cpu_s",
+  /** Per-rep counters: `job_wall_s`, the time covered by the union of the
+    * rep's job intervals (`wall_s - job_wall_s` ran on the driver alone),
+    * then sums over the tasks of the rep's jobs.
+    */
+  val Fields: Vector[String] = Vector("job_wall_s", "jobs", "stages", "tasks", "run_s", "cpu_s",
     "gc_s", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
   private val zero: Counts = Fields.map(_ -> 0L).toMap
   private def plus(a: Counts, b: Counts): Counts =
@@ -121,6 +124,8 @@ object Profile {
     val stages = mutable.ArrayBuffer.empty[(Long, String)] // (ms, JSON)
     val drained = new CountDownLatch(1)
     private val repOf = mutable.Map.empty[Int, Int]
+    private val jobStart = mutable.Map.empty[Int, (Int, Long)] // job -> (rep, ms)
+    private val jobSpans = Array.fill(reps)(mutable.ArrayBuffer.empty[(Long, Long)])
     private var drainJob = -1
 
     private def bump(r: Int, c: (String, Long)*): Unit = perRep(r) = plus(perRep(r), c.toMap)
@@ -131,10 +136,21 @@ object Profile {
           case "drain" => drainJob = e.jobId
           case r =>
             bump(r.toInt, "jobs" -> 1L)
+            jobStart(e.jobId) = (r.toInt, e.time)
             e.stageIds.foreach(repOf.getOrElseUpdate(_, r.toInt))
         }
 
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = if (e.jobId == drainJob) drained.countDown()
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (e.jobId == drainJob) {
+        jobSpans.indices.foreach(r => bump(r, "job_wall_s" -> covered(jobSpans(r)) * 1000000L))
+        drained.countDown()
+      } else jobStart.remove(e.jobId).foreach { case (r, t0) => jobSpans(r) += t0 -> e.time }
+
+    /** Milliseconds covered by the union of the [start, end] spans. */
+    private def covered(spans: collection.Seq[(Long, Long)]): Long =
+      spans.sorted.foldLeft((0L, Long.MinValue)) { case ((sum, reach), (a, b)) =>
+        (sum + math.max(0L, b - math.max(a, reach)), math.max(reach, b))
+      }._1
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo

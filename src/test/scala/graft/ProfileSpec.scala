@@ -24,6 +24,8 @@ class ProfileSpec extends SparkSpec {
     val hashes = df.select(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)))
       .collect().map(_.getLong(0))
     assert(r.reps.map(_("rows")) == Seq(7L))
+    val (jobWall, wall) = (r.reps.head("job_wall_s"), r.reps.head("wall_s"))
+    assert(0 < jobWall && jobWall <= wall, s"job_wall_s $jobWall ns, wall_s $wall ns")
     assert(r.reps.head("checksum") == hashes.foldLeft(0L)(_ ^ _))
     assert(r.total("shuffle_write_bytes") > 0 && r.total("shuffle_read_bytes") > 0)
     assert(r.json("unused").startsWith("""{"query":"grouped","sf":"unused","reps":[{"rows":7,"""))
