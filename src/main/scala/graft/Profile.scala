@@ -59,7 +59,7 @@ object Profile {
     if (unknown.nonEmpty) return failed("unknown", unknown)
     val sfDir = pos(1)
     val spark = Session.get()
-    spark.read.parquet(s"$sfDir/documents.parquet").count() // warm-up
+    ops.Transcripts.documents(spark, sfDir).count() // warm-up
     val bad = measure(spark, names.map(n => n -> SparkEntry.queries(n)), sfDir,
         pos.lift(2).fold(3)(_.toInt), Option.when(p >= 0)(args(p + 1)))
       .flatMap(_.fold(Option(_), r => { println(r.json(sfDir)); None })).toList

@@ -447,8 +447,7 @@ object SparkEntry {
   val MixRates: Map[String, Double] =
     (0 until 20).map(i => s"src$i" -> (i % 5) * 0.25).toMap
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+  private def docs(s: SparkSession, dir: String): DataFrame = Transcripts.documents(s, dir)
 
   /** The fused one-shuffle extraction pipeline (KgPipeline.triples) run
     * in stub mode over the documents-derived transcripts: provably

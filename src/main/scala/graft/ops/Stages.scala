@@ -199,7 +199,7 @@ object Stages {
     */
   def materializeCuration(spark: SparkSession, sfDir: String,
                           root: String): Seq[RunReport] = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Transcripts.documents(spark, sfDir)
     val reports = Seq.newBuilder[RunReport]
     val (pairs, r1) = run(spark, root, "dup_pairs") {
       Dedup.oracleLshPairs(docs)

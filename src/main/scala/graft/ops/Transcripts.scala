@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.model.Turn
 
 /** Builders for the engine's primary input table: multi-turn transcripts
@@ -21,12 +22,28 @@ object Transcripts {
   val TurnsPerConv = 5
   val EpochSeconds = 1735689600L // 2025-01-01T00:00:00Z, fixed
 
+  /** The documents table as its generators write it: columns in file
+    * order, nullable as Parquet schema inference reads them.
+    */
+  val DocumentsSchema: StructType =
+    StructType.fromDDL("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
+
+  /** `<sfDir>/documents.parquet` read with [[DocumentsSchema]] — the engine's
+    * one read of it. A declared schema skips inference, which runs a
+    * footer-reading job on every call.
+    */
+  def documents(spark: SparkSession, sfDir: String): DataFrame =
+    spark.read.schema(DocumentsSchema).parquet(s"$sfDir/documents.parquet")
+
+  /** [[fromDocuments]] of `<sfDir>`'s [[documents]]. */
+  def fromDocuments(spark: SparkSession, sfDir: String): DataFrame =
+    fromDocuments(documents(spark, sfDir))
+
   /** documents(doc_id, text, ...) → transcripts. conv_id groups 5
     * consecutive doc_ids; text is carried through untouched.
     */
-  def fromDocuments(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+  def fromDocuments(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
     docs.select(
       concat(lit("conv_"),
         lpad(($"doc_id" / TurnsPerConv).cast("long").cast("string"), 6, "0"))
