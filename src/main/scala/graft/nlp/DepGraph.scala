@@ -1,5 +1,6 @@
 package graft.nlp
 
+import scala.collection.immutable.ArraySeq
 import graft.model.Tok
 
 /** Sentence-local dependency structure + shortest paths — the engine's
@@ -172,6 +173,13 @@ object DepGraph {
     else "NOUN"
   }
 
+  /** [[coarsePos]] of each token. */
+  def coarsePos(toks: IndexedSeq[Tok]): Array[String] = toks.iterator.map(t => coarsePos(t.word)).toArray
+
+  private def lowerOf(toks: IndexedSeq[Tok]): Array[String] = toks.iterator.map(_.word.toLowerCase).toArray
+  private def tagsOf(toks: IndexedSeq[Tok]): Array[String] =
+    sentencePos(toks, coarsePos(toks), lowerOf(toks))
+
   /** Prepositions that turn a directly following -ing form into a nominal
     * gerund ("targeting of", "silencing in") — used by [[sentencePos]].
     */
@@ -201,14 +209,18 @@ object DepGraph {
     *
     * Shared by [[heads]] and [[depLabels]] so both see the same tags.
     */
-  def sentencePos(toks: IndexedSeq[Tok]): IndexedSeq[String] = {
-    val base = toks.map(t => coarsePos(t.word))
-    IndexedSeq.tabulate(toks.length) { i =>
+  def sentencePos(toks: IndexedSeq[Tok]): IndexedSeq[String] = ArraySeq.unsafeWrapArray(tagsOf(toks))
+
+  /** [[sentencePos]] from each token's [[coarsePos]] (`base`) and lowercase
+    * form, which the fused pipeline reads from its conversation's lexicon.
+    */
+  def sentencePos(toks: IndexedSeq[Tok], base: Array[String], lower: Array[String]): Array[String] =
+    Array.tabulate(toks.length) { i =>
       val w = toks(i).word
-      val lw = w.toLowerCase
+      val lw = lower(i)
       if (base(i) == "VERB" && lw.endsWith("ing") &&
         i + 1 < toks.length && base(i + 1) == "ADP" &&
-        gerundBinders.contains(toks(i + 1).word.toLowerCase)) "NOUN"
+        gerundBinders.contains(lower(i + 1))) "NOUN"
       else if (base(i) == "VERB" && i > 0 && w.head.isUpper) "NOUN"
       else if (base(i) == "NOUN" && i > 0 &&
         toks(i - 1).word.equalsIgnoreCase("to") && w.head.isLower &&
@@ -217,7 +229,6 @@ object DepGraph {
         "VERB"
       else base(i)
     }
-  }
 
   /** Auxiliary / modal verb forms — attach to a verbal head as "aux"
     * rather than "conj".
@@ -255,20 +266,17 @@ object DepGraph {
     * vocabulary keeps hashed feature space stable across corpora.
     */
   def depLabels(toks: IndexedSeq[Tok], heads: Array[Int]): Array[String] =
-    depLabels(toks, heads, sentencePos(toks))
+    depLabels(heads, tagsOf(toks), lowerOf(toks))
 
-  /** [[depLabels]] with a precomputed [[sentencePos]] — the fused
-    * pipeline computes the tag sequence once per sentence and shares it
-    * between [[heads]] and the labels (hot-loop form).
+  /** [[depLabels]] from the [[sentencePos]] tags and lowercase forms — the
+    * fused pipeline shares both with [[heads]] (hot-loop form).
     */
-  def depLabels(toks: IndexedSeq[Tok], heads: Array[Int],
-                pos: IndexedSeq[String]): Array[String] = {
-    val lower = toks.map(_.word.toLowerCase)
+  def depLabels(heads: Array[Int], pos: Array[String], lower: Array[String]): Array[String] = {
     def ccBetween(a: Int, b: Int): Boolean = {
       val lo = math.min(a, b); val hi = math.max(a, b)
       (lo + 1 until hi).exists(j => ccLexicon.contains(lower(j)))
     }
-    Array.tabulate(toks.length) { i =>
+    Array.tabulate(heads.length) { i =>
       val w = lower(i)
       if (heads(i) == i) "root"
       else if (negWords.contains(w)) "neg"
@@ -365,16 +373,24 @@ object DepGraph {
     *    what the path property tests pin);
     *  - hyphens bind the following token, other punctuation the root.
     */
-  def heads(toks: IndexedSeq[Tok]): Array[Int] =
-    heads(toks, sentencePos(toks))
+  def heads(toks: IndexedSeq[Tok]): Array[Int] = heads(toks, tagsOf(toks), lowerOf(toks))
 
-  /** [[heads]] with a precomputed [[sentencePos]] (hot-loop form). */
-  def heads(toks: IndexedSeq[Tok], pos: IndexedSeq[String]): Array[Int] = {
+  /** [[heads]] with a precomputed [[sentencePos]]. */
+  def heads(toks: IndexedSeq[Tok], pos: IndexedSeq[String]): Array[Int] =
+    heads(toks, pos.toArray, lowerOf(toks))
+
+  /** [[heads]] from the [[sentencePos]] tags and lowercase forms (hot-loop
+    * form). Each per-token predicate of the rules (aux form, forward-binding
+    * aux, pre-nominal participle, reduced relative, plain verb, symbol
+    * shape) is computed once per token into an array, as is the nearest
+    * verb of each kind before or after each token; the rules read them.
+    */
+  def heads(toks: IndexedSeq[Tok], pos: Array[String], lower: Array[String]): Array[Int] = {
     val n = toks.length
     if (n == 0) return Array.empty
-    val lower = toks.map(_.word.toLowerCase)
     def nominal(p: String) = p == "NOUN" || p == "NUM"
-    def isAux(i: Int) = auxLexicon.contains(lower(i))
+    val verb = Array.tabulate(n)(j => pos(j) == "VERB")
+    val isAux = Array.tabulate(n)(j => auxLexicon.contains(lower(j)))
     // run-final / run-start index per nominal token
     val runEnd = Array.tabulate(n)(identity)
     var i = n - 2
@@ -388,16 +404,15 @@ object DepGraph {
       if (nominal(pos(i)) && nominal(pos(i - 1))) runStart(i) = runStart(i - 1)
       i += 1
     }
-    def nextVerbRaw(j0: Int): Int = {
-      var j = j0 + 1
-      while (j < n && pos(j) != "VERB") j += 1
-      if (j < n) j else -1
-    }
+    // the first verb after each token, -1 if none
+    val nextVerb = new Array[Int](n)
+    var next = -1
+    i = n - 1
+    while (i >= 0) { nextVerb(i) = next; if (verb(i)) next = i; i -= 1 }
     // forward-binding auxiliary: chains INTO a verb within the next two
     // tokens ("was found", "are taken", "may have been taken")
-    def fwdAux(j: Int): Boolean = pos(j) == "VERB" && isAux(j) && {
-      val nv = nextVerbRaw(j); nv >= 0 && nv - j <= 2
-    }
+    val fwdAux = Array.tabulate(n)(j =>
+      verb(j) && isAux(j) && nextVerb(j) >= 0 && nextVerb(j) - j <= 2)
     def participleForm(j: Int): Boolean =
       lower(j).endsWith("ed") || lower(j).endsWith("ing") ||
         participleLexicon.contains(lower(j))
@@ -408,7 +423,7 @@ object DepGraph {
     // attach — normally the run-final token, but a run ending in a
     // symbol-like name ("biogenesis factor CYO1") heads its modifiers on
     // the last COMMON noun (factor), which itself compounds into the name.
-    def symbolLike(j: Int): Boolean = isSymbolWord(toks(j).word)
+    val symbolLike = Array.tabulate(n)(j => isSymbolWord(toks(j).word))
     val modTarget = Array.tabulate(n)(identity)
     i = 0
     while (i < n) {
@@ -443,38 +458,41 @@ object DepGraph {
     // modifies, continued by a preposition or adverb ("lipase located
     // in...", never "chloroplasts showed that..." — a following
     // complementizer or NP means a main verb)
-    def redRel(j: Int): Boolean =
-      pos(j) == "VERB" && !prenom(j) && !fwdAux(j) && participleForm(j) &&
+    val redRel = Array.tabulate(n)(j =>
+      verb(j) && !prenom(j) && !fwdAux(j) && participleForm(j) &&
         j > 0 && nominal(pos(j - 1)) && j + 1 < n &&
-        ((pos(j + 1) == "ADP" && lower(j + 1) != "that") || pos(j + 1) == "ADV")
-    def plainVerb(j: Int) =
-      pos(j) == "VERB" && !fwdAux(j) && !prenom(j) && !redRel(j)
+        ((pos(j + 1) == "ADP" && lower(j + 1) != "that") || pos(j + 1) == "ADV"))
+    val plainVerb = Array.tabulate(n)(j => verb(j) && !fwdAux(j) && !prenom(j) && !redRel(j))
     // nearest preceding verb for ARGUMENT attachment (subjects/objects
     // skip reduced relatives — "lipase located in X binds Y" arguments
     // belong to the main verb) ...
-    def prevPlainVerb(j0: Int): Int = {
-      var j = j0 - 1
-      while (j >= 0 && !plainVerb(j)) j -= 1
-      j
-    }
+    val prevPlainVerb = new Array[Int](n)
     // ... while PPs and adverbs attach to the closest verbal form,
     // reduced relatives included ("located IN lipid particles")
-    def prevAttachVerb(j0: Int): Int = {
-      var j = j0 - 1
-      while (j >= 0 && !(pos(j) == "VERB" && !fwdAux(j) && !prenom(j))) j -= 1
-      j
+    val prevAttachVerb = new Array[Int](n)
+    var plain, attach = -1
+    i = 0
+    while (i < n) {
+      prevPlainVerb(i) = plain; prevAttachVerb(i) = attach
+      if (plainVerb(i)) plain = i
+      if (verb(i) && !fwdAux(i) && !prenom(i)) attach = i
+      i += 1
     }
     // first verb to the right (participle modifiers excluded);
     // forward-binding auxiliaries are chased into their target verb
+    val nextChainVerb = new Array[Int](n)
+    next = -1
+    i = n - 1
+    while (i >= 0) {
+      nextChainVerb(i) = next
+      if (verb(i) && !prenom(i) && !redRel(i)) next = i
+      i -= 1
+    }
     def nextVerbChain(j0: Int): Int = {
-      var j = j0 + 1
-      while (j < n && !(pos(j) == "VERB" && !prenom(j) && !redRel(j))) j += 1
-      if (j >= n) -1
-      else {
-        var t = j
-        while (t >= 0 && fwdAux(t)) t = nextVerbRaw(t)
-        if (t >= 0) t else j
-      }
+      val j = nextChainVerb(j0)
+      var t = j
+      while (t >= 0 && fwdAux(t)) t = nextVerb(t)
+      if (t >= 0) t else j
     }
     // parenthesis depth: the main verb of a sentence never sits inside a
     // parenthetical ("maize ( Zea mays ) PyrR ... restored")
@@ -488,8 +506,8 @@ object DepGraph {
       i += 1
     }
     val root = pos.indices.find(j => plainVerb(j) && depth(j) == 0)
-      .orElse(pos.indices.find(plainVerb))
-      .orElse(pos.indices.find(j => pos(j) == "VERB"))
+      .orElse(pos.indices.find(plainVerb(_)))
+      .orElse(pos.indices.find(verb(_)))
       .getOrElse {
         val firstNoun = pos.indexWhere(nominal)
         if (firstNoun >= 0) runEnd(firstNoun) else 0
@@ -514,7 +532,7 @@ object DepGraph {
           else root
         case "VERB" =>
           if (prenom(k)) nomThrough(k + 1)
-          else if (fwdAux(k)) nextVerbRaw(k)
+          else if (fwdAux(k)) nextVerb(k)
           else if (redRel(k)) k - 1
           else {
             val p = prevPlainVerb(k)
@@ -733,18 +751,31 @@ object DepGraph {
     * (`data.py:1087-1104`): BFS from the root, collect the first layer
     * of verb tokens encountered.
     */
-  def mainVerbs(toks: IndexedSeq[Tok], adj: Array[List[Int]], root: Int): Seq[Int] = {
-    if (toks.isEmpty) return Nil
-    if (coarsePos(toks(root).word) == "VERB") return Seq(root)
-    val seen = Array.fill(toks.length)(false)
-    seen(root) = true
-    var frontier = List(root)
-    while (frontier.nonEmpty) {
-      val next = frontier.flatMap(adj(_)).filterNot(seen).distinct.sorted
-      next.foreach(seen(_) = true)
-      val verbs = next.filter(i => coarsePos(toks(i).word) == "VERB")
+  def mainVerbs(toks: IndexedSeq[Tok], adj: Array[List[Int]], root: Int): Seq[Int] =
+    mainVerbs(adj, root, coarsePos(toks))
+
+  /** [[mainVerbs]] over each token's [[coarsePos]] (hot-loop form): the BFS
+    * layers sit one after another in one queue, each sorted ascending once
+    * it is complete, and a seen array keeps every token in one layer.
+    */
+  def mainVerbs(adj: Array[List[Int]], root: Int, pos: Array[String]): Seq[Int] = {
+    if (pos.isEmpty) return Nil
+    if (pos(root) == "VERB") return List(root)
+    val seen = new Array[Boolean](pos.length)
+    val queue = new Array[Int](pos.length)
+    seen(root) = true; queue(0) = root
+    var from = 0; var until = 1
+    while (from < until) {
+      var end = until
+      var k = from
+      while (k < until) {
+        adj(queue(k)).foreach { y => if (!seen(y)) { seen(y) = true; queue(end) = y; end += 1 } }
+        k += 1
+      }
+      java.util.Arrays.sort(queue, until, end)
+      val verbs = (until until end).iterator.map(queue(_)).filter(pos(_) == "VERB").toList
       if (verbs.nonEmpty) return verbs
-      frontier = next
+      from = until; until = end
     }
     Nil
   }
@@ -761,13 +792,22 @@ object DepGraph {
     * with minimum depth, nouns preferred, first wins —
     * `Part.set_entities_head_tokens` (`data.py:1162-1220`).
     */
-  def entityHead(toks: IndexedSeq[Tok], depth: Array[Int], range: (Int, Int)): Int = {
-    if (range._1 < 0) return -1
-    val in = range._1 to range._2
-    val nonPunct = in.filter(i => coarsePos(toks(i).word) != "PUNCT")
-    val cands = if (nonPunct.nonEmpty) nonPunct else in
-    val nouns = cands.filter(i => coarsePos(toks(i).word) == "NOUN")
-    val pool = if (nouns.nonEmpty) nouns else cands
-    pool.minBy(depth(_))
+  def entityHead(toks: IndexedSeq[Tok], depth: Array[Int], range: (Int, Int)): Int =
+    entityHead(depth, range, coarsePos(toks))
+
+  /** [[entityHead]] over each token's [[coarsePos]] (hot-loop form): the
+    * first minimum-depth noun of the range, else its first minimum-depth
+    * non-punctuation token, else its first minimum-depth token.
+    */
+  def entityHead(depth: Array[Int], range: (Int, Int), pos: Array[String]): Int = {
+    var noun, word, any = -1
+    var i = range._1
+    while (i >= 0 && i <= range._2) {
+      if (any < 0 || depth(i) < depth(any)) any = i
+      if (pos(i) != "PUNCT" && (word < 0 || depth(i) < depth(word))) word = i
+      if (pos(i) == "NOUN" && (noun < 0 || depth(i) < depth(noun))) noun = i
+      i += 1
+    }
+    if (noun >= 0) noun else if (word >= 0) word else any
   }
 }

@@ -188,9 +188,10 @@ object KgPipeline {
             else cfg.window + math.abs(c2.turnIdx - c1.turnIdx)
           // combined context hoisted per sentence PAIR: token/dep work and
           // c2's mentions shifted into its coordinates are mention-independent
-          lazy val cross = combined(c1.toks, c2.toks, c1.prep.heads, c2.prep.heads)
-          lazy val crossPrep = new RelationScoring.SentencePrep(
-            cross.toks, cross.heads, cross.adj, cross.depth, cross.extraLabels, vocab = vocab)
+          lazy val cross = combined(c1.toks, c2.toks, c1.prep.heads, c2.prep.heads,
+            c1.prep.pos, c2.prep.pos)
+          lazy val crossPrep = new RelationScoring.SentencePrep(cross.toks, cross.heads,
+            cross.adj, cross.depth, cross.extraLabels, vocab = vocab, lexemes = c1.prep.lex ++ c2.prep.lex)
           lazy val shifted2: Vector[Mention] = c2.mentions.iterator.map(m =>
             m.copy(begin = m.begin + cross.delta, end = m.end + cross.delta)).toVector
           lazy val crossMentions: Seq[Mention] = c1.mentions ++ shifted2
@@ -284,11 +285,17 @@ object KgPipeline {
       adj: Array[List[Int]], depth: Array[Int],
       extraLabels: Map[Long, String], delta: Int)
 
-  /** The pipeline passes each sentence's memoized head assignment so
-    * per-sentence parsing never repeats per sentence PAIR.
+  def combined(toks1: IndexedSeq[Tok], toks2: IndexedSeq[Tok],
+               hs1: Array[Int], hs2: Array[Int]): CombinedCtx =
+    combined(toks1, toks2, hs1, hs2, DepGraph.coarsePos(toks1), DepGraph.coarsePos(toks2))
+
+  /** The pipeline passes each sentence's memoized head assignment and
+    * [[DepGraph.coarsePos]] tags so per-sentence parsing never repeats per
+    * sentence PAIR.
     */
   def combined(toks1: IndexedSeq[Tok], toks2: IndexedSeq[Tok],
-               hs1: Array[Int], hs2: Array[Int]): CombinedCtx = {
+               hs1: Array[Int], hs2: Array[Int],
+               pos1: Array[String], pos2: Array[String]): CombinedCtx = {
     val delta = (if (toks1.nonEmpty) toks1.last.end + 1 else 0) -
       (if (toks2.nonEmpty) toks2.head.begin else 0)
     val shifted = toks2.zipWithIndex.map { case (t, i) =>
@@ -301,9 +308,8 @@ object KgPipeline {
     val root1 = DepGraph.root(hs1)
     val root2 = DepGraph.root(hs2) + toks1.length
     // same-word noun links across the two sides (`data.py:1649-1666`)
-    val nouns1 = toks1.indices.filter(i => DepGraph.coarsePos(toks1(i).word) == "NOUN")
-    val nouns2 = shifted.indices.map(_ + toks1.length)
-      .filter(i => DepGraph.coarsePos(all(i).word) == "NOUN")
+    val nouns1 = toks1.indices.filter(pos1(_) == "NOUN")
+    val nouns2 = toks2.indices.filter(pos2(_) == "NOUN").map(_ + toks1.length)
     val lemmaLinks = for {
       a <- nouns1; b <- nouns2
       if all(a).word.equalsIgnoreCase(all(b).word)

@@ -3,6 +3,7 @@ package graft.ops
 import graft.model._
 import graft.nlp.{DepGraph, Porter, TextOps}
 import java.util.Arrays
+import scala.collection.immutable.ArraySeq
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -211,23 +212,41 @@ object RelationScoring {
     sink.score
   }
 
-  /** The words of a conversation (by default of one prep): id, stem and,
-    * per prefix p, the memo of `p` + (a value of the word) by word id. Every
-    * per-token value a name reads is a function of the word.
+  /** The lexicon of a conversation (by default of one prep): each distinct
+    * word's [[Lexeme]], numbered in order of first use, and, per prefix p,
+    * the memo of `p` + (a value of the word) by word id. Every per-token
+    * value the parser's input and the feature names read is a function of
+    * the word, so it is computed once per word per conversation. Keep it
+    * per conversation: its memo arrays grow with the words it has seen.
     */
   final class Vocab {
-    private val ids = scala.collection.mutable.HashMap.empty[String, Int]
-    private val stems = scala.collection.mutable.ArrayBuffer.empty[String]
-    def id(w: String): Int = ids.getOrElseUpdate(w, { stems += Porter.stem(w); stems.length - 1 })
-    def stem(w: String): String = stems(id(w))
+    private val lexemes = scala.collection.mutable.HashMap.empty[String, Lexeme]
+    def lexeme(w: String): Lexeme = lexemes.getOrElseUpdate(w, new Lexeme(lexemes.size, w))
+    def stem(w: String): String = lexeme(w).stem
     private var memos = new Array[Array[Int]](0)
     /** By word id, 1 + the index of `p` + (a value of the word), 0 until folded. */
     def memo(p: Prefix): Array[Int] = {
       if (p.id >= memos.length) memos = Arrays.copyOf(memos, p.id + 32)
       val m = if (memos(p.id) == null) Array.emptyIntArray else memos(p.id)
-      if (m.length < stems.length) memos(p.id) = Arrays.copyOf(m, 2 * stems.length)
+      if (m.length < lexemes.size) memos(p.id) = Arrays.copyOf(m, 2 * lexemes.size)
       memos(p.id)
     }
+  }
+
+  /** What parsing and scoring read of one word: its [[DepGraph.coarsePos]]
+    * (context-free; [[DepGraph.sentencePos]] applies the neighbour rules),
+    * lowercase form, Porter stem (Porter.stem lowercases first, so this is
+    * also the stem of `lower`), [[TextOps.maskedWord]], and whether it
+    * counts in the bag of words by its lowercase form and by its stem
+    * (not PUNCT, not a stopword).
+    */
+  final class Lexeme private[RelationScoring] (val id: Int, word: String) {
+    val pos: String = DepGraph.coarsePos(word)
+    val lower: String = word.toLowerCase
+    val stem: String = Porter.stem(word)
+    val masked: String = TextOps.maskedWord(word)
+    val inBowText: Boolean = pos != "PUNCT" && !stopWords.contains(lower)
+    val inBowStem: Boolean = pos != "PUNCT" && !stopWords.contains(stem)
   }
 
   /** Per-sentence values shared across all candidate pairs of the
@@ -236,11 +255,13 @@ object RelationScoring {
     * cache (`utils/graph.py:29-46`). With dense mentions (k per class) a
     * sentence yields O(k²) pairs; each value here is computed once.
     *
-    * The per-token values are lazy arrays: every enumeration reads `pos`
-    * and `maskedBase` of each token and `lower`/`stem` of each non-PUNCT
-    * token, while a prep that is built only for its `heads` (the
-    * cross-context input of [[KgPipeline.combined]]) computes none.
-    * `vocab` holds word ids and stems (one per conversation in the pipeline).
+    * The per-token values are reads of each token's [[Lexeme]] in `vocab`
+    * (one per conversation in the pipeline), resolved once per prep:
+    * [[SentencePrep.of]] resolves them to hand the parser each token's
+    * context-free POS and lowercase form, and `pos`/`lower` keep those
+    * arrays (the POS array also feeds [[DepGraph.mainVerbs]] and
+    * [[DepGraph.entityHead]]). A prep built by the constructor resolves
+    * them on first use.
     * Each mention's token range and head are resolved once, by [[span]],
     * which needs `toks` offset-ascending (TextOps.segment, combined).
     *
@@ -256,38 +277,35 @@ object RelationScoring {
                            val adj: Array[List[Int]], val depth: Array[Int],
                            val extraLabels: Map[Long, String] = Map.empty,
                            sentPos: IndexedSeq[String] = null,
-                           val vocab: Vocab = new Vocab) {
+                           val vocab: Vocab = new Vocab,
+                           lexemes: Array[Lexeme] = null) {
     import SentencePrep._
-    private def perToken(f: Int => String): Array[String] = Array.tabulate(toks.length)(f)
-    lazy val pos: Array[String] = perToken(i => DepGraph.coarsePos(toks(i).word))
-    lazy val maskedBase: Array[String] = perToken(i => TextOps.maskedWord(toks(i).word))
-    lazy val wordId: Array[Int] = toks.iterator.map(t => vocab.id(t.word)).toArray
-    // Porter.stem lowercases first: this is also the stem of `lower`
-    lazy val stem: Array[String] = perToken(i => vocab.stem(toks(i).word))
-    lazy val lower: Array[String] = perToken(i => toks(i).word.toLowerCase)
-    // BagOfWords / StemmedBagOfWords membership: non-PUNCT and not a
-    // stopword (by the lowercased word, resp. by the stem)
-    lazy val inBowText: Array[Boolean] =
-      Array.tabulate(toks.length)(i => pos(i) != "PUNCT" && !stopWords.contains(lower(i)))
-    lazy val inBowStem: Array[Boolean] =
-      Array.tabulate(toks.length)(i => pos(i) != "PUNCT" && !stopWords.contains(stem(i)))
+    /** Each token's [[Lexeme]] in `vocab`. */
+    lazy val lex: Array[Lexeme] =
+      if (lexemes != null) lexemes else toks.iterator.map(t => vocab.lexeme(t.word)).toArray
+    lazy val wordId: Array[Int] = lex.map(_.id)
+    lazy val pos: Array[String] = lex.map(_.pos)
+    lazy val lower: Array[String] = lex.map(_.lower)
+    def maskedBase(i: Int): String = lex(i).masked
+    def stem(i: Int): String = lex(i).stem
+    def inBowText(i: Int): Boolean = lex(i).inBowText
+    def inBowStem(i: Int): Boolean = lex(i).inBowStem
     /** Rule-assigned dependency label of each token's edge to its head
       * (`token.features['dep']` in the reference) — shared by the PD edge
       * n-grams, the chain features and the negation test.
       */
-    lazy val depLabels: Array[String] =
-      if (sentPos != null) DepGraph.depLabels(toks, heads, sentPos)
-      else DepGraph.depLabels(toks, heads)
+    lazy val depLabels: Array[String] = DepGraph.depLabels(heads,
+      if (sentPos != null) sentPos.toArray else DepGraph.sentencePos(toks, pos, lower), lower)
     // labeled-dependency form (`data.py:1106-1118`): odd # of `neg` deps
     lazy val negated: Boolean = DepGraph.isNegatedLabeled(depLabels)
     lazy val mainVerbStems: List[String] =
-      DepGraph.mainVerbs(toks, adj, DepGraph.root(heads)).map(stem(_)).toList
+      DepGraph.mainVerbs(adj, DepGraph.root(heads), pos).map(stem(_)).toList
     // (Int, Int) keys packed into one Long: no tuple, no boxing on lookup
     private def key(a: Int, b: Int): Long = (a.toLong << 32) | (b & 0xffffffffL)
     private val spanCache = scala.collection.mutable.LongMap.empty[Span]
     def span(m: Mention): Span = spanCache.getOrElseUpdate(key(m.begin, m.end), {
       val (first, last) = DepGraph.tokenRange(toks, m.begin, m.end)
-      Span(first, last, DepGraph.entityHead(toks, depth, (first, last)))
+      Span(first, last, DepGraph.entityHead(depth, (first, last), pos))
     })
     private val trees = new Array[Array[Int]](adj.length)
     /** [[DepGraph.shortestPath]] from a to b as an array, read from a's BFS tree. */
@@ -421,23 +439,26 @@ object RelationScoring {
     def linkKey(u: Int, v: Int): Long =
       (math.min(u, v).toLong << 32) | math.max(u, v).toLong
 
-    /** The parse of one sentence: one sentencePos pass shared by heads
-      * AND depLabels, the head assignment, its adjacency and the BFS
-      * depths from its root.
+    /** The parse of one sentence: each token's [[Lexeme]] resolved once in
+      * `vocab`, one sentencePos pass over their POS and lowercase forms
+      * shared by heads AND depLabels, the head assignment, its adjacency
+      * and the BFS depths from its root.
       */
     def of(toks: IndexedSeq[Tok]): SentencePrep = of(toks, new Vocab)
     def of(toks: IndexedSeq[Tok], vocab: Vocab): SentencePrep = {
-      val sp = DepGraph.sentencePos(toks)
-      val hs = DepGraph.heads(toks, sp)
+      val lex = toks.iterator.map(t => vocab.lexeme(t.word)).toArray
+      val lower = lex.map(_.lower)
+      val sp = DepGraph.sentencePos(toks, lex.map(_.pos), lower)
+      val hs = DepGraph.heads(toks, sp, lower)
       val adj = DepGraph.adjacency(toks.length, hs)
       new SentencePrep(toks, hs, adj, DepGraph.depths(adj, DepGraph.root(hs)),
-        sentPos = sp, vocab = vocab)
+        sentPos = ArraySeq.unsafeWrapArray(sp), vocab = vocab, lexemes = lex)
     }
   }
 
   // compact English stopword list (NLTK-core subset) for the BOW
   // generators — self-contained, no external corpus
-  private val stopWords: Set[String] = Set(
+  private[graft] val stopWords: Set[String] = Set(
     "i", "me", "my", "we", "our", "you", "your", "he", "him", "his", "she",
     "her", "it", "its", "they", "them", "their", "what", "which", "who",
     "this", "that", "these", "those", "am", "is", "are", "was", "were",
