@@ -285,6 +285,7 @@ object KgPipeline {
       adj: Array[List[Int]], depth: Array[Int],
       extraLabels: Map[Long, String], delta: Int)
 
+  /** [[combined]] with each token's [[DepGraph.coarsePos]] computed here. */
   def combined(toks1: IndexedSeq[Tok], toks2: IndexedSeq[Tok],
                hs1: Array[Int], hs2: Array[Int]): CombinedCtx =
     combined(toks1, toks2, hs1, hs2, DepGraph.coarsePos(toks1), DepGraph.coarsePos(toks2))

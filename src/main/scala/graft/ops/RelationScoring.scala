@@ -256,12 +256,11 @@ object RelationScoring {
     * sentence yields O(k²) pairs; each value here is computed once.
     *
     * The per-token values are reads of each token's [[Lexeme]] in `vocab`
-    * (one per conversation in the pipeline), resolved once per prep:
-    * [[SentencePrep.of]] resolves them to hand the parser each token's
-    * context-free POS and lowercase form, and `pos`/`lower` keep those
-    * arrays (the POS array also feeds [[DepGraph.mainVerbs]] and
-    * [[DepGraph.entityHead]]). A prep built by the constructor resolves
-    * them on first use.
+    * (one per conversation in the pipeline). [[SentencePrep.of]] resolves
+    * the lexemes once and parses from their POS and lowercase forms; a
+    * prep built by the constructor resolves them on first use. `pos`
+    * (context-free) and `lower` are arrays: [[DepGraph.mainVerbs]],
+    * [[DepGraph.entityHead]] and the labeler read them as such.
     * Each mention's token range and head are resolved once, by [[span]],
     * which needs `toks` offset-ascending (TextOps.segment, combined).
     *
