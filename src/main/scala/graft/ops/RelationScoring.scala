@@ -282,7 +282,6 @@ object RelationScoring {
     /** Each token's [[Lexeme]] in `vocab`. */
     lazy val lex: Array[Lexeme] =
       if (lexemes != null) lexemes else toks.iterator.map(t => vocab.lexeme(t.word)).toArray
-    lazy val wordId: Array[Int] = lex.map(_.id)
     lazy val pos: Array[String] = lex.map(_.pos)
     lazy val lower: Array[String] = lex.map(_.lower)
     def maskedBase(i: Int): String = lex(i).masked
@@ -618,7 +617,7 @@ object RelationScoring {
     // a token's pair-independent name, memoized by word (id first: it may
     // add the prep's words); masked(i) is pair-independent off the spans
     def tokName(p: Prefix, i: Int, s: String): Unit = {
-      val w = prep.wordId(i)
+      val w = prep.lex(i).id
       sink.memoName(p, s, prep.vocab.memo(p), w)
     }
     def maskedName(p: Prefix, i: Int): Unit =
