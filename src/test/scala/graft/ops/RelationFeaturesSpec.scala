@@ -61,6 +61,41 @@ class RelationFeaturesSpec extends SparkSpec {
     assert(h("f_diff_sents_together_count") == 1.0)
   }
 
+  /** Second fixture (case-insensitive tagging; hand-computed goldens):
+    *   turn 0: "merge table and merge Table again. merge table."
+    *     s0 repeats both norms (merge x2; table, Table), s1 holds the
+    *     same norm pair again
+    *   turn 1: "scan stream."  (window-1 cross-turn pairs merge-stream)
+    * doc-level norm counts: merge=3 table=3 scan=1 stream=1;
+    * distinct-sentence co-occurrence: (merge,table)=2 (scan,stream)=1.
+    */
+  private val foldTagger: IndexedSeq[Tok] => Seq[(String, Int, Int)] =
+    toks => toks.flatMap(t => gaz.get(t.word.toLowerCase).map(c => (c, t.begin, t.end)))
+  private val repeatTurns = Seq(
+    turn(0, "merge table and merge Table again. merge table."),
+    turn(1, "scan stream."))
+
+  test("doc-level counts: per mention, per sentence per distinct norm pair") {
+    val cands = KgPipeline.candidateEdges("c0", repeatTurns, cfg, foldTagger,
+      withFeatures = true)
+    def counts(c: KgPipeline.Candidate) = (c.feats("f_entity1_count"),
+      c.feats("f_entity2_count"), c.feats.get("f_diff_sents_together_count"))
+    val byNorms = cands.groupBy(c => (c.m1.norm, c.m2.norm))
+    assert(byNorms.keySet == Set(("merge", "table"), ("merge", "stream"), ("scan", "stream")))
+    // merge-table: 2x2 in t0s0, 2x1 + 1x2 across t0's sentences, 1 in t0s1;
+    // the repeats in t0s0 count once toward the together count
+    assert(byNorms(("merge", "table")).size == 9)
+    assert(byNorms(("merge", "table")).count(_.sameSentence) == 5)
+    byNorms(("merge", "table")).foreach(c => assert(counts(c) == ((3.0, 3.0, Some(2.0))), c))
+    // window-1 cross-turn pairs: doc counts, never together in a sentence
+    assert(byNorms(("merge", "stream")).size == 3)
+    byNorms(("merge", "stream")).foreach { c =>
+      assert(!c.sameSentence && c.turn1 == 0 && c.m2.turn_idx == 1)
+      assert(counts(c) == ((3.0, 1.0, None)), c)
+    }
+    assert(byNorms(("scan", "stream")).map(counts) == Vector((1.0, 1.0, Some(1.0))))
+  }
+
   test("sentence-level counts, token counts, NE counts (goldens)") {
     val f = featsOf(c => c.sameSentence && c.m1.text == "merge" &&
       c.m2.text == "table" && c.m1.turn_idx == 0)
@@ -276,24 +311,39 @@ class RelationFeaturesSpec extends SparkSpec {
 
   test("distributed salted doc counts == fused group-local counts") {
     import spark.implicits._
-    // mentions as the fused pipeline would tag them
-    val mentions = turns.flatMap { t =>
-      graft.nlp.TextOps.segment(t.text, "generic").flatMap { case (si, _, _, toks) =>
-        tagger(toks).map { case (cls, b, e) =>
-          Mention("c0", t.turn_idx, si, cls, b, e,
-            t.text.substring(b, e), 1.0, graft.nlp.TextOps.normKey(t.text.substring(b, e)))
+    // both fixtures as two conversations; mentions as the fused pipeline
+    // tags them, and the fused features of every candidate edge
+    val convs = Seq(("c0", turns, tagger), ("c1", repeatTurns, foldTagger))
+    val mentions = convs.flatMap { case (conv, ts, tag) =>
+      ts.flatMap { t =>
+        graft.nlp.TextOps.segment(t.text, "generic").flatMap { case (si, _, _, toks) =>
+          tag(toks).map { case (cls, b, e) => Mentions.of(conv, t.turn_idx, si, cls, b, e, t.text, 0) }
         }
       }
     }.toDS()
+    val fused = convs.flatMap { case (conv, ts, tag) =>
+      KgPipeline.candidateEdges(conv, ts, cfg, tag, withFeatures = true).map((conv, _))
+    }
     val doc = RelationScoring.docEntityCounts(mentions)
       .as[(String, String, String, Long)].collect()
-      .map(r => ((r._2, r._3), r._4)).toMap
-    assert(doc == Map(("op", "merge") -> 2L, ("op", "scan") -> 1L,
-      ("obj", "table") -> 2L, ("obj", "stream") -> 1L))
+      .map(r => ((r._1, r._2, r._3), r._4.toDouble)).toMap
+    // the declarative route's class-ordered key ("op" > "obj")
     val pairs = RelationScoring.pairSentenceCounts(mentions, "op", "obj")
       .as[(String, String, Long)].collect()
-      .map(r => (r._2, r._3)).toMap
-    assert(pairs == Map("table|merge" -> 1L, "stream|merge" -> 1L,
-      "table|scan" -> 1L))
+      .map(r => ((r._1, r._2), r._3.toDouble)).toMap
+    assert(doc.size == 8 && pairs.size == 5)
+    fused.foreach { case (conv, c) =>
+      assert(c.feats("f_entity1_count") == doc((conv, c.m1.class_id, c.m1.norm)), c)
+      assert(c.feats("f_entity2_count") == doc((conv, c.m2.class_id, c.m2.norm)), c)
+      assert(c.feats.get("f_diff_sents_together_count") ==
+        pairs.get((conv, s"${c.m2.norm}|${c.m1.norm}")), c)
+    }
+    // every declarative count is read by some fused edge
+    val read = fused.flatMap { case (conv, c) =>
+      Seq((conv, c.m1.class_id, c.m1.norm), (conv, c.m2.class_id, c.m2.norm))
+    }.toSet
+    assert(read == doc.keySet)
+    assert(fused.filter(_._2.sameSentence)
+      .map { case (conv, c) => (conv, s"${c.m2.norm}|${c.m1.norm}") }.toSet == pairs.keySet)
   }
 }
