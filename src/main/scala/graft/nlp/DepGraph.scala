@@ -724,10 +724,12 @@ object DepGraph {
     d
   }
 
-  private val negWords = Set("not", "no", "never", "n't", "nor", "neither", "cannot")
+  /** The lowercase negation words: `neg`-labeled in [[depLabels]], counted by [[isNegated]]. */
+  val negWords = Set("not", "no", "never", "n't", "nor", "neither", "cannot")
 
-  /** Negation parity over an arbitrary token subsequence (used for path
-    * middles, where no contiguous parse exists): negated iff the count of
+  /** Negation parity over an arbitrary token subsequence (the rule of
+    * path middles, where no contiguous parse exists; `pathFeatures` counts
+    * over the prep's lowercase forms): negated iff the count of
     * negation tokens is odd. For a full parsed sentence, prefer
     * [[isNegatedLabeled]], which counts `neg`-LABELED dependencies
     * exactly like `Part.is_sentence_negated` (`data.py:1106-1118`) — the

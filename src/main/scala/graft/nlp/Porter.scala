@@ -57,9 +57,11 @@ object Porter {
       else b(i) != 'w' && b(i) != 'x' && b(i) != 'y'
     }
     def ends(s: String): Boolean = {
-      val l = s.length
-      if (l > k + 1) false
-      else (0 until l).forall(i => b(k - l + 1 + i) == s.charAt(i))
+      val from = k + 1 - s.length
+      var i = 0
+      if (from < 0) return false
+      while (i < s.length && b(from + i) == s.charAt(i)) i += 1
+      i == s.length
     }
     def setTo(j: Int, s: String): Unit = {
       // replace suffix ending at k whose stem ends at j with s

@@ -83,6 +83,12 @@ object KgPipeline {
     * turn-window pair generation (+ optional edge features over the
     * combined dependency context). Pure; no Spark.
     *
+    * The doc-level counts (only when features or a score are asked for)
+    * key on the mention's norm (entity2key, `sentence.py:174-180`):
+    * `f_entity{1,2}_count` counts each `(class, norm)` once per mention,
+    * `f_diff_sents_together_count` each `(class-1 norm, class-2 norm)`
+    * once per sentence that holds both.
+    *
     * `skipKey` is consulted BEFORE features/score are computed for a
     * pair: the inference path passes the already-positive-key check —
     * once any occurrence pair of a canonical key scores positive, the
@@ -133,48 +139,26 @@ object KgPipeline {
       }
     }.toVector
 
-    // ---- document-level counts (`relations/new/sentence.py:140-171`) --
-    // conversation == document: group-local, no shuffle. entity2key is
-    // the mention's norm key (first norm id else lowercased text,
-    // `sentence.py:174-180`).
-    val needCtx = withFeatures || scorer.isDefined
-    // class-ordered norm pair key (`edge2key`, `sentence.py:183-191`)
-    def pairKey(n1: String, n2: String): String =
-      if (cfg.class1 < cfg.class2) s"$n1|$n2" else s"$n2|$n1"
-    val docCounts: collection.Map[(String, String), Int] =
-      if (!needCtx) Map.empty
-      else {
-        val m = scala.collection.mutable.HashMap.empty[(String, String), Int]
-        ctxs.foreach(_.mentions.foreach { mm =>
-          val k = (mm.class_id, mm.norm)
-          m.update(k, m.getOrElse(k, 0) + 1)
-        })
-        m
+    // ---- document-level counts (`relations/new/sentence.py:140-191`) --
+    // conversation == document: group-local, one pass. Every SentCtx is a
+    // distinct (turn_idx, sent_idx), so a pair's sentences need no set.
+    val docCounts = scala.collection.mutable.HashMap.empty[(String, String), Int]
+    val together = scala.collection.mutable.HashMap.empty[(String, String), Int]
+    if (withFeatures || scorer.isDefined) ctxs.foreach { c =>
+      c.mentions.foreach { m =>
+        val k = (m.class_id, m.norm)
+        docCounts(k) = docCounts.getOrElse(k, 0) + 1
       }
-    // distinct sentences where a (class1-norm, class2-norm) pair
-    // co-occurs, keyed by pairKey
-    val together: collection.Map[String, Int] =
-      if (!needCtx) Map.empty
-      else {
-        val sents = scala.collection.mutable.HashMap
-          .empty[String, scala.collection.mutable.Set[(Int, Int)]]
-        ctxs.foreach { c =>
-          val n1 = c.side1.map(_._1.norm).distinct
-          val n2 = c.side2.map(_._1.norm).distinct
-          for (a <- n1; b <- n2) {
-            sents.getOrElseUpdate(pairKey(a, b), scala.collection.mutable.Set.empty) +=
-              ((c.turnIdx, c.sentIdx))
-          }
-        }
-        sents.map { case (k, v) => (k, v.size) }
-      }
+      for (a <- c.side1.map(_._1.norm).distinct; b <- c.side2.map(_._1.norm).distinct)
+        together((a, b)) = together.getOrElse((a, b), 0) + 1
+    }
     def edgeCtxOf(m1: Mention, m2: Mention, sentMentions: Seq[Mention])
       : RelationScoring.EdgeCtx =
       RelationScoring.EdgeCtx(
         sentMentions = sentMentions,
         e1DocCount = docCounts.getOrElse((m1.class_id, m1.norm), 0),
         e2DocCount = docCounts.getOrElse((m2.class_id, m2.norm), 0),
-        togetherCount = together.getOrElse(pairKey(m1.norm, m2.norm), 0))
+        togetherCount = together.getOrElse((m1.norm, m2.norm), 0))
 
     val byTurn = ctxs.groupBy(_.turnIdx)
 
@@ -250,8 +234,8 @@ object KgPipeline {
     * are never scored and they never appear in the output. The rows of
     * every other key are exactly those of a call without `decided` — same
     * pair order, same conversation-level counts, same first positive.
-    * The batch path passes none and keeps the plain `out.contains`
-    * check: one hash lookup per pair.
+    * Most skipped pairs hit `out` first; with no `decided` the second
+    * lookup is on an empty set.
     */
   def processConversation(
       convId: String,
@@ -262,8 +246,7 @@ object KgPipeline {
       decided: Set[String] = Set.empty): Vector[TripleRow] = {
 
     val out = scala.collection.mutable.HashMap.empty[String, TripleRow]
-    val skipKey: String => Boolean =
-      if (decided.isEmpty) out.contains else key => decided(key) || out.contains(key)
+    val skipKey: String => Boolean = key => out.contains(key) || decided(key)
     foreachCandidate(convId, turns, cfg, tagger, withFeatures = false, scorer,
       skipKey) { c =>
       if (c.score > 0) {

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import java.sql.Timestamp
+import org.apache.spark.sql.types.StructType
 
 /** Checkpoint-resumable stage boundaries with per-partition lineage —
   * north_rule: "materializing nodes/edges tables back to [the lake] with
@@ -22,11 +22,13 @@ object Stages {
 
   /** Storage seam: parquet now, Iceberg-ready (same call sites). */
   object TableIO {
-    def write(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-      val w = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-    }
+    def write(df: DataFrame, path: String): Unit = df.write.mode("overwrite").parquet(path)
+    /** The table at `path` with the schema stored in its files (inferred). */
     def read(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+    /** [[read]] with `schema`, the one `path` was just written with: no
+      * footer-reading inference job (Spark reads every column nullable). */
+    def readWritten(spark: SparkSession, path: String, schema: StructType): DataFrame =
+      spark.read.schema(schema).parquet(path)
     def exists(spark: SparkSession, path: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -57,16 +59,18 @@ object Stages {
   }
 
   /** Run (or resume-skip) one stage. Returns its output DataFrame,
-    * always read back from storage so downstream stages cut lineage.
+    * always read back from storage so downstream stages cut lineage (a
+    * run stage with the schema it just wrote).
     */
-  def run(spark: SparkSession, root: String, stage: String,
-          partitionBy: Seq[String] = Nil)(f: => DataFrame): (DataFrame, RunReport) = {
+  def run(spark: SparkSession, root: String, stage: String)
+         (f: => DataFrame): (DataFrame, RunReport) = {
     val out = s"$root/$stage"
     if (TableIO.exists(spark, out)) {
       (TableIO.read(spark, out), RunReport(stage, skipped = true, out))
     } else {
       val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long)](s"lineage_$stage")
-      TableIO.write(instrument(f, acc), out, partitionBy)
+      val df = instrument(f, acc)
+      TableIO.write(df, out)
       import scala.jdk.CollectionConverters._
       import spark.implicits._
       val rows = acc.value.asScala.toSeq
@@ -76,7 +80,7 @@ object Stages {
           .withColumn("ts", current_timestamp())
           .write.mode("append").parquet(s"$root/_lineage")
       }
-      (TableIO.read(spark, out), RunReport(stage, skipped = false, out))
+      (TableIO.readWritten(spark, out, df.schema), RunReport(stage, skipped = false, out))
     }
   }
 
@@ -85,8 +89,7 @@ object Stages {
     * broadcast-Viterbi tagging, scored via the fused pipeline under the
     * linear scorer) — each stage resumable. Outputs are deliberately NOT
     * dir-partitioned by conv_id (cardinality ≈ corpus size — a
-    * small-files bomb); at scale pass a coarse derived key (e.g.
-    * date or hash-bucket) through `partitionBy`. Resume covers the
+    * small-files bomb). Resume covers the
     * learned path too: a killed scoring run restarts at `scored`, not at
     * tokenization.
     */

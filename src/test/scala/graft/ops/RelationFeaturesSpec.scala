@@ -86,12 +86,13 @@ class RelationFeaturesSpec extends SparkSpec {
     // the repeats in t0s0 count once toward the together count
     assert(byNorms(("merge", "table")).size == 9)
     assert(byNorms(("merge", "table")).count(_.sameSentence) == 5)
-    byNorms(("merge", "table")).foreach(c => assert(counts(c) == ((3.0, 3.0, Some(2.0))), c))
+    byNorms(("merge", "table")).foreach(c =>
+      assert(counts(c) == ((3.0, 3.0, Some(2.0))), (c.m1, c.m2)))
     // window-1 cross-turn pairs: doc counts, never together in a sentence
     assert(byNorms(("merge", "stream")).size == 3)
     byNorms(("merge", "stream")).foreach { c =>
       assert(!c.sameSentence && c.turn1 == 0 && c.m2.turn_idx == 1)
-      assert(counts(c) == ((3.0, 1.0, None)), c)
+      assert(counts(c) == ((3.0, 1.0, None)), (c.m1, c.m2))
     }
     assert(byNorms(("scan", "stream")).map(counts) == Vector((1.0, 1.0, Some(1.0))))
   }
@@ -333,10 +334,10 @@ class RelationFeaturesSpec extends SparkSpec {
       .map(r => ((r._1, r._2), r._3.toDouble)).toMap
     assert(doc.size == 8 && pairs.size == 5)
     fused.foreach { case (conv, c) =>
-      assert(c.feats("f_entity1_count") == doc((conv, c.m1.class_id, c.m1.norm)), c)
-      assert(c.feats("f_entity2_count") == doc((conv, c.m2.class_id, c.m2.norm)), c)
+      assert(c.feats("f_entity1_count") == doc((conv, c.m1.class_id, c.m1.norm)), (c.m1, c.m2))
+      assert(c.feats("f_entity2_count") == doc((conv, c.m2.class_id, c.m2.norm)), (c.m1, c.m2))
       assert(c.feats.get("f_diff_sents_together_count") ==
-        pairs.get((conv, s"${c.m2.norm}|${c.m1.norm}")), c)
+        pairs.get((conv, s"${c.m2.norm}|${c.m1.norm}")), (c.m1, c.m2))
     }
     // every declarative count is read by some fused edge
     val read = fused.flatMap { case (conv, c) =>
