@@ -9,6 +9,22 @@ package graft.nlp
   */
 object Porter {
 
+  // the suffix rule tables of steps 2-4, tried in order
+  private val step2: Seq[(String, String)] = Seq(
+    "ational" -> "ate", "tional" -> "tion", "enci" -> "ence",
+    "anci" -> "ance", "izer" -> "ize", "abli" -> "able",
+    "alli" -> "al", "entli" -> "ent", "eli" -> "e", "ousli" -> "ous",
+    "ization" -> "ize", "ation" -> "ate", "ator" -> "ate",
+    "alism" -> "al", "iveness" -> "ive", "fulness" -> "ful",
+    "ousness" -> "ous", "aliti" -> "al", "iviti" -> "ive",
+    "biliti" -> "ble")
+  private val step3: Seq[(String, String)] = Seq(
+    "icate" -> "ic", "ative" -> "", "alize" -> "al", "iciti" -> "ic",
+    "ical" -> "ic", "ful" -> "", "ness" -> "")
+  private val step4 = Seq("al", "ance", "ence", "er", "ic", "able", "ible", "ant",
+    "ement", "ment", "ent", "ion", "ou", "ism", "ate", "iti", "ous",
+    "ive", "ize")
+
   def stem(input: String): String = {
     val w = input.toLowerCase
     if (w.length <= 2) return w
@@ -94,28 +110,14 @@ object Porter {
     if (ends("y") && hasVowel(k - 1)) setTo(k - 1, "i")
 
     // Step 2
-    val step2: Seq[(String, String)] = Seq(
-      "ational" -> "ate", "tional" -> "tion", "enci" -> "ence",
-      "anci" -> "ance", "izer" -> "ize", "abli" -> "able",
-      "alli" -> "al", "entli" -> "ent", "eli" -> "e", "ousli" -> "ous",
-      "ization" -> "ize", "ation" -> "ate", "ator" -> "ate",
-      "alism" -> "al", "iveness" -> "ive", "fulness" -> "ful",
-      "ousness" -> "ous", "aliti" -> "al", "iviti" -> "ive",
-      "biliti" -> "ble")
     step2.collectFirst { case (suf, rep) if ends(suf) => (suf, rep) }
       .foreach { case (suf, rep) => r(k - suf.length, rep) }
 
     // Step 3
-    val step3: Seq[(String, String)] = Seq(
-      "icate" -> "ic", "ative" -> "", "alize" -> "al", "iciti" -> "ic",
-      "ical" -> "ic", "ful" -> "", "ness" -> "")
     step3.collectFirst { case (suf, rep) if ends(suf) => (suf, rep) }
       .foreach { case (suf, rep) => r(k - suf.length, rep) }
 
     // Step 4
-    val step4 = Seq("al", "ance", "ence", "er", "ic", "able", "ible", "ant",
-      "ement", "ment", "ent", "ion", "ou", "ism", "ate", "iti", "ous",
-      "ive", "ize")
     step4.collectFirst { case suf if ends(suf) => suf }.foreach { suf =>
       val stemEnd = k - suf.length
       val ok =
