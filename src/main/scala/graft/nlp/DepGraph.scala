@@ -724,20 +724,20 @@ object DepGraph {
     d
   }
 
-  /** The lowercase negation words: `neg`-labeled in [[depLabels]], counted by [[isNegated]]. */
-  val negWords = Set("not", "no", "never", "n't", "nor", "neither", "cannot")
+  private val negWords = Set("not", "no", "never", "n't", "nor", "neither", "cannot")
 
-  /** Negation parity over an arbitrary token subsequence (the rule of
-    * path middles, where no contiguous parse exists; `pathFeatures` counts
-    * over the prep's lowercase forms): negated iff the count of
+  /** Negation parity over an arbitrary token subsequence (used for path
+    * middles, where no contiguous parse exists): negated iff the count of
     * negation tokens is odd. For a full parsed sentence, prefer
     * [[isNegatedLabeled]], which counts `neg`-LABELED dependencies
     * exactly like `Part.is_sentence_negated` (`data.py:1106-1118`) — the
     * two agree whenever no negation token is the sentence root, since
     * [[depLabels]] labels every non-root negation token "neg".
     */
-  def isNegated(toks: IndexedSeq[Tok]): Boolean =
-    toks.count(t => negWords.contains(t.word.toLowerCase)) % 2 == 1
+  def isNegated(toks: IndexedSeq[Tok]): Boolean = isNegatedLower(toks.iterator.map(_.word.toLowerCase))
+
+  /** [[isNegated]] over words already lowercased. */
+  def isNegatedLower(words: Iterator[String]): Boolean = words.count(negWords.contains) % 2 == 1
 
   /** `Part.is_sentence_negated` (`data.py:1106-1118`): odd number of
     * dependencies labeled `neg`.

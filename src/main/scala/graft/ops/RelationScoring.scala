@@ -822,12 +822,11 @@ object RelationScoring {
       }
       tokenNGrams(names.bow, bowR)
       tokenNGrams(names.pos, posR)
-      // counts + negation parity (DepGraph.isNegated's rule, over the
-      // prep's lowercase forms) over the middle tokens
+      // counts + negation over the middle tokens
       val middle = path.slice(1, last)
       add(names.tokensCount, middle.length.toDouble)
       add(names.tokensCountNoPunct, middle.count(i => prep.pos(i) != "PUNCT").toDouble)
-      if (middle.count(i => DepGraph.negWords.contains(prep.lower(i))) % 2 == 1)
+      if (DepGraph.isNegatedLower(middle.iterator.map(prep.lower(_))))
         add(names.isNegated)
       if (withEdges) {
         // edge n-grams over source+middle steps (PathNode.edge_type)
