@@ -287,20 +287,20 @@ object Crf {
   /** A labeled training sentence as a Dataset row. */
   final case class TaggedSentence(feats: Seq[Seq[String]], labels: Seq[String])
 
-  /** Serializable partition-model snapshot for the mixing reduce. */
+  /** Serializable partition-model snapshot for the mixing average. */
   final case class PartCrf(emKeys: Seq[String], emVals: Seq[Seq[Double]],
                            trans: Seq[Seq[Double]], start: Seq[Double],
                            stop: Seq[Double])
 
-  /** DISTRIBUTED CRF training via iterative parameter mixing (McDonald,
-    * Hall & Mann 2010 — the algorithm was introduced for exactly this
-    * model class, the structured perceptron): each round broadcasts the
-    * mixed model, every partition runs warm-started local averaged-
-    * perceptron epochs on its shard, and the partition models are
-    * averaged. Only nPartitions × |model| floats move per round — the
-    * sentences never leave their partitions. The label vocabulary is
-    * computed globally first (it is tiny). Driver-local [[train]]
-    * remains the sample-scale default like the reference.
+  /** DISTRIBUTED CRF training via iterative parameter mixing
+    * ([[ParameterMixing]]; McDonald, Hall & Mann 2010 introduced it for
+    * exactly this model class, the structured perceptron): every
+    * partition runs warm-started local averaged-perceptron epochs
+    * ([[trainFrom]]) on its shard, and the partition models are averaged
+    * weight by weight (an emission a partition never saw counts as 0).
+    * The label vocabulary is computed globally first (it is tiny).
+    * Driver-local [[train]] remains the sample-scale default like the
+    * reference.
     */
   def trainDistributed(data: Dataset[TaggedSentence], rounds: Int = 3,
                        epochsPerRound: Int = 3, seed: Long = 2727L): Model = {
@@ -308,44 +308,23 @@ object Crf {
     import spark.implicits._
     val labels = data.flatMap(_.labels).distinct().collect().sorted.toVector
     val L = labels.length
-    var model = Model(labels, Map.empty, Array.ofDim[Double](L, L),
+    val init = Model(labels, Map.empty, Array.ofDim[Double](L, L),
       new Array[Double](L), new Array[Double](L))
-    var r = 0
-    while (r < rounds) {
-      val bc = spark.sparkContext.broadcast(model)
-      val round = r
-      val parts = data.mapPartitions { it =>
-        val local = it
-          .map(ts => (ts.feats.map(_.toList).toIndexedSeq, ts.labels))
-          .toVector
-        if (local.isEmpty) Iterator.empty
-        else {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val m = trainFrom(bc.value, local, epochsPerRound,
-            seed ^ (round.toLong << 20) ^ pid.toLong)
-          val keys = m.emissions.keys.toSeq.sorted
-          Iterator.single(PartCrf(keys, keys.map(k => m.emissions(k).toSeq),
-            m.transitions.map(_.toSeq).toSeq, m.start.toSeq, m.stop.toSeq))
-        }
-      }.collect() // nPartitions × |model|, not the data
-      val n = math.max(1, parts.length)
-      val em = scala.collection.mutable.HashMap.empty[String, Array[Double]]
-      parts.foreach { p =>
-        p.emKeys.iterator.zip(p.emVals.iterator).foreach { case (k, vs) =>
-          val acc = em.getOrElseUpdate(k, new Array[Double](L))
-          var l = 0
-          while (l < L) { acc(l) += vs(l) / n; l += 1 }
-        }
-      }
-      def avg2(get: PartCrf => Seq[Seq[Double]]): Array[Array[Double]] =
-        Array.tabulate(L, L)((a, b) => parts.map(p => get(p)(a)(b)).sum / n)
-      def avg1(get: PartCrf => Seq[Double]): Array[Double] =
-        Array.tabulate(L)(l => parts.map(p => get(p)(l)).sum / n)
-      model = Model(labels, em.toMap, avg2(_.trans), avg1(_.start), avg1(_.stop))
-      bc.destroy()
-      r += 1
+    ParameterMixing.train(data, init, rounds, seed) { (model: Model, rows, s) =>
+      val m = trainFrom(model,
+        rows.map(ts => (ts.feats.map(_.toList).toIndexedSeq, ts.labels)), epochsPerRound, s)
+      val keys = m.emissions.keys.toSeq.sorted
+      PartCrf(keys, keys.map(k => m.emissions(k).toSeq),
+        m.transitions.map(_.toSeq).toSeq, m.start.toSeq, m.stop.toSeq)
+    } { parts =>
+      val n = parts.length
+      def mean(vs: Seq[Seq[Double]]) = ParameterMixing.mean(vs, L, n)
+      val byKey = parts.map(p => p.emKeys.zip(p.emVals).toMap)
+      Model(labels,
+        parts.flatMap(_.emKeys).distinct.map(k => k -> mean(byKey.flatMap(_.get(k)))).toMap,
+        Array.tabulate(L)(a => mean(parts.map(_.trans(a)))),
+        mean(parts.map(_.start)), mean(parts.map(_.stop)))
     }
-    model
   }
 
   /** Hand-constructed model that reproduces exact dictionary tagging:

@@ -170,6 +170,44 @@ object Dedup {
     Array.tabulate(bands)(b => bandBucket(sig, b, rows))
   }
 
+  /** Exact-Jaccard verification of candidate pairs: the (a, b) id pairs
+    * of `cand` join back to `shingles` (doc_id, shingles — the
+    * [[docShingles]] sets) on both sides, each pair pays for its two sets
+    * once, and the pairs whose set Jaccard reaches `threshold` come out
+    * as (a, b, jaccard). The one check of [[minhashLsh]] and
+    * `StreamingKg.minhashDedupStream`.
+    */
+  private[graft] def verifiedPairs(cand: DataFrame, shingles: DataFrame,
+                                   threshold: Double): DataFrame = {
+    import cand.sparkSession.implicits._
+    cand
+      .join(shingles.select(col("doc_id").as("a"), col("shingles").as("sha")), Seq("a"))
+      .join(shingles.select(col("doc_id").as("b"), col("shingles").as("shb")), Seq("b"))
+      .select(col("a"), col("b"), col("sha"), col("shb"))
+      .as[(Long, Long, Array[Long], Array[Long])]
+      .map { case (x, y, sa, sb) =>
+        val inter = sa.toSet.intersect(sb.toSet).size
+        (x, y, inter.toDouble / (sa.length + sb.length - inter))
+      }.toDF("a", "b", "jaccard")
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** 64-bit SimHash of one document: `Hashes.simhash` over its
+    * whitespace-separated words, each word's fnv1a64 with weight 1 — the
+    * per-doc fold of [[simhash]] and `StreamingKg.simhashPairsStream`.
+    */
+  private[graft] def docSimhash(text: String): Long =
+    Hashes.simhash(text.split("\\s+").iterator.filter(_.nonEmpty)
+      .map(w => (Hashes.fnv1a64(w), 1)))
+
+  /** The four block keys of a SimHash: block index `b` in the high word,
+    * the hash's `b`-th 16-bit block in the low 16 bits. Two hashes within
+    * hamming 3 share at least one key (pigeonhole) — the candidate
+    * blocking of [[simhashPairs]] and `StreamingKg.simhashPairsStream`.
+    */
+  private[graft] def simhashBlocks(h: Long): IndexedSeq[Long] =
+    (0 until 4).map(b => b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL))
+
   /** (doc_id, bucket) band rows — and NOTHING else. The bucket packs the
     * band index with a mix64 fold of that band's `rows` signature slots,
     * so equal band slices always collide (a 64-bit bucket collision
@@ -209,17 +247,10 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     require(numPerm % bands == 0)
-    // r6: the minhash signature buckets are computed IN the persisted
-    // pass (same docShingles → docBuckets fold the streaming side
-    // shares — only the caching point moved). Before,
-    // `banded` re-derived minhash from the cache on BOTH bucket-join
-    // sides (the rename defeats ReusedExchange), and the four consumer
-    // map stages (2 band sides + 2 verification sides) launch
-    // concurrently, so on first materialization each raced to compute
-    // the un-populated cache: TimeQuery showed 4 concurrent ~0.6 s
-    // single-task stages all labelled the shingled scan. One row-count
-    // action populates the cache BEFORE any consumer launches —
-    // shingles + signatures are now computed exactly once per run.
+    // shingles and band buckets are computed once, in the persisted
+    // pass; one row-count action fills the cache BEFORE its four consumers
+    // (two band sides, two verification sides) launch concurrently and
+    // each race to compute it (r6)
     val shingled = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val sh = docShingles(text, shingleN)
@@ -234,17 +265,7 @@ object Dedup {
       .join(banded.select(col("doc_id").as("b"), col("bucket")), Seq("bucket"))
       .filter(col("doc_id") < col("b"))
       .select(col("doc_id").as("a"), col("b")).distinct()
-    val pairs = cand
-      .join(shingled.select(col("doc_id").as("a"), col("shingles").as("sha")), Seq("a"))
-      .join(shingled.select(col("doc_id").as("b"), col("shingles").as("shb")), Seq("b"))
-      .select(col("a"), col("b"), col("sha"), col("shb"))
-      .as[(Long, Long, Array[Long], Array[Long])]
-      .map { case (x, y, sa, sb) =>
-        val inter = sa.toSet.intersect(sb.toSet).size
-        (x, y, inter.toDouble / (sa.length + sb.length - inter))
-      }.toDF("a", "b", "jaccard")
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
+    val pairs = verifiedPairs(cand, shingled, threshold).localCheckpoint(true)
     shingled.unpersist(false)
     pairs
   }
@@ -262,20 +283,15 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        val feats = text.split("\\s+").iterator.filter(_.nonEmpty)
-          .map(w => (Hashes.fnv1a64(w), 1))
-        (id, Hashes.simhash(feats))
-      }.toDF("doc_id", "simhash")
+      .map { case (id, text) => (id, docSimhash(text)) }.toDF("doc_id", "simhash")
   }
 
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val sh = simhash(docs).as[(Long, Long)]
-    val blocked = sh.flatMap { case (id, h) =>
-      (0 until 4).map(b => (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h))
-    }.toDF("block", "doc_id", "simhash")
+    val blocked = sh.flatMap { case (id, h) => simhashBlocks(h).map(k => (k, id, h)) }
+      .toDF("block", "doc_id", "simhash")
     val l = blocked.select(col("block"), col("doc_id").as("a"), col("simhash").as("ha"))
     val r = blocked.select(col("block"), col("doc_id").as("b"), col("simhash").as("hb"))
     l.join(r, Seq("block")).filter(col("a") < col("b"))
@@ -384,11 +400,6 @@ object Dedup {
     out
   }
 
-  /** The un-materialized [[duplicationMass]] plan, exposed so the shape
-    * contract (no string column in any exchange) can be pinned on the
-    * real exchanges — the public method's localCheckpoint hides them.
-    * Returns (gram index, result) so the caller owns the persist scope.
-    */
   /** (doc_id, hashed n-gram shingle) rows of every document — the ONE
     * shingle-row construction [[decontaminate]] and [[duplicationMass]]
     * share, so their membership semantics can never diverge.
@@ -401,6 +412,11 @@ object Dedup {
       .toDF("doc_id", "sh")
   }
 
+  /** The un-materialized [[duplicationMass]] plan, exposed so the shape
+    * contract (no string column in any exchange) can be pinned on the
+    * real exchanges — the public method's localCheckpoint hides them.
+    * Returns (gram index, result) so the caller owns the persist scope.
+    */
   private[graft] def duplicationMassPlan(docs: DataFrame,
                                          n: Int): (DataFrame, DataFrame) = {
     val grams = shingleRows(docs, n)

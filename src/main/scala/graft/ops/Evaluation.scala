@@ -272,12 +272,18 @@ object Evaluation {
       }.toMap
 
   /** Scalar form: single agg action over [[mentionCountsByDoc]]. */
-  def mentionCounts(gold: DataFrame, pred: DataFrame): Counts = {
-    val r = mentionCountsByDoc(gold, pred)
-      .agg(sum("tp"), sum("fp"), sum("fn"), sum("fp_ov"), sum("fn_ov"))
-      .first()
-    def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    Counts(g(0), g(1), g(2), g(3), g(4))
+  def mentionCounts(gold: DataFrame, pred: DataFrame): Counts =
+    totals(mentionCountsByDoc(gold, pred), "tp", "fp", "fn", "fp_ov", "fn_ov")
+
+  /** The scalar form of a per-doc counts frame: the sums of `cols`, in
+    * [[Counts]] field order, from ONE agg action (separate count() jobs
+    * would each re-execute both inputs); a sum over no rows is 0, and
+    * fields past `cols` are 0.
+    */
+  private def totals(byDoc: DataFrame, cols: String*): Counts = {
+    val r = byDoc.agg(sum(cols.head), cols.tail.map(c => sum(c)): _*).first()
+    val v = cols.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i)).padTo(5, 0L)
+    Counts(v(0), v(1), v(2), v(3), v(4))
   }
 
   /** Document-level relation evaluation
@@ -287,14 +293,8 @@ object Evaluation {
     * predicted keys with no gold match, fn gold keys with no prediction.
     * Inputs: DataFrames with (conv_id, key).
     */
-  def relationCounts(gold: DataFrame, pred: DataFrame): Counts = {
-    // single agg action over the per-doc distributed form (the three
-    // separate count() jobs would each re-execute both inputs)
-    val r = relationCountsByDoc(gold, pred)
-      .agg(sum("tp"), sum("fp"), sum("fn")).first()
-    def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    Counts(g(0), g(1), g(2), 0, 0)
-  }
+  def relationCounts(gold: DataFrame, pred: DataFrame): Counts =
+    totals(relationCountsByDoc(gold, pred), "tp", "fp", "fn")
 
   /** EntityEvaluator (`evaluators.py:500-673`): set-based evaluation over
     * MAPPED entity strings `class|begin,end|normdb|normvalue` with the
@@ -380,12 +380,8 @@ object Evaluation {
   def entityCounts(gold: DataFrame, pred: DataFrame,
                    penalizeUnknown: String = "soft",
                    accept: String = "equality",
-                   normDb: String = "n"): Counts = {
-    val r = entityCountsByDoc(gold, pred, penalizeUnknown, accept, normDb)
-      .agg(sum("tp"), sum("fp"), sum("fn")).first()
-    def g(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    Counts(g(0), g(1), g(2), 0, 0)
-  }
+                   normDb: String = "n"): Counts =
+    totals(entityCountsByDoc(gold, pred, penalizeUnknown, accept, normDb), "tp", "fp", "fn")
 
   /** Bootstrap standard errors over per-document counts —
     * `EvaluationWithStandardError` (`evaluators.py:104-172`): n resamples

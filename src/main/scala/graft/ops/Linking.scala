@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 
@@ -32,19 +32,11 @@ object Linking {
     * countDistinct cannot be salted losslessly, so phase 1 keeps the
     * per-salt conv sets as approx via HLL sketch when exact=false.
     */
-  def nodeStats(mentions: Dataset[Mention], salts: Int = 16): DataFrame = {
-    import mentions.sparkSession.implicits._
-    val salted = mentions.toDF()
-      .withColumn("salt", pmod(xxhash64($"conv_id"), lit(salts)))
-    val phase1 = salted
-      .groupBy($"class_id", $"norm", $"salt")
-      .agg(count(lit(1)).as("n_mentions_p"),
-        approx_count_distinct($"conv_id", 0.01).as("n_convs_p"))
-    phase1
-      .groupBy($"class_id", $"norm")
-      .agg(sum($"n_mentions_p").as("n_mentions"),
-        sum($"n_convs_p").as("n_convs"))
-  }
+  def nodeStats(mentions: Dataset[Mention], salts: Int = 16): DataFrame =
+    saltedPhase1(mentions, salts, approx_count_distinct(col("conv_id"), 0.01))
+      .groupBy(col("class_id"), col("norm"))
+      .agg(sum(col("n_mentions_p")).as("n_mentions"),
+        sum(col("n_convs_p")).as("n_convs"))
 
   /** Exact per-key stats (small-cardinality path used by the DuckDB-oracled
     * driver query): the salt still bounds phase-1 reducers; distinct convs
@@ -52,18 +44,23 @@ object Linking {
     * (salt = hash(conv_id) % salts ⇒ each conv lands in exactly one salt
     * bucket, so per-salt distinct counts add up losslessly).
     */
-  def nodeStatsExact(mentions: Dataset[Mention], salts: Int = 16): DataFrame = {
-    import mentions.sparkSession.implicits._
-    val salted = mentions.toDF()
-      .withColumn("salt", pmod(xxhash64($"conv_id"), lit(salts)))
-    salted
-      .groupBy($"class_id", $"norm", $"salt")
-      .agg(count(lit(1)).as("n_mentions_p"),
-        countDistinct($"conv_id").as("n_convs_p"))
-      .groupBy($"class_id", $"norm")
-      .agg(sum($"n_mentions_p").cast("long").as("n_mentions"),
-        sum($"n_convs_p").cast("long").as("n_convs"))
-  }
+  def nodeStatsExact(mentions: Dataset[Mention], salts: Int = 16): DataFrame =
+    saltedPhase1(mentions, salts, countDistinct(col("conv_id")))
+      .groupBy(col("class_id"), col("norm"))
+      .agg(sum(col("n_mentions_p")).cast("long").as("n_mentions"),
+        sum(col("n_convs_p")).cast("long").as("n_convs"))
+
+  /** Phase 1 of both node-stat forms: per (class_id, norm, salt) bucket,
+    * with salt = pmod(xxhash64(conv_id), salts), the mention count
+    * `n_mentions_p` and the distinct-conversation count `n_convs_p` that
+    * `convs` computes.
+    */
+  private def saltedPhase1(mentions: Dataset[Mention], salts: Int,
+                           convs: Column): DataFrame =
+    mentions.toDF()
+      .withColumn("salt", pmod(xxhash64(col("conv_id")), lit(salts)))
+      .groupBy(col("class_id"), col("norm"), col("salt"))
+      .agg(count(lit(1)).as("n_mentions_p"), convs.as("n_convs_p"))
 
   /** Abbreviation/synonym candidate pairs from the `y (x)` pattern —
     * `relations/new/sentence.py:194-216`: a surface form immediately

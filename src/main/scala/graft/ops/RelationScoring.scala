@@ -981,49 +981,30 @@ object RelationScoring {
   /** A hashed training example as a Dataset row (arrays encode natively). */
   final case class TrainRow(idx: Array[Int], value: Array[Double], label: Int)
 
-  /** DISTRIBUTED training via iterative parameter mixing (McDonald,
-    * Hall & Mann 2010 — public algorithm): each round broadcasts the
-    * current model, every partition runs local Pegasos epochs over its
-    * shard (warm-started, per-partition-seeded shuffles), and the
-    * partition models are averaged into the next round's model with a
-    * single typed reduce (no collect of the data; only nPartitions ×
-    * |w| floats move). The driver-local [[train]] remains the default at
-    * sample scale (the reference trains single-node, `sklsvm.py:44-55`);
-    * this is the path when the edge set itself is cluster-sized.
+  /** DISTRIBUTED training via iterative parameter mixing
+    * ([[ParameterMixing]]; McDonald, Hall & Mann 2010): every partition
+    * runs warm-started local Pegasos epochs ([[trainFrom]]) over its
+    * shard, and the partition models are averaged into the next round's
+    * model (no collect of the data; only nPartitions × |w| floats move).
+    * Empty input returns the zero model. The driver-local [[train]]
+    * remains the default at sample scale (the reference trains
+    * single-node, `sklsvm.py:44-55`); this is the path when the edge set
+    * itself is cluster-sized.
     */
   def trainDistributed(data: Dataset[TrainRow], rounds: Int = 3,
                        epochsPerRound: Int = 3, lambda: Double = 1e-4,
                        seed: Long = 2727L): LinearModel = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    var model = LinearModel(new Array[Double](Dims), 0.0)
-    // empty input: return the zero model instead of letting the typed
-    // reduce below throw "empty collection" (mirrors Crf.trainDistributed)
-    if (data.isEmpty) return model
-    var r = 0
-    while (r < rounds) {
-      val bc = spark.sparkContext.broadcast(model)
-      val round = r
-      val (sumW, sumB, nParts) = data.mapPartitions { it =>
-        val local = it.map(tr => (Feats(tr.idx, tr.value), tr.label)).toVector
-        if (local.isEmpty) Iterator.empty
-        else {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          val m = trainFrom(bc.value, local, epochsPerRound, lambda,
-            seed ^ (round.toLong << 20) ^ pid.toLong)
-          Iterator.single((m.w, m.b, 1))
-        }
-      }.reduce { (a, b) =>
-        val w = new Array[Double](Dims)
-        var i = 0
-        while (i < Dims) { w(i) = a._1(i) + b._1(i); i += 1 }
-        (w, a._2 + b._2, a._3 + b._3)
-      }
-      model = LinearModel(sumW.map(_ / nParts), sumB / nParts)
-      bc.destroy()
-      r += 1
+    import data.sparkSession.implicits._
+    ParameterMixing.train(data, LinearModel(new Array[Double](Dims), 0.0), rounds, seed) {
+      (model: LinearModel, rows, s) =>
+        val m = trainFrom(model, rows.map(tr => (Feats(tr.idx, tr.value), tr.label)),
+          epochsPerRound, lambda, s)
+        (m.w, m.b)
+    } { parts =>
+      val n = parts.length
+      LinearModel(ParameterMixing.mean(parts.map(p => ArraySeq.unsafeWrapArray(p._1)), Dims, n),
+        ParameterMixing.mean(parts.map(p => Seq(p._2)), 1, n)(0))
     }
-    model
   }
 
   def hashFeats(m: Map[String, Double]): Feats = {

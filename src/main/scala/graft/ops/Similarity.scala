@@ -34,14 +34,6 @@ object Similarity extends Serializable {
         org.apache.spark.sql.GraftColumnBridge.expression(a),
         org.apache.spark.sql.GraftColumnBridge.expression(b)))
 
-  private def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  private def norm(a: org.apache.spark.sql.Column) =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
-
   /** Top-k cosine neighbors for each query vector (query set = rows of
     * `queries`, broadcast), self-matches excluded, ties broken by
     * neighbor id for determinism.
@@ -49,15 +41,38 @@ object Similarity extends Serializable {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qe")))
-    val scored = corpus.select(col("vec_id").as("neighbor_id"), col("embedding"))
+    topK(corpus.select(col("vec_id").as("neighbor_id"), col("embedding"))
       .join(q, col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("qe"), col("embedding")))
+      .withColumn("sim", cosine(col("qe"), col("embedding"))), k)
+  }
+
+  /** The top-k tail of every search here: each query's scored neighbors
+    * ranked by (sim desc, neighbor_id), the first `k` kept, sim rounded
+    * HALF_UP to 6 decimals (Spark's and DuckDB's round() agree).
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("sim"), 6).as("sim"))
+  }
+
+  /** Exact cosine re-rank of the approximate searches ([[ivfTopK]],
+    * [[lshTopK]]): `collisions` holds (query_id, neighbor_id) rows that
+    * met in some cell or bucket; self-matches and repeats are dropped,
+    * both ids join back to their vectors (queries broadcast), and
+    * [[topK]] keeps each query's best `k`.
+    */
+  private def reRank(collisions: DataFrame, corpus: DataFrame,
+                     queries: DataFrame, k: Int): DataFrame = {
+    val cand = collisions.filter(col("query_id") =!= col("neighbor_id"))
+      .select("query_id", "neighbor_id").distinct()
+    val qe = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("qe")))
+    val ce = corpus.select(col("vec_id").as("neighbor_id"), col("embedding"))
+    topK(cand.join(qe, Seq("query_id")).join(ce, Seq("neighbor_id"))
+      .withColumn("sim", cosine(col("qe"), col("embedding"))), k)
   }
 
   /** HALF_UP 6-decimal rounding — matches round() in both Spark SQL and
@@ -221,16 +236,20 @@ object Similarity extends Serializable {
     val dims = sample.head.length
     // Lloyd's iterations, cosine assignment, deterministic ties/init
     var centroids = Array.tabulate(cells0)(i => sample(i).map(_.toDouble))
-    def assign(e: Array[Float], cs: Array[Array[Double]]): Int = {
-      var best = 0; var bestSim = Double.NegativeInfinity
+    // cosine of `e` to each centroid (-2 against a zero vector): the one
+    // arithmetic of the cell assignment and of the query probes
+    def centroidSims(e: Array[Float], cs: Array[Array[Double]]): Array[Double] = {
       val ne = math.sqrt(dotD(e, e))
-      var c = 0
-      while (c < cs.length) {
+      Array.tabulate(cs.length) { c =>
         var d = 0.0; var nc = 0.0; var i = 0
         while (i < dims) { d += cs(c)(i) * e(i); nc += cs(c)(i) * cs(c)(i); i += 1 }
-        val sim = if (nc == 0 || ne == 0) -2.0 else d / (math.sqrt(nc) * ne)
+        if (nc == 0 || ne == 0) -2.0 else d / (math.sqrt(nc) * ne)
+      }
+    }
+    def assign(e: Array[Float], cs: Array[Array[Double]]): Int = {
+      var best = 0; var bestSim = Double.NegativeInfinity
+      centroidSims(e, cs).iterator.zipWithIndex.foreach { case (sim, c) =>
         if (sim > bestSim) { bestSim = sim; best = c }
-        c += 1
       }
       best
     }
@@ -282,29 +301,10 @@ object Similarity extends Serializable {
     val qProbes = queries.select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])]
       .flatMap { case (id, e) =>
-        val cs = bc.value
-        val ne = math.sqrt(dotD(e, e))
-        val sims = Array.tabulate(cs.length) { c =>
-          var d = 0.0; var nc = 0.0; var i = 0
-          while (i < dims) { d += cs(c)(i) * e(i); nc += cs(c)(i) * cs(c)(i); i += 1 }
-          (if (nc == 0 || ne == 0) -2.0 else d / (math.sqrt(nc) * ne), c)
-        }
-        sims.sortBy { case (s, c) => (-s, c) }.take(math.min(nProbe, cs.length))
-          .map { case (_, c) => (id, c) }
+        centroidSims(e, bc.value).zipWithIndex.sortBy { case (s, c) => (-s, c) }
+          .take(nProbe).map { case (_, c) => (id, c) }
       }.toDF("query_id", "cell")
-    val cand = qProbes.join(cells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val qe = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("qe")))
-    val ce = corpus.select(col("vec_id").as("neighbor_id"), col("embedding"))
-    val scored = cand.join(qe, Seq("query_id")).join(ce, Seq("neighbor_id"))
-      .withColumn("sim", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
+    reRank(qProbes.join(cells, Seq("cell")), corpus, queries, k)
   }
 
   /** Deterministic pseudo-random hyperplane component for (table, bit,
@@ -315,11 +315,6 @@ object Similarity extends Serializable {
     if (h < 0) -1.0 else 1.0
   }
 
-  /** Random-hyperplane LSH: L tables × nBits sign bits. Returns top-k per
-    * query among bucket-colliding candidates (exact cosine re-rank).
-    * Recall vs brute force is tested; raising L/nBits trades shuffle
-    * volume for recall.
-    */
   /** (id, bucket) rows per LSH table: bucket packs (table, signature).
     * Shared by [[lshTopK]] and [[embeddingNearDupPairsLsh]] so their
     * candidate semantics agree. Hyperplanes derive deterministically from
@@ -352,24 +347,15 @@ object Similarity extends Serializable {
       }.toDF(outIdCol, "bucket")
   }
 
+  /** Random-hyperplane LSH: L tables × nBits sign bits. Returns top-k per
+    * query among bucket-colliding candidates (exact cosine re-rank).
+    * Recall vs brute force is tested; raising L/nBits trades shuffle
+    * volume for recall.
+    */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nBits: Int = 12, tables: Int = 6, seed: Long = 42L): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val cb = bucketize(corpus, "neighbor_id", nBits, tables, seed)
     val qb = bucketize(queries, "query_id", nBits, tables, seed)
-    val cand = qb.join(cb, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val qe = broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("qe")))
-    val ce = corpus.select(col("vec_id").as("neighbor_id"), col("embedding"))
-    val scored = cand.join(qe, Seq("query_id")).join(ce, Seq("neighbor_id"))
-      .withColumn("sim", cosine(col("qe"), col("embedding")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
+    reRank(qb.join(cb, Seq("bucket")), corpus, queries, k)
   }
 }

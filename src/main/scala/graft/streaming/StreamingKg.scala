@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.model.{TripleRow, Turn}
-import graft.ops.{GazetteerTagger, KgPipeline, RelationScoring}
+import graft.ops.{Dedup, GazetteerTagger, KgPipeline, RelationScoring}
 
 /** Structured Streaming surface: incremental KG construction over a
   * growing transcripts table (the reference is batch-only; our
@@ -29,17 +30,26 @@ object StreamingKg {
                     scorer: Option[RelationScoring.LinearModel] = None,
                     availableNow: Boolean = true): StreamingQuery = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[Turn].schema
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val writer = stream.writeStream
+    parquetBatches(spark, inputDir, org.apache.spark.sql.Encoders.product[Turn].schema,
+      checkpointDir, availableNow) { (batch, batchId) =>
+      KgPipeline.triples(batch.as[Turn], cfg, None, gaz, scorer)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outputDir)
+    }
+  }
+
+  /** The file-source stream of both sink operators ([[triplesStream]],
+    * [[minhashDedupStream]]): parquet files arriving under `inputDir`,
+    * read with `schema`, each micro-batch handed to `sink` with its batch
+    * id, progress kept under `checkpointDir`. With `availableNow` the
+    * query processes what is there and stops.
+    */
+  private def parquetBatches(spark: SparkSession, inputDir: String, schema: StructType,
+                             checkpointDir: String, availableNow: Boolean)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = spark.readStream.schema(schema).parquet(inputDir).writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val turns = batch.as[Turn]
-        KgPipeline.triples(turns, cfg, None, gaz, scorer)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outputDir)
-        ()
-      }
+      .foreachBatch(sink)
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
@@ -314,11 +324,8 @@ object StreamingKg {
     import spark.implicits._
     // (block bucket, doc_id, simhash, ts)
     val blocks = docs.flatMap { case (id, text, ts) =>
-      val feats = text.split("\\s+").iterator.filter(_.nonEmpty)
-        .map(w => (graft.nlp.Hashes.fnv1a64(w), 1))
-      val h = graft.nlp.Hashes.simhash(feats)
-      (0 until 4).map(b =>
-        (b.toLong << 32 | ((h >>> (b * 16)) & 0xffffL), id, h, ts))
+      val h = Dedup.docSimhash(text)
+      Dedup.simhashBlocks(h).map(k => (k, id, h, ts))
     }
     evicting(watermarked(blocks, "_4", timeout, watermarkDelay)
       .groupByKey(_._1), timeout, idleMs)(
@@ -397,8 +404,8 @@ object StreamingKg {
     import spark.implicits._
     // (band bucket, doc_id, ts)
     val banded = docs.flatMap { case (id, text, ts) =>
-      graft.ops.Dedup.docBuckets(graft.ops.Dedup.docShingles(text, shingleN),
-        numPerm, bands).iterator.map(b => (b, id, ts))
+      Dedup.docBuckets(Dedup.docShingles(text, shingleN), numPerm, bands)
+        .iterator.map(b => (b, id, ts))
     }
     evicting(watermarked(banded, "_3", timeout, watermarkDelay)
       .groupByKey(_._1), timeout, idleMs)(
@@ -475,29 +482,20 @@ object StreamingKg {
                          numParts: Int = 64,
                          availableNow: Boolean = true): StreamingQuery = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType)))
+    parquetBatches(spark, inputDir, schema, checkpointDir, availableNow) {
+      (batch, batchId) =>
         val shingled = batch.select(col("doc_id"), col("text"))
           .as[(Long, String)]
-          .map { case (id, text) =>
-            (id, graft.ops.Dedup.docShingles(text, shingleN))
-          }.toDF("doc_id", "shingles")
+          .map { case (id, text) => (id, Dedup.docShingles(text, shingleN)) }
+          .toDF("doc_id", "shingles")
           .persist()
         if (shingled.limit(1).count() > 0) {
           shingled.withColumn("part", storePart(col("doc_id"), numParts))
             .write.mode("overwrite").partitionBy("part")
             .parquet(s"$storeDir/shingles/batch_id=$batchId")
-          val batchBands = graft.ops.Dedup
-            .bandedBuckets(shingled, numPerm, bands)
-            .persist()
+          val batchBands = Dedup.bandedBuckets(shingled, numPerm, bands).persist()
           batchBands.withColumn("part", storePart(col("bucket"), numParts))
             .write.mode("overwrite").partitionBy("part")
             .parquet(s"$storeDir/bands/batch_id=$batchId")
@@ -524,43 +522,23 @@ object StreamingKg {
               // candidate-free batch: still write the (empty) output dir
               // so replays stay idempotent, exactly like the r4 form
               Seq.empty[(Long, Long, Double)].toDF("a", "b", "jaccard")
-            else {
-              val allShingles =
-                readStoreParts(spark, s"$storeDir/shingles", candParts)
-                  .select("doc_id", "shingles")
-              cand
-                .join(allShingles.select(col("doc_id").as("a"),
-                  col("shingles").as("sha")), Seq("a"))
-                .join(allShingles.select(col("doc_id").as("b"),
-                  col("shingles").as("shb")), Seq("b"))
-                .select(col("a"), col("b"), col("sha"), col("shb"))
-                .as[(Long, Long, Array[Long], Array[Long])]
-                .map { case (x, y, sa, sb) =>
-                  val inter = sa.toSet.intersect(sb.toSet).size
-                  (x, y, inter.toDouble / (sa.length + sb.length - inter))
-                }.toDF("a", "b", "jaccard")
-                .filter(col("jaccard") >= threshold)
-            }
+            else Dedup.verifiedPairs(cand,
+              readStoreParts(spark, s"$storeDir/shingles", candParts), threshold)
           verified.write.mode("overwrite")
             .parquet(s"$outputDir/batch_id=$batchId")
           cand.unpersist(false)
           batchBands.unpersist(false)
         }
         shingled.unpersist(false)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    }
   }
 
   /** `part` assignment shared by [[minhashDedupStream]]'s store writers
     * and pruned readers — both sides MUST use the same arithmetic or
     * pruning silently loses rows.
     */
-  private[streaming] def storePart(key: org.apache.spark.sql.Column,
-                                   numParts: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.xxhash64(key),
-      org.apache.spark.sql.functions.lit(numParts.toLong))
+  private[streaming] def storePart(key: Column, numParts: Int): Column =
+    pmod(xxhash64(key), lit(numParts.toLong))
 
   /** Read ONLY the `part=<p>` directories of a batch-versioned store
     * (`root/batch_id=N/part=p`) whose part value is in `parts` —

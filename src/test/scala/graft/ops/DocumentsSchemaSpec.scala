@@ -1,11 +1,8 @@
 package graft.ops
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import scala.util.Try
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import graft.SparkSpec
 
@@ -25,36 +22,6 @@ class DocumentsSchemaSpec extends SparkSpec {
     rows.toDF("doc_id", "text", "lang", "source", "n_chars").coalesce(1)
       .write.parquet(s"$d/documents.parquet")
     d
-  }
-
-  /** Jobs that `body` starts, counted by job group once a later sentinel
-    * job's end shows every earlier event has reached the listener.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"documents-schema-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    var sentinel = -1
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach {
-          case `group` => jobs.incrementAndGet()
-          case g if g == group + "/sentinel" => sentinel = e.jobId
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinel) drained.countDown()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "documents schema guard")
-      body
-      sc.setJobGroup(group + "/sentinel", "documents schema guard")
-      sc.parallelize(Seq(0), 1).count()
-      assert(drained.await(2, TimeUnit.MINUTES), "listener bus did not drain")
-      jobs.get
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
   test("the declared schema is what inference reads; kg_transcripts is equal under both reads") {

@@ -1,9 +1,7 @@
 package graft.ops
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.types.StructType
@@ -17,39 +15,10 @@ import graft.SparkSpec
 class StagesReadBackSpec extends SparkSpec {
 
   /** Jobs that `body` starts outside any SQL execution (no query runs
-    * them: a schema-inferring read does), counted by job group once a
-    * later sentinel job's end shows every earlier event has reached the
-    * listener bus.
+    * them: a schema-inferring read does).
     */
-  private def inferenceJobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"stages-read-back-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    var sentinel = -1
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          p.getProperty("spark.jobGroup.id") match {
-            case `group` if p.getProperty("spark.sql.execution.id") == null =>
-              jobs.incrementAndGet()
-            case g if g == group + "/sentinel" => sentinel = e.jobId
-            case _ =>
-          }
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinel) drained.countDown()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "stages read-back guard")
-      body
-      sc.setJobGroup(group + "/sentinel", "stages read-back guard")
-      sc.parallelize(Seq(0), 1).count()
-      assert(drained.await(2, TimeUnit.MINUTES), "listener bus did not drain")
-      jobs.get
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-  }
+  private def inferenceJobsStartedBy(body: => Unit): Int =
+    jobsStartedBy(body, outsideQueries = true)
 
   test("every materializeAll stage reads back with the schema it wrote, starting no job") {
     val root = Files.createTempDirectory("graft_stages_read_back").toString
