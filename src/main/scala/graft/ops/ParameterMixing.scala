@@ -15,7 +15,7 @@ import org.apache.spark.sql.{Dataset, Encoder}
   * leaves `init` unchanged. Each learner supplies its local step, its
   * snapshot type and its averaging.
   */
-object ParameterMixing {
+private[graft] object ParameterMixing {
 
   def train[T, M: ClassTag, S: Encoder](data: Dataset[T], init: M, rounds: Int,
                                         seed: Long)(
